@@ -132,9 +132,12 @@ class FeatureFarm:
         conversation holds > ~1/n_cores of the rows) costs one cheap
         count-aggregate and means cluster users never hand-tune the
         straggler threshold. Pass an int to pin it, None to disable.
-        ``probe_pushdown=True`` broadcast-semi-joins the corpus down to
-        the probed conversations first (9.5× at 48M turns / 1% probes,
-        BENCH.md §2b2) — set it when probing a small sample."""
+        ``probe_pushdown=True`` reduces the corpus to the probed
+        conversations first (9.5× at 48M turns / 1% probes, BENCH.md
+        §2b2) — set it when probing a small sample. A driver-local probe
+        frame (e.g. ``createDataFrame`` of a pandas frame) becomes a
+        ``conv_id IN (...)`` scan filter at no Spark job; a distributed
+        one is broadcast-semi-joined (``asof.keyset_reduce``)."""
         return backfill_asof_fused(
             transcripts,
             probes,

@@ -25,13 +25,17 @@ Two physical strategies for ``latest``:
   timestamp matches thousands of right rows. This is the 100 TB path: it
   shuffles each input exactly once on the conversation key (the same
   partitioning downstream window features need, so the exchange is reused).
+  The whole plan (union, window, tolerance, output projection) is one SQL
+  statement, so building it costs one parse and one analyzer pass.
 - ``'merge_asof'``: cogrouped ``applyInPandas`` running ``pd.merge_asof``
   per key bucket — Arrow-vectorized; useful when both sides are already
   bucketed by the key and per-key data fits a pandas batch.
 
 Tie semantics (deterministic, oracle-checked): among right rows sharing the
-match timestamp, both directions take the greatest ``tiebreak`` value;
-``nearest`` prefers the backward candidate on equal distance.
+match timestamp, every direction and both strategies take the greatest
+``tiebreak`` value; ``nearest`` prefers the backward candidate on equal
+distance. Keys match as in an SQL equi join: a null key matches nothing,
+and a right row with a null timestamp is never a match.
 
 Zero temporal leakage by construction: a backward match can never read a
 right row with ``ts`` greater than the left timestamp (north_rule).
@@ -39,17 +43,113 @@ right row with ``ts`` greater than the left timestamp (north_rule).
 
 from __future__ import annotations
 
+import re
+import uuid
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+#: interval units a tolerance may name — the ones both Spark's INTERVAL
+#: literal and ``pd.Timedelta`` (merge_asof strategy) accept
+_TOLERANCE = re.compile(
+    r"\s*(\d+)\s+(MICROSECOND|MILLISECOND|SECOND|MINUTE|HOUR|DAY)S?\s*", re.I
+)
+
+#: key type name → the ``org.apache.spark.sql.Encoders`` factory that
+#: collects the key column as plain JVM values for the IN-list
+_KEY_ENCODERS = {
+    "string": "STRING",
+    "long": "LONG",
+    "integer": "INT",
+    "short": "SHORT",
+    "byte": "BYTE",
+    "boolean": "BOOLEAN",
+    "date": "LOCALDATE",
+    "timestamp": "INSTANT",
+    "timestamp_ntz": "LOCALDATETIME",
+}
 
 
 def _tolerance_expr(tolerance: str | None) -> str | None:
-    """Normalize a tolerance spec like '10 days' / '1 hour' to INTERVAL SQL."""
+    """Validate a tolerance spec like '10 days' / '1 HOUR' and return it as
+    an INTERVAL literal. The result is spliced into SQL text, so anything
+    but ``<int> <unit>`` is rejected here rather than surfacing as a parse
+    error deep in plan construction."""
     if tolerance is None:
         return None
-    return f"INTERVAL {tolerance}"
+    m = _TOLERANCE.fullmatch(tolerance) if isinstance(tolerance, str) else None
+    if m is None:
+        raise ValueError(
+            f"tolerance must look like '<int> <unit>' with unit one of "
+            f"MICROSECOND, MILLISECOND, SECOND, MINUTE, HOUR, DAY; got {tolerance!r}"
+        )
+    return f"INTERVAL {m.group(1)} {m.group(2).upper()}"
+
+
+def _ident(name: str) -> str:
+    """Quote a column name for splicing into SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _driver_local(df: DataFrame) -> bool:
+    """True when collecting ``df`` launches no Spark job: it is
+    ``isLocal()`` (e.g. ``createDataFrame`` of a pandas frame) or its
+    optimized plan folds to a ``LocalRelation`` (a projection or filter of
+    such a frame)."""
+    if df.isLocal():
+        return True
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def keyset_reduce(right: DataFrame, left: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Reduce ``right`` to the rows whose key occurs in ``left`` — the
+    data-induced predicate of a key-equi join pushed to the right side's
+    scan. Exact for any operator whose output rows only read right rows of
+    their own key. Two mechanisms:
+
+    - ``left`` driver-local (``_driver_local``) with a single key of a
+      plain type: its key column is collected on the driver — no Spark job,
+      the projection folds into the local relation — and ``right`` is
+      filtered by ONE ``key IN (...)`` expression built JVM-side (not one
+      py4j literal per key). Parquet and DSv2 scans push the predicate
+      down; Catalyst drops duplicate values and evaluates the list as a
+      hash set. A null left key adds a NULL, which matches nothing. The
+      list needs no size bound of its own: it holds at most one literal
+      per row of a relation Spark already embeds in the plan and ships
+      with every task.
+    - otherwise (a distributed ``left``, composite keys): the distinct key
+      set is broadcast and ``right`` is left-semi joined to it, which
+      costs the jobs that compute and broadcast the key set. Leave the
+      reduction off when ``left`` covers most of ``right``'s keys or its
+      key set is too large to broadcast (>~100M keys).
+    """
+    keys = list(keys)
+    enc = None
+    if len(keys) == 1:
+        enc = _KEY_ENCODERS.get(left.schema[keys[0]].dataType.typeName())
+    if enc is None or not _driver_local(left):
+        return right.join(F.broadcast(left.select(*keys).distinct()), keys, "left_semi")
+    encoder = getattr(left.sparkSession._jvm.Encoders, enc)()
+    typed = getattr(F.col(keys[0])._jc, "as")(encoder)
+    values = left._jdf.select(typed).collectAsList()
+    return right.filter(Column(F.col(keys[0])._jc.isInCollection(values)))
+
+
+def _sql(text: str, views: dict[str, DataFrame]) -> DataFrame:
+    """Run ONE SQL statement over DataFrames registered under throwaway
+    temp-view names (what ``spark.sql(text, name=df)`` does, without its
+    ``str.format`` pass, so braces in column names need no escaping).
+    ``spark.sql`` analyzes eagerly, so the views can go right after."""
+    spark = next(iter(views.values())).sparkSession
+    try:
+        for name, df in views.items():
+            df.createOrReplaceTempView(name)
+        return spark.sql(text)
+    finally:
+        for name in views:
+            spark.catalog.dropTempView(name)
 
 
 def asof_join(
@@ -73,8 +173,9 @@ def asof_join(
         left_ts / right_ts: event-time columns (both inclusive at equality —
             reference keeps ``ts_fv == ts_e``, api.py:551 strict ``<``).
         direction: 'backward' | 'forward' | 'nearest' (latest mode only).
-        tolerance: max distance, e.g. ``'10 days'`` (reference freshness
-            default, api.py:518) or ``'1 hour'``; None = unbounded.
+        tolerance: max distance as ``'<int> <unit>'``, e.g. ``'10 days'``
+            (reference freshness default, api.py:518) or ``'1 hour'``;
+            None = unbounded. Anything else raises ``ValueError``.
         mode: 'latest' (one best match, left rows preserved — left outer)
             or 'all_in_window' (reference interval-join parity — inner).
         right_cols: right payload columns to carry (default: all non-key,
@@ -82,17 +183,22 @@ def asof_join(
             as ``matched_ts``.
         tiebreak: right column ordering equal-ts matches (e.g. 'turn_idx').
         strategy: 'union_window' | 'merge_asof' (latest mode only).
-        probe_pushdown: broadcast the left frame's distinct key set and
-            left-semi reduce the right side BEFORE the join/window
-            shuffle. Exactness-preserving for every mode/direction (an
-            as-of match shares the probe's key by definition). Set it
-            when the left frame touches a small fraction of the right
-            side's keys — see backfill.backfill_asof_fused for the
-            measured 9.5× and the when-not-to note.
+        probe_pushdown: reduce the right side to the left frame's key set
+            BEFORE the join/window shuffle (``keyset_reduce``).
+            Exactness-preserving for every mode/direction (an as-of match
+            shares the probe's key by definition). A driver-local left
+            frame with a single key (the usual small entity frame) becomes
+            a ``key IN (...)`` filter on the right scan at no Spark job;
+            any other left frame broadcasts its distinct key set into a
+            left-semi join, which costs two jobs. Set it when the left
+            frame touches a small fraction of the right side's keys — see
+            backfill.backfill_asof_fused for the measured 9.5× and the
+            when-not-to note.
     """
     keys = [on] if isinstance(on, str) else list(on)
+    _tolerance_expr(tolerance)  # validate before any plan is built
     if probe_pushdown:
-        right = right.join(F.broadcast(left.select(*keys).distinct()), keys, "left_semi")
+        right = keyset_reduce(right, left, keys)
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in keys and c != right_ts]
     right_cols = list(right_cols)
@@ -104,16 +210,13 @@ def asof_join(
 
     if strategy == "merge_asof":
         return _merge_asof_strategy(
-            left, right, keys, left_ts, right_ts, direction, tolerance, right_cols
+            left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak
         )
     if strategy != "union_window":
         raise ValueError(f"unknown strategy: {strategy!r}")
-
-    if direction == "nearest":
-        return _union_window_nearest(
-            left, right, keys, left_ts, right_ts, tolerance, right_cols, tiebreak
-        )
-    return _union_window(left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak)
+    return _union_window(
+        left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -151,145 +254,80 @@ def _interval_join(left, right, keys, left_ts, right_ts, tolerance, right_cols):
 
 
 def _union_window(left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak):
-    # selectExpr: the whole projection crosses py4j once and parses
-    # JVM-side — the per-column Column form cost hundreds of round-trips
-    # per query construction (guide §1: the profile showed construction,
-    # not executors). Identical Catalyst expressions.
-    ltypes = {c: left.schema[c].dataType.simpleString() for c in left.columns}
-    payload_sql = "struct(`" + right_ts + "` AS matched_ts" + "".join(
-        f", `{c}`" for c in right_cols
-    ) + ")"
-    r_side = right.selectExpr(
-        *[f"`{k}`" for k in keys],
-        f"`{right_ts}` AS __ts",
-        "0 AS __side",
-        (f"CAST(`{tiebreak}` AS BIGINT) AS __tb" if tiebreak else "CAST(0 AS BIGINT) AS __tb"),
-        f"{payload_sql} AS __payload",
-        *[f"CAST(NULL AS {ltypes[c]}) AS `__l_{c}`" for c in left.columns],
-    )
-    ptype = r_side.schema["__payload"].dataType.simpleString()
-    l_side = left.selectExpr(
-        *[f"`{k}`" for k in keys],
-        f"`{left_ts}` AS __ts",
-        "1 AS __side",
-        "CAST(NULL AS BIGINT) AS __tb",
-        f"CAST(NULL AS {ptype}) AS __payload",
-        *[f"`{c}` AS `__l_{c}`" for c in left.columns],
-    )
-    u = r_side.unionByName(l_side)
+    """Tag both sides, union, and carry the last right payload over an
+    ordered window per key — built as ONE SQL statement (one parse, one
+    analyzer pass, a handful of py4j calls however many columns there are).
 
-    if direction == "backward":
-        # rows ordered by time; at equal ts right rows (side 0) precede the
-        # left row so the inclusive match is picked; among equal-ts right
-        # rows the LAST seen (max tiebreak) wins.
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col("__ts").asc(), F.col("__side").asc(), F.col("__tb").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-    elif direction == "forward":
-        # reverse traversal; max tiebreak wins among equal-ts right rows
-        # (same tie rule as backward → oracle ORDER BY ts ASC, tb DESC).
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col("__ts").desc(), F.col("__side").asc(), F.col("__tb").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-    else:
+    At equal ts the right rows (side 0) sort before the left row, so the
+    inclusive match is visible to it; among equal-ts right rows the last
+    seen — the max tiebreak — wins. Forward runs the same carry over a
+    ts-descending traversal. ``nearest`` computes both carries over the
+    same exchange (the hash partitioning is shared, only the intra-
+    partition sort runs twice) and keeps the closer match, backward on
+    equal distance. The left columns travel as ``__l_<name>`` copies, and
+    the right side's NULLs for them take their types from the union's
+    type widening, so no schema round trip is needed."""
+    if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unknown direction: {direction!r}")
-
-    carried = u.withColumn("__match", F.last("__payload", ignorenulls=True).over(w))
-    out = carried.filter(F.col("__side") == 1)
-
-    match = "__match"
-    if tolerance is not None:
-        tol = _tolerance_expr(tolerance)
-        if direction == "backward":
-            in_tol = f"__match.matched_ts >= __ts - {tol}"
-        else:
-            in_tol = f"__match.matched_ts <= __ts + {tol}"
-        match = f"(CASE WHEN {in_tol} THEN __match END)"
-
-    return out.selectExpr(
-        *[f"`__l_{c}` AS `{c}`" for c in left.columns],
-        f"{match}.matched_ts AS matched_ts",
-        *[f"{match}.`{c}` AS `{c}`" for c in right_cols],
+    lv, rv = (f"__asof_{side}_{uuid.uuid4().hex}" for side in "lr")
+    ks = ", ".join(map(_ident, keys))
+    lcopies = [_ident(f"__l_{c}") for c in left.columns]
+    tb = f"CAST({_ident(tiebreak)} AS BIGINT)" if tiebreak else "CAST(0 AS BIGINT)"
+    payload = ", ".join([f"{_ident(right_ts)} AS matched_ts", *map(_ident, right_cols)])
+    present = " AND ".join(f"{_ident(c)} IS NOT NULL" for c in (*keys, right_ts))
+    union = (
+        f"SELECT {ks}, {_ident(right_ts)} AS __ts, 0 AS __side, {tb} AS __tb, "
+        f"struct({payload}) AS __payload, "
+        + ", ".join(f"NULL AS {c}" for c in lcopies)
+        + f" FROM {rv} WHERE {present}"
+        f" UNION ALL SELECT {ks}, {_ident(left_ts)}, 1, NULL, NULL, "
+        + ", ".join(map(_ident, left.columns))
+        + f" FROM {lv}"
     )
 
+    def carry(order: str, name: str) -> str:
+        return (
+            f"last(__payload, true) OVER (PARTITION BY {ks} ORDER BY __ts {order}, "
+            f"__side, __tb ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS {name}"
+        )
 
-def _union_window_nearest(left, right, keys, left_ts, right_ts, tolerance, right_cols, tiebreak):
-    """direction='nearest' in ONE shuffle: both sides union once, the
-    backward match (last payload over ts-asc traversal) and the forward
-    match (last payload over ts-desc traversal) are computed as two window
-    columns over the same exchange — the hash partitioning on the key is
-    shared, only the intra-partition sort runs twice. Replaces the old
-    two-union + rejoin plan (3 exchanges → 1).
+    carries = {
+        "backward": [carry("ASC", "__b")],
+        "forward": [carry("DESC", "__f")],
+        "nearest": [carry("ASC", "__b"), carry("DESC", "__f")],
+    }[direction]
+    probes = f"SELECT * FROM (SELECT *, {', '.join(carries)} FROM ({union})) WHERE __side = 1"
 
-    Closer match wins; backward preferred on equal distance
-    (deterministic, oracle-checked)."""
-    payload = F.struct(
-        F.col(right_ts).alias("matched_ts"), *[F.col(c) for c in right_cols]
-    )
-    r_side = right.select(
-        *keys,
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__side"),
-        (F.col(tiebreak) if tiebreak else F.lit(0)).cast("long").alias("__tb"),
-        payload.alias("__payload"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(f"__l_{c}") for c in left.columns],
-    )
-    l_side = left.select(
-        *keys,
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__side"),
-        F.lit(None).cast("long").alias("__tb"),
-        F.lit(None).cast(r_side.schema["__payload"].dataType).alias("__payload"),
-        *[F.col(c).alias(f"__l_{c}") for c in left.columns],
-    )
-    u = r_side.unionByName(l_side)
+    # the tolerance CASE is evaluated once per row in its own projection;
+    # every output column then reads a field of its result
+    tol = _tolerance_expr(tolerance)
+    back = f"CASE WHEN __b.matched_ts >= __ts - {tol} THEN __b END" if tol else "__b"
+    fwd = f"CASE WHEN __f.matched_ts <= __ts + {tol} THEN __f END" if tol else "__f"
+    lsel = ", ".join(lcopies)
+    if direction == "backward":
+        matched = f"SELECT {lsel}, {back} AS __m FROM ({probes})"
+    elif direction == "forward":
+        matched = f"SELECT {lsel}, {fwd} AS __m FROM ({probes})"
+    else:
+        # timestamp_ntz cannot cast straight to double in Spark 4; route
+        # via ltz (session TZ pinned to UTC in session.py — deterministic)
+        def secs(c: str) -> str:
+            return f"CAST(CAST({c} AS TIMESTAMP) AS DOUBLE)"
 
-    # same tie rules as the single-direction paths: at equal ts the right
-    # row is visible to the left row in BOTH traversals (side 0 sorts
-    # first), and among equal-ts rights max tiebreak wins
-    w_back = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__ts").asc(), F.col("__side").asc(), F.col("__tb").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_fwd = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__ts").desc(), F.col("__side").asc(), F.col("__tb").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = u.select(
-        "*",
-        F.last("__payload", ignorenulls=True).over(w_back).alias("__b"),
-        F.last("__payload", ignorenulls=True).over(w_fwd).alias("__f"),
-    )
-    out = carried.filter(F.col("__side") == 1)
+        use_back = (
+            f"__f.matched_ts IS NULL OR (__b.matched_ts IS NOT NULL AND "
+            f"{secs('__ts')} - {secs('__b.matched_ts')} <= "
+            f"{secs('__f.matched_ts')} - {secs('__ts')})"
+        )
+        bounded = f"SELECT __ts, {lsel}, {back} AS __b, {fwd} AS __f FROM ({probes})"
+        matched = f"SELECT {lsel}, CASE WHEN {use_back} THEN __b ELSE __f END AS __m FROM ({bounded})"
 
-    b, f_ = F.col("__b"), F.col("__f")
-    if tolerance is not None:
-        tol = F.expr(_tolerance_expr(tolerance))
-        b = F.when(b["matched_ts"] >= F.col("__ts") - tol, b)
-        f_ = F.when(f_["matched_ts"] <= F.col("__ts") + tol, f_)
-
-    def _secs(c: Column) -> Column:
-        # timestamp_ntz cannot cast straight to double in Spark 4; route via
-        # ltz (session TZ pinned to UTC in session.py — deterministic).
-        return c.cast("timestamp").cast("double")
-
-    bdist = _secs(F.col("__ts")) - _secs(b["matched_ts"])
-    fdist = _secs(f_["matched_ts"]) - _secs(F.col("__ts"))
-    use_back = f_["matched_ts"].isNull() | (
-        b["matched_ts"].isNotNull() & (bdist <= fdist)
+    out = ", ".join(
+        [f"{_ident(f'__l_{c}')} AS {_ident(c)}" for c in left.columns]
+        + ["__m.matched_ts AS matched_ts"]
+        + [f"__m.{_ident(c)} AS {_ident(c)}" for c in right_cols]
     )
-    match = F.when(use_back, b).otherwise(f_)
-    return out.select(
-        *[F.col(f"__l_{c}").alias(c) for c in left.columns],
-        match["matched_ts"].alias("matched_ts"),
-        *[match[c].alias(c) for c in right_cols],
-    )
+    return _sql(f"SELECT {out} FROM ({matched})", {lv: left, rv: right})
 
 
 # ---------------------------------------------------------------------------
@@ -297,19 +335,21 @@ def _union_window_nearest(left, right, keys, left_ts, right_ts, tolerance, right
 # ---------------------------------------------------------------------------
 
 
-def _merge_asof_strategy(left, right, keys, left_ts, right_ts, direction, tolerance, right_cols):
+def _merge_asof_strategy(left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak):
     import pandas as pd  # local import: executors only
 
     out_schema_fields = []
     for c in left.columns:
-        out_schema_fields.append(f"`{c}` {left.schema[c].dataType.simpleString()}")
+        out_schema_fields.append(f"{_ident(c)} {left.schema[c].dataType.simpleString()}")
     out_schema_fields.append("`matched_ts` timestamp")
     for c in right_cols:
-        out_schema_fields.append(f"`{c}` {right.schema[c].dataType.simpleString()}")
+        out_schema_fields.append(f"{_ident(c)} {right.schema[c].dataType.simpleString()}")
     out_schema = ", ".join(out_schema_fields)
 
     tol_td = pd.Timedelta(tolerance) if tolerance is not None else None
     l_cols = list(left.columns)
+    # same matching rule as union_window: null keys / timestamps never match
+    right = right.where(" AND ".join(f"{_ident(c)} IS NOT NULL" for c in (*keys, right_ts)))
 
     def merge(l_pdf: "pd.DataFrame", r_pdf: "pd.DataFrame") -> "pd.DataFrame":
         l_pdf = l_pdf.sort_values(left_ts, kind="mergesort")
@@ -319,6 +359,12 @@ def _merge_asof_strategy(left, right, keys, left_ts, right_ts, direction, tolera
             for c in right_cols:
                 out[c] = None
             return out[l_cols + ["matched_ts"] + list(right_cols)]
+        if tiebreak is not None:
+            # one row per ts, the max tiebreak, so every direction picks it
+            # (pd.merge_asof alone takes an input-order-dependent one)
+            r_pdf = r_pdf.sort_values(
+                [right_ts, tiebreak], kind="mergesort", na_position="first"
+            ).drop_duplicates(right_ts, keep="last")
         r_pdf = r_pdf[[right_ts] + list(right_cols)].sort_values(right_ts, kind="mergesort")
         r_pdf = r_pdf.rename(columns={right_ts: "matched_ts"})
         out = pd.merge_asof(

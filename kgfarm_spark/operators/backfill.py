@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kgfarm_spark.operators.asof import _tolerance_expr
+from kgfarm_spark.operators.asof import _tolerance_expr, keyset_reduce
 
 #: feature columns produced by the fused state pass (defines the output
 #: projection order)
@@ -405,23 +405,25 @@ def backfill_asof_fused(
     rule (engage iff some conversation holds > ~1/n_cores of the rows —
     see ``_auto_hot_threshold``) instead of hand-tuning.
 
-    ``probe_pushdown``: semi-join the transcript side down to the
-    probe frame's conversation set BEFORE the union-window shuffle.
+    ``probe_pushdown``: reduce the transcript side to the probe
+    frame's conversation set BEFORE the union-window shuffle
+    (``asof.keyset_reduce``, the same reduction ``asof_join`` uses).
     Every feature here is conversation-local (all windows partition by
     ``key``), so rows of unprobed conversations can never influence any
-    probe's output — the filter is exactness-preserving (driver
+    probe's output — the reduction is exactness-preserving (driver
     oracle-gated). Turn it on when the probe frame touches a small
     fraction of the corpus (the common backfill-a-sample case): the
-    distinct probe-key set is broadcast, so the corpus side is reduced
-    map-side at the scan — at 10^12 turns with 0.1 percent of conversations
-    probed the window shuffle drops from ~1 PB to ~1 TB, and on
-    Iceberg/DSv2 sources the runtime filter can prune whole files.
-    Leave it off when probes cover most conversations (the semi-join
-    then only adds work) or when the probe key set is too large to
-    broadcast (>~100M keys)."""
+    corpus side is reduced map-side at the scan — at 10^12 turns with
+    0.1 percent of conversations probed the window shuffle drops from
+    ~1 PB to ~1 TB. A driver-local probe frame becomes a ``key IN
+    (...)`` scan filter with no Spark job; a distributed one broadcasts
+    its distinct key set into a left-semi join, and on Iceberg/DSv2
+    sources the runtime filter can prune whole files. Leave it off when
+    probes cover most conversations (the reduction then only adds work)
+    or when a distributed probe key set is too large to broadcast
+    (>~100M keys)."""
     if probe_pushdown:
-        keyset = probes.select(key).distinct()
-        transcripts = transcripts.join(F.broadcast(keyset), key, "left_semi")
+        transcripts = keyset_reduce(transcripts, probes, [key])
     if isinstance(hot_conv_turns, str):
         if hot_conv_turns != "auto":
             raise ValueError(

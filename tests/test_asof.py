@@ -4,6 +4,7 @@ operations/api.py:518-571), tie handling, tolerance, strategies, leakage."""
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -147,18 +148,80 @@ class TestMergeAsofStrategy:
         left, right = tiny
         a = asof_join(left, right, on="conv_id", left_ts="query_ts", right_ts="ts",
                       direction="backward", tolerance="30 MINUTE",
-                      right_cols=["val"], strategy="union_window")
+                      right_cols=["val"], tiebreak="turn_idx", strategy="union_window")
         b = asof_join(left, right, on="conv_id", left_ts="query_ts", right_ts="ts",
                       direction="backward", tolerance="30 MINUTE",
-                      right_cols=["val"], strategy="merge_asof")
+                      right_cols=["val"], tiebreak="turn_idx", strategy="merge_asof")
         ka = {r["probe_id"]: (r["matched_ts"], r["val"]) for r in a.collect()}
         kb = {r["probe_id"]: (r["matched_ts"], r["val"]) for r in b.collect()}
         assert ka == kb
 
+    @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+    def test_tiebreak_wins_whatever_the_input_order(self, spark, direction):
+        """Equal-ts right rows arrive max-tiebreak FIRST (one partition, so
+        the cogroup sees them in that order): both strategies must still
+        pick the greatest tiebreak, as the module docstring promises."""
+        left = spark.createDataFrame(
+            [("a", ts(6), "back"), ("a", ts(4), "fwd"), ("a", ts(5), "exact")],
+            "conv_id string, query_ts timestamp, probe_id string",
+        )
+        right = spark.createDataFrame(
+            [("a", ts(5), 1, "r_hi"), ("a", ts(5), 0, "r_lo")],
+            "conv_id string, ts timestamp, turn_idx int, val string",
+        ).coalesce(1)
+        for strategy in ("union_window", "merge_asof"):
+            out = asof_join(left, right, direction=direction, tiebreak="turn_idx",
+                            right_cols=["val"], strategy=strategy)
+            got = {r["probe_id"]: r["val"] for r in out.collect()}
+            want = {"back": "r_hi", "fwd": "r_hi", "exact": "r_hi"}
+            if direction == "backward":
+                want["fwd"] = None
+            elif direction == "forward":
+                want["back"] = None
+            assert got == want, strategy
+
+
+@pytest.fixture(scope="module")
+def pushdown_frames(spark, tmp_path_factory):
+    """Left frames with a null key and a key absent on the right, one
+    driver-local (``createDataFrame`` of pandas) and one not (a parquet
+    round trip); the right side is stored too and holds a null key."""
+    import pandas as pd
+
+    d = tmp_path_factory.mktemp("pushdown")
+    local = spark.createDataFrame(pd.DataFrame({
+        "conv_id": ["a", "a", "a", "b", "c", None],
+        "query_ts": [ts(10), ts(5), ts(0), ts(100), ts(50), ts(5)],
+        "probe_id": ["p1", "p2", "p3", "p4", "p5", "p6"],
+    }))
+    local.write.parquet(str(d / "left"))
+    spark.createDataFrame(
+        [
+            ("a", ts(5), 0, "r_a5"),
+            ("a", ts(5), 1, "r_a5b"),
+            ("a", ts(12), 2, "r_a12"),
+            ("b", ts(1), 0, "r_b1"),
+            ("d", ts(3), 0, "r_d3"),
+            (None, ts(4), 0, "r_null"),
+        ],
+        "conv_id string, ts timestamp, turn_idx int, val string",
+    ).write.parquet(str(d / "right"))
+    return {
+        "local": local,
+        "parquet": spark.read.parquet(str(d / "left")),
+        "right": spark.read.parquet(str(d / "right")),
+    }
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
 
 class TestProbePushdown:
-    """probe_pushdown semi-reduces the right side to the left key set —
-    output must equal the plain plan in every mode/direction."""
+    """probe_pushdown reduces the right side to the left key set — by a
+    scan-side ``IN`` filter for a driver-local left frame, by a broadcast
+    left-semi join otherwise — and the output must equal the plain plan in
+    every mode/direction."""
 
     @pytest.mark.parametrize(
         "kw",
@@ -170,18 +233,88 @@ class TestProbePushdown:
         ],
         ids=["backward", "forward", "nearest", "all_in_window"],
     )
-    def test_equals_plain(self, tiny, kw):
-        left, right = tiny
-        plain = asof_join(left, right, **kw)
-        pushed = asof_join(left, right, probe_pushdown=True, **kw)
-        assert plain.columns == pushed.columns
-        cols = sorted(plain.columns)
-        a = sorted(map(str, plain.select(*cols).collect()))
-        b = sorted(map(str, pushed.select(*cols).collect()))
-        assert a == b
+    def test_equals_plain(self, pushdown_frames, kw):
+        right = pushdown_frames["right"]
+        for left_kind in ("local", "parquet"):
+            left = pushdown_frames[left_kind]
+            plain = asof_join(left, right, **kw)
+            pushed = asof_join(left, right, probe_pushdown=True, **kw)
+            assert plain.columns == pushed.columns
+            cols = sorted(plain.columns)
+            a = sorted(map(str, plain.select(*cols).collect()))
+            b = sorted(map(str, pushed.select(*cols).collect()))
+            assert a == b, left_kind
+            if kw.get("mode") != "all_in_window":
+                assert len(a) == 6  # left rows preserved, null key included
 
-    def test_plan_has_semi_reduction(self, tiny):
+    @pytest.mark.parametrize("left_kind", ["local", "parquet"])
+    def test_plan_reduces_right_side(self, pushdown_frames, left_kind):
+        """Driver-local left: a key IN filter pushed to the right scan, no
+        semi join and no broadcast. Distributed left: a left-semi join."""
+        left, right = pushdown_frames[left_kind], pushdown_frames["right"]
+        plan = _plan(asof_join(left, right, probe_pushdown=True))
+        if left_kind == "local":
+            assert re.search(r"PushedFilters: \[[^\]]*In\(conv_id,", plan), plan
+            assert "LeftSemi" not in plan and "BroadcastExchange" not in plan
+        else:
+            assert "LeftSemi" in plan
+
+    def test_local_lookup_runs_two_jobs(self, spark, pushdown_frames):
+        """A backward lookup of a 200-row driver-local entity frame is one
+        query of two jobs (shuffle map stage + result stage): collecting
+        the key set adds none. Counted per job group, like a tracer."""
+        import pandas as pd
+
+        entities = spark.createDataFrame(pd.DataFrame({
+            "conv_id": [("a", "b", "c")[i % 3] for i in range(200)],
+            "query_ts": [ts(i / 10) for i in range(200)],
+            "probe_id": [f"q{i}" for i in range(200)],
+        }))
+        sc = spark.sparkContext
+        group = "asof-job-count-guard"
+        sc.setJobGroup(group, "asof job-count guard")
+        try:
+            rows = asof_join(
+                entities, pushdown_frames["right"], direction="backward",
+                tolerance="1 DAY", tiebreak="turn_idx", probe_pushdown=True,
+            ).collect()
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(rows) == 200
+        assert len(jobs) <= 2, jobs
+
+
+class TestSqlSplicing:
+    """The union-window plan is one SQL statement: tolerance and column
+    names are spliced into its text, so both must be safe."""
+
+    @pytest.mark.parametrize("bad", ["1 DAY) OR (1=1", "DAY", "1.5 HOUR", "1 FORTNIGHT", 1])
+    def test_bad_tolerance_names_the_argument(self, tiny, bad):
         left, right = tiny
-        pushed = asof_join(left, right, probe_pushdown=True)
-        plan = pushed._jdf.queryExecution().executedPlan().toString()
-        assert "LeftSemi" in plan
+        with pytest.raises(ValueError, match="tolerance"):
+            asof_join(left, right, tolerance=bad, tiebreak="turn_idx")
+
+    def test_bad_tolerance_rejected_by_fused_backfill(self, spark):
+        from kgfarm_spark.operators.backfill import backfill_asof_fused
+        from kgfarm_spark.sources.datagen import gen_probes, gen_transcripts
+
+        t = gen_transcripts(spark, n_turns=50, n_convs=2, seed=1)
+        with pytest.raises(ValueError, match="tolerance"):
+            backfill_asof_fused(t, gen_probes(spark, t), tolerance="1 DAY --")
+
+    @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+    def test_quoted_column_names(self, tiny, direction):
+        left, right = tiny
+        odd_l = left.withColumnRenamed("probe_id", "pro`be {id}")
+        odd_r = right.withColumnRenamed("val", "v`al").withColumnRenamed("turn_idx", "t`b")
+        want = {
+            r["probe_id"]: r["val"]
+            for r in asof_join(left, right, direction=direction, tolerance="30 MINUTE",
+                               tiebreak="turn_idx").collect()
+        }
+        out = asof_join(odd_l, odd_r, direction=direction, tolerance="30 MINUTE",
+                        tiebreak="t`b")
+        assert out.columns == ["conv_id", "query_ts", "pro`be {id}", "matched_ts", "t`b", "v`al"]
+        assert {r["pro`be {id}"]: r["v`al"] for r in out.collect()} == want

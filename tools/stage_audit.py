@@ -1,7 +1,9 @@
 """Runtime stage audit for the headline queries (optimization guide §1):
 for each query, run the noop sink once and report per-stage task counts,
 input bytes (how many times the source parquet is REALLY scanned after
-runtime exchange reuse), shuffle read/write bytes, and stage count.
+runtime exchange reuse), shuffle read/write bytes, and job and stage
+counts (jobs are counted per query through a job group, so a plan that
+grows an extra job, e.g. a key-set collection, shows up).
 
 Usage: python tools/stage_audit.py [query ...]
 """
@@ -12,7 +14,7 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEADLINE = [
     "flagship_backfill_asof",
@@ -41,12 +43,17 @@ def main() -> None:
     )
     # warm
     QUERIES[names[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    sc = spark.sparkContext
     out = {}
     for name in names:
+        group = f"stage-audit-{name}"
+        sc.setJobGroup(group, name)
         with StageMetrics(spark) as m:
             QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         s = m.summary()
         out[name] = {
+            "n_jobs": n_jobs,
             "n_stages": len(m.stages),
             "n_tasks": s.get("n_tasks"),
             "input_mb": round(sum(st.get("inputBytes") or 0 for st in m.stages) / 1e6, 2),
