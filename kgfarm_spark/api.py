@@ -129,9 +129,12 @@ class FeatureFarm:
     ) -> DataFrame:
         """Facade default is ``hot_conv_turns='auto'``: the measured
         crossover rule (engage the exact bucket+carry guard iff one
-        conversation holds > ~1/n_cores of the rows) costs one cheap
-        count-aggregate and means cluster users never hand-tune the
-        straggler threshold. Pass an int to pin it, None to disable.
+        conversation holds > ~1/n_cores of the rows) means cluster users
+        never hand-tune the straggler threshold. Deciding it usually costs
+        one shuffle-free scan of the key column, which runs while the plan
+        is built: a count-min sketch bound proves the guard off, and the
+        exact per-key count aggregate runs only when the bound reaches the
+        threshold. Pass an int to pin it, None to disable.
         ``probe_pushdown=True`` reduces the corpus to the probed
         conversations first (9.5× at 48M turns / 1% probes, BENCH.md
         §2b2) — set it when probing a small sample. A driver-local probe

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kgfarm_spark.api import FeatureFarm
 from kgfarm_spark.operators.asof import asof_join
 from kgfarm_spark.operators.backfill import backfill_asof_fused
 from kgfarm_spark.operators.windows import (
@@ -582,6 +583,25 @@ def q_flagship_hot(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@register("flagship_backfill_auto", None)
+def q_flagship_auto(spark: SparkSession, sf: str) -> DataFrame:
+    """The facade's flagship call with its defaults (tolerance 1 DAY,
+    ``hot_conv_turns='auto'``): the auto guard decision must leave the
+    output equal to the plain flagship oracle."""
+    out = FeatureFarm(spark).backfill_and_resolve(transcripts(spark, sf), probes(spark, sf))
+    return out.select(
+        "probe_id",
+        "conv_id",
+        "query_ts",
+        "matched_ts",
+        "turns_so_far",
+        "tool_calls_so_far",
+        F.round("tool_call_rate", 4).alias("tool_call_rate"),
+        F.round("text_len_avg", 4).alias("text_len_avg"),
+        "user_turns_so_far",
+    )
+
+
 @register("sessionize_hot_safe", None)
 def q_sessionize_hot(spark: SparkSession, sf: str) -> DataFrame:
     out = sessionize(transcripts(spark, sf), gap="30 MINUTE", max_turns_per_task=5)
@@ -622,6 +642,7 @@ def q_role_transitions_hot(spark: SparkSession, sf: str) -> DataFrame:
 for _variant, _twin in {
     "backfill_features_hot": "backfill_features",
     "flagship_hot_guard": "flagship_backfill_asof",
+    "flagship_backfill_auto": "flagship_backfill_asof",
     "sessionize_hot_safe": "sessionize",
     "rolling_hot_safe": "rolling_aggregates",
     "lag_lead_hot_safe": "lag_lead_features",

@@ -39,12 +39,30 @@ bucket 0 and zero carries, so hot and cold share ONE window pass; the
 guard costs two extra passes over the union (per-key stats, hot-slice
 partials), both with tiny broadcastable outputs. Per-task rows for a hot
 conversation drop to ~|conv| / n_hot_buckets.
+
+``hot_conv_turns='auto'`` decides the guard from the data: engage iff the
+largest unioned key group holds at least ``max(rows / n_cores, 2)`` rows
+(``_auto_hot_threshold``). The common answer, guard off, is certified by
+ONE shuffle-free scan of the key column whose observed metrics are the
+row count, the NULL-key count and a count-min sketch of the keys (Cormode &
+Muthukrishnan, J. Algorithms 2005): every sketch cell counts at least each
+key hashed into it, so the largest cell bounds the largest group from
+above, and a bound under the threshold proves the guard stays off. Only
+when the bound reaches the threshold does the exact per-key count
+aggregate run, so the decision and threshold equal the exact rule's on
+every input. The decision runs on a background thread while the plain
+plan is built; the guarded plan is built only if the guard engages.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import struct
+from numbers import Integral
+
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kgfarm_spark.operators.asof import _tolerance_expr, keyset_reduce
 
@@ -60,6 +78,10 @@ _FEATURES = [
     "user_turns_so_far",
     "assistant_turns_so_far",
 ]
+
+#: fixed hash seed of the auto guard's count-min sketch (a given input
+#: always takes the same decision path)
+_SKETCH_SEED = 17
 
 
 def _union_frame(
@@ -343,11 +365,91 @@ def _fused_state_guarded(
     return state.select(*u.columns, *_FEATURES)
 
 
+def _engage_threshold(n_rows: int, n_cores: int) -> int:
+    """Group size at which the auto guard engages: a core's share of the
+    unioned rows, at least 2."""
+    return max(int(n_rows / n_cores), 2)
+
+
+def _sketch_proves_cold(keys: DataFrame, key: str, n_cores: int) -> bool:
+    """True only if no group of ``keys`` (the NULL group included) can
+    reach ``_engage_threshold`` — proven from ONE scan job with no
+    exchange: observed metrics (count(*), the NULL-key count and a
+    count-min sketch of the key) ride on the key scan, are merged on the
+    driver, and no row leaves the executors.
+
+    A sketch cell counts every key hashed into it, so the largest cell of
+    any row bounds the largest non-NULL group from above. The width is
+    128·n_cores cells (eps = 1/(64·n_cores), confidence 0.5 → one row),
+    so uncolliding groups of a core's share sit far below the threshold.
+    False — fall through to the exact aggregate — when the bound reaches
+    the threshold, when the metrics are missing or inconsistent, or when
+    the key type's byte equality is not its grouping equality (floats,
+    non-binary collations: one group could span several cells).
+
+    The metrics are read from the query's own ``QueryExecution`` after
+    draining it with ``toRdd().count()``. ``pyspark.sql.Observation`` is
+    not used: registering one stores a non-serializable
+    ``ObservationManager`` on the session (Spark 4.1), after which any
+    task closure that captures the session — ``LogisticRegressionModel.
+    transform`` for one — fails to serialize."""
+    dtype = keys.schema[key].dataType
+    binary_eq = isinstance(dtype, (T.IntegralType, T.BinaryType)) or (
+        isinstance(dtype, T.StringType) and dtype.collation == "UTF8_BINARY"
+    )
+    if not binary_eq:
+        return False
+    name = "hot_guard_certificate"
+    qe = keys.observe(
+        name,
+        F.count(F.lit(1)),
+        F.count_if(F.col(key).isNull()),
+        F.count_min_sketch(key, 1.0 / (64 * n_cores), 0.5, _SKETCH_SEED),
+    )._jdf.queryExecution()
+    rows = qe.toRdd().count()
+    observed = qe.observedMetrics().get(name)
+    if observed.isEmpty():
+        return False
+    m = observed.get()
+    n, nulls, buf = m.getLong(0), m.getLong(1), bytes(m.get(2))
+    # CountMinSketchImpl.writeTo, big-endian: version, totalCount, depth,
+    # width, depth hash seeds, then the depth x width table of longs
+    version, total, depth, width = struct.unpack_from(">iqii", buf)
+    table_at = 20 + 8 * depth
+    if (
+        rows != n
+        or version != 1
+        or total != n - nulls
+        or depth < 1
+        or width < 1
+        or len(buf) != table_at + 8 * depth * width
+    ):
+        return False
+    table = struct.unpack_from(f">{depth * width}q", buf, table_at)
+    bound = min(max(table[r * width : (r + 1) * width]) for r in range(depth))
+    return max(nulls, bound) < _engage_threshold(n, n_cores)
+
+
+def _exact_hot_threshold(keys: DataFrame, key: str, n_cores: int) -> int | None:
+    """The exact rule: count every key group, engage iff the largest one
+    meets ``_engage_threshold``."""
+    row = (
+        keys.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(F.max("__n").alias("__mx"), F.sum("__n").alias("__tot"))
+        .first()
+    )
+    if row is None or row["__tot"] is None:
+        return None
+    threshold = _engage_threshold(row["__tot"], n_cores)
+    return threshold if row["__mx"] >= threshold else None
+
+
 def _auto_hot_threshold(
     transcripts: DataFrame, key: str, probes: DataFrame | None = None
 ) -> int | None:
     """Decide whether the hot-conversation guard should engage, and at
-    what threshold, from ONE column-pruned aggregate over the key column.
+    what threshold.
 
     Crossover rule (measured, BENCH.md §2c): engage once a single
     conversation holds more than ~1/n_cores of all rows — below that,
@@ -360,25 +462,67 @@ def _auto_hot_threshold(
     cost on moderate skew, which is exactly why the threshold stays off
     (returns None) until one key truly dominates a core's share.
     Returns the engage threshold ``total_rows / n_cores`` when the
-    largest key meets it, else None (guard off). The extra cost is one
-    count-shuffle whose output is |keys| rows reduced to a single
-    driver row — negligible next to the window job it protects."""
+    largest key group (turns + probes, NULL keys one group) meets it,
+    else None (guard off).
+
+    Cost: one shuffle-free scan of the key column certifies the common
+    None (``_sketch_proves_cold``); only when the certificate fails does
+    the exact per-key count aggregate (``_exact_hot_threshold``) run, so
+    the answer is the exact rule's on every input."""
     sc = transcripts.sparkSession.sparkContext
     n_cores = max(sc.defaultParallelism, 2)
     keys = transcripts.select(key)
     if probes is not None:
         # the window task holds the UNION of turns and probes per key
         keys = keys.unionByName(probes.select(key))
-    row = (
-        keys.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .agg(F.max("__n").alias("__mx"), F.sum("__n").alias("__tot"))
-        .first()
-    )
-    if row is None or row["__tot"] is None:
+    if _sketch_proves_cold(keys, key, n_cores):
         return None
-    threshold = max(int(row["__tot"] / n_cores), 2)
-    return threshold if row["__mx"] >= threshold else None
+    return _exact_hot_threshold(keys, key, n_cores)
+
+
+class _BackgroundCall(InheritableThread):
+    """``fn(*args)`` on a pyspark ``InheritableThread``, which copies the
+    caller's local properties (job group, job tags) so its Spark jobs are
+    counted and cancelled with the caller's. ``result()`` joins it and
+    returns the value, or re-raises the call's exception in the caller."""
+
+    def __init__(self, session: SparkSession, fn, *args):
+        self._value = self._error = None
+        super().__init__(lambda: self._call(fn, args), session=session, daemon=True)
+        self.start()
+
+    def _call(self, fn, args) -> None:
+        try:
+            self._value = fn(*args)
+        except BaseException as e:  # noqa: BLE001 — re-raised by result()
+            self._error = e
+
+    def result(self):
+        self.join()
+        if self._error is not None:
+            raise self._error
+        return self._value
+
+
+def _is_count(v) -> bool:
+    return isinstance(v, Integral) and not isinstance(v, bool) and v >= 1
+
+
+def _resolved(state: DataFrame, key: str, probe_cols: list[str], tol_expr) -> DataFrame:
+    """Probe rows of the fused state in the output layout. Tolerance /
+    no-match nulls the feature block exactly like a missed as-of join
+    (matched_ts outside [probe_ts - tol, probe_ts])."""
+    valid = "(matched_ts IS NOT NULL)"
+    if tol_expr is not None:
+        valid = f"(matched_ts IS NOT NULL AND matched_ts >= __ts - {tol_expr})"
+    out = state.filter(F.col("__side") == 1).selectExpr(
+        f"`{key}`",
+        *[f"`__p_{c}` AS `{c}`" for c in probe_cols],
+        *[f"CASE WHEN {valid} THEN `{c}` END AS `{c}`" for c in _FEATURES],
+    )
+    return out.withColumn(
+        "tool_call_rate", F.col("tool_calls_so_far") / F.col("turns_so_far")
+    )
 
 
 def backfill_asof_fused(
@@ -403,7 +547,14 @@ def backfill_asof_fused(
     (see module docstring); everything else stays on the plain
     single-window plan. Pass ``"auto"`` to apply the measured crossover
     rule (engage iff some conversation holds > ~1/n_cores of the rows —
-    see ``_auto_hot_threshold``) instead of hand-tuning.
+    see ``_auto_hot_threshold``) instead of hand-tuning: one
+    shuffle-free count-min scan of the key column certifies "guard off"
+    in the common case, the exact per-key count aggregate runs only when
+    that bound reaches the threshold, and the decision job overlaps the
+    construction of the plain plan (the guarded plan is built only when
+    the guard engages). Arguments are validated before any Spark job:
+    ``hot_conv_turns`` must be None, ``"auto"`` or an int >= 1, and
+    ``n_hot_buckets`` an int >= 1.
 
     ``probe_pushdown``: reduce the transcript side to the probe
     frame's conversation set BEFORE the union-window shuffle
@@ -422,15 +573,13 @@ def backfill_asof_fused(
     probes cover most conversations (the reduction then only adds work)
     or when a distributed probe key set is too large to broadcast
     (>~100M keys)."""
-    if probe_pushdown:
-        transcripts = keyset_reduce(transcripts, probes, [key])
-    if isinstance(hot_conv_turns, str):
-        if hot_conv_turns != "auto":
-            raise ValueError(
-                f"hot_conv_turns must be an int, None, or 'auto'; got "
-                f"{hot_conv_turns!r}"
-            )
-        hot_conv_turns = _auto_hot_threshold(transcripts, key, probes)
+    if not (hot_conv_turns is None or hot_conv_turns == "auto" or _is_count(hot_conv_turns)):
+        raise ValueError(
+            f"hot_conv_turns must be None, 'auto', or an int >= 1; got "
+            f"{hot_conv_turns!r}"
+        )
+    if not _is_count(n_hot_buckets):
+        raise ValueError(f"n_hot_buckets must be an int >= 1; got {n_hot_buckets!r}")
     probe_cols = [c for c in probes.columns if c != key]
     clash = sorted(set(probe_cols) & (set(_FEATURES) | {"tool_call_rate"}))
     if clash:
@@ -439,31 +588,31 @@ def backfill_asof_fused(
             f"output names — rename them (a silent overwrite here would "
             f"corrupt re-backfilled frames)"
         )
-    u = _union_frame(transcripts, probes, key, ts, probe_ts, probe_cols)
-
-    if hot_conv_turns is None:
-        state = _fused_state(u, key)
-    else:
-        bounds = _hot_bounds(
-            transcripts, key, ts, hot_conv_turns, n_hot_buckets, probes, probe_ts
-        )
-        carry = _hot_carry(transcripts, key, ts, bounds)
-        state = _fused_state_guarded(u, key, bounds, carry)
-
-    out = state.filter(F.col("__side") == 1)
-
-    # tolerance / no-match: null out the feature block exactly like a
-    # missed as-of join (matched_ts outside [probe_ts - tol, probe_ts])
     tol_expr = _tolerance_expr(tolerance)
-    valid = "(matched_ts IS NOT NULL)"
-    if tol_expr is not None:
-        valid = f"(matched_ts IS NOT NULL AND matched_ts >= __ts - {tol_expr})"
+    if probe_pushdown:
+        transcripts = keyset_reduce(transcripts, probes, [key])
 
-    out = out.selectExpr(
-        f"`{key}`",
-        *[f"`__p_{c}` AS `{c}`" for c in probe_cols],
-        *[f"CASE WHEN {valid} THEN `{c}` END AS `{c}`" for c in _FEATURES],
+    if hot_conv_turns == "auto":
+        # the decision job runs while the plain plan is built
+        decision = _BackgroundCall(
+            transcripts.sparkSession, _auto_hot_threshold, transcripts, key, probes
+        )
+        try:
+            u = _union_frame(transcripts, probes, key, ts, probe_ts, probe_cols)
+            plain = _resolved(_fused_state(u, key), key, probe_cols, tol_expr)
+        finally:
+            decision.join()
+        hot_conv_turns = decision.result()
+        if hot_conv_turns is None:
+            return plain
+    else:
+        u = _union_frame(transcripts, probes, key, ts, probe_ts, probe_cols)
+        if hot_conv_turns is None:
+            return _resolved(_fused_state(u, key), key, probe_cols, tol_expr)
+
+    bounds = _hot_bounds(
+        transcripts, key, ts, hot_conv_turns, n_hot_buckets, probes, probe_ts
     )
-    return out.withColumn(
-        "tool_call_rate", F.col("tool_calls_so_far") / F.col("turns_so_far")
-    )
+    carry = _hot_carry(transcripts, key, ts, bounds)
+    state = _fused_state_guarded(u, key, bounds, carry)
+    return _resolved(state, key, probe_cols, tol_expr)

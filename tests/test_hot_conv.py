@@ -385,3 +385,220 @@ def test_probe_feature_name_collision_raises(spark):
     ).withColumn("query_ts", F.timestamp_seconds(F.lit(2)))
     with pytest.raises(ValueError, match="collide"):
         backfill_asof_fused(turns, probes)
+
+
+def _jobs_during(spark, group, fn):
+    """Run ``fn()`` under a fresh job group; return (result or exception,
+    ids of the Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        try:
+            out = fn()
+        except Exception as e:  # returned for the caller to assert on
+            out = e
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.mark.parametrize(
+    "kwargs, match",
+    [
+        ({"hot_conv_turns": True}, "hot_conv_turns"),
+        ({"hot_conv_turns": 0}, "hot_conv_turns"),
+        ({"hot_conv_turns": 2.5}, "hot_conv_turns"),
+        ({"n_hot_buckets": 0}, "n_hot_buckets"),
+        ({"n_hot_buckets": True}, "n_hot_buckets"),
+        ({"hot_conv_turns": "auto", "n_hot_buckets": -1}, "n_hot_buckets"),
+    ],
+    ids=["turns-bool", "turns-zero", "turns-float", "buckets-zero", "buckets-bool",
+         "auto-buckets-negative"],
+)
+def test_fused_rejects_bad_guard_args_before_any_job(spark, kwargs, match):
+    """``hot_conv_turns=True`` used to die as an AnalysisException
+    ``(__n >= true)`` and ``n_hot_buckets=0`` as a DIVIDE_BY_ZERO task
+    failure; both are argument errors raised before any Spark job."""
+    t = gen_transcripts(spark, n_turns=200, n_convs=5, seed=2)
+    probes = gen_probes(spark, t)
+    err, jobs = _jobs_during(
+        spark, "fused-bad-args", lambda: backfill_asof_fused(t, probes, **kwargs)
+    )
+    assert isinstance(err, ValueError) and match in str(err), err
+    assert jobs == []
+
+
+def test_fused_name_clash_raises_before_auto_detection(spark):
+    """A clashing probe frame fails fast: the 'auto' detection job never
+    starts."""
+    turns = spark.createDataFrame(
+        [("c0", 0, "t", "user", None)],
+        "conv_id string, turn_idx long, text string, role string, tool string",
+    ).withColumn("ts", F.timestamp_seconds(F.lit(1)))
+    probes = spark.createDataFrame(
+        [("c0", 1)], "conv_id string, turns_so_far long"
+    ).withColumn("query_ts", F.timestamp_seconds(F.lit(2)))
+    err, jobs = _jobs_during(
+        spark,
+        "fused-clash",
+        lambda: backfill_asof_fused(turns, probes, hot_conv_turns="auto"),
+    )
+    assert isinstance(err, ValueError) and "collide" in str(err), err
+    assert jobs == []
+
+
+def _reference_threshold(keys, n_cores):
+    """Brute-force twin of the auto rule: every key group counted (NULL
+    keys form one group), engage at a core's share of the rows."""
+    counts = [r[0] for r in keys.groupBy(keys.columns[0]).count().select("count").collect()]
+    if not counts:
+        return None
+    threshold = max(int(sum(counts) / n_cores), 2)
+    return threshold if max(counts) >= threshold else None
+
+
+def _parity_uniform(spark):
+    return gen_transcripts(spark, n_turns=2_000, n_convs=100, seed=31, skew=1.0), None
+
+
+def _parity_moderate(spark):
+    t = gen_transcripts(spark, n_turns=20_000, n_convs=200, seed=5, skew=1.5)
+    return t, gen_probes(spark, t)
+
+
+def _parity_hot(spark):
+    return gen_transcripts(spark, n_turns=20_000, n_convs=20, seed=31, skew=3.0), None
+
+
+def _parity_probe_flood(spark):
+    turns = spark.createDataFrame([(f"c{i % 20}",) for i in range(200)], "conv_id string")
+    probes = spark.createDataFrame(
+        [("c0",)] * 5000 + [(f"c{i % 20}",) for i in range(100)], "conv_id string"
+    )
+    return turns, probes
+
+
+def _parity_null_hot(spark):
+    # the NULL group (400 of 500 rows) is the only group over 500 / 8
+    rows = [(None,)] * 400 + [(f"c{i % 20}",) for i in range(100)]
+    return spark.createDataFrame(rows, "conv_id string"), None
+
+
+def _parity_int_uniform(spark):
+    return spark.range(5_000).selectExpr("CAST(id % 500 AS INT) AS conv_id"), None
+
+
+def _parity_int_hot(spark):
+    t = spark.range(5_000).selectExpr("IF(id % 3 = 0, 0L, id) AS conv_id")
+    return t, spark.range(100).selectExpr("id AS conv_id")
+
+
+def _parity_empty(spark):
+    e = spark.createDataFrame([], "conv_id string")
+    return e, e
+
+
+def _parity_double(spark):
+    return spark.range(1_000).selectExpr("CAST(id % 100 AS DOUBLE) AS conv_id"), None
+
+
+def _parity_collated(spark):
+    t = spark.range(1_000).selectExpr(
+        "CAST(concat('c', id % 100) AS STRING COLLATE UTF8_LCASE) AS conv_id"
+    )
+    return t, None
+
+
+@pytest.mark.parametrize(
+    "build, decided_by",
+    [
+        (_parity_uniform, "sketch"),
+        (_parity_moderate, "sketch"),
+        (_parity_hot, "exact"),
+        (_parity_probe_flood, "exact"),
+        (_parity_null_hot, "exact"),
+        (_parity_int_uniform, "sketch"),
+        (_parity_int_hot, "exact"),
+        (_parity_empty, "sketch"),
+        (_parity_double, "exact"),
+        (_parity_collated, "exact"),
+    ],
+    ids=lambda v: v.__name__.removeprefix("_parity_") if callable(v) else v,
+)
+def test_auto_threshold_matches_brute_force(spark, monkeypatch, build, decided_by):
+    """The count-min certificate may only ever answer None, and only when
+    the exact rule would; every other input reaches the exact aggregate.
+    Floating-point and collated keys skip the certificate: byte equality
+    is not their grouping equality."""
+    from kgfarm_spark.operators import backfill
+
+    exact_calls = []
+    real_exact = backfill._exact_hot_threshold
+
+    def spy(*args):
+        exact_calls.append(args)
+        return real_exact(*args)
+
+    monkeypatch.setattr(backfill, "_exact_hot_threshold", spy)
+    transcripts, probes = build(spark)
+    keys = transcripts.select("conv_id")
+    if probes is not None:
+        keys = keys.unionByName(probes.select("conv_id"))
+    n_cores = max(spark.sparkContext.defaultParallelism, 2)
+
+    got = backfill._auto_hot_threshold(transcripts, "conv_id", probes)
+    assert got == _reference_threshold(keys, n_cores)
+    assert ("exact" if exact_calls else "sketch") == decided_by
+
+
+def test_auto_detection_is_one_job_in_the_callers_group(spark, tmp_path):
+    """On moderate skew 'auto' launches ONE Spark job during the call (the
+    certificate scan; the exact aggregate it replaces took three), and
+    that job counts under the caller's job group although it runs on a
+    background thread. Int and None thresholds launch none."""
+    t = gen_transcripts(spark, n_turns=20_000, n_convs=200, seed=5, skew=1.5)
+    t.write.parquet(str(tmp_path / "t"))
+    t = spark.read.parquet(str(tmp_path / "t"))
+    probes = gen_probes(spark, t)
+
+    for hot, want_jobs in (("auto", 1), (None, 0), (5_000, 0)):
+        out, jobs = _jobs_during(
+            spark,
+            f"fused-auto-jobs-{hot}",
+            lambda: backfill_asof_fused(t, probes, tolerance="1 DAY", hot_conv_turns=hot),
+        )
+        assert not isinstance(out, Exception), out
+        assert len(jobs) == want_jobs, (hot, jobs)
+
+
+def test_auto_detection_failure_surfaces_from_the_call(spark):
+    """An error inside the background detection job is raised by
+    backfill_asof_fused itself."""
+    t = gen_transcripts(spark, n_turns=500, n_convs=10, seed=4)
+    probes = gen_probes(spark, t)
+    bad = t.withColumn(
+        "conv_id", F.raise_error(F.concat(F.lit("bad key "), F.col("conv_id"))).cast("string")
+    )
+    with pytest.raises(Exception, match="bad key"):
+        backfill_asof_fused(bad, probes, hot_conv_turns="auto")
+
+
+def test_auto_detection_leaves_session_usable_for_ml(spark):
+    """The certificate reads its observed metrics without registering a
+    ``pyspark.sql.Observation``: on Spark 4.1 that registration leaves a
+    non-serializable manager on the session, and every later task that
+    captures the session (a logistic-regression transform) fails."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.linalg import Vectors
+
+    from kgfarm_spark.operators.backfill import _auto_hot_threshold
+
+    t = gen_transcripts(spark, n_turns=2_000, n_convs=100, seed=31, skew=1.0)
+    assert _auto_hot_threshold(t, "conv_id", gen_probes(spark, t)) is None
+    d = spark.createDataFrame(
+        [(Vectors.dense([float(i), 1.0]), float(i % 2)) for i in range(40)],
+        ["features", "label"],
+    )
+    model = LogisticRegression(maxIter=3).fit(d)
+    assert len(model.transform(d).select("prediction").collect()) == 40

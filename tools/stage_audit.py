@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEADLINE = [
     "flagship_backfill_asof",
+    "flagship_backfill_auto",
     "asof_backward_latest",
     "asof_interval_all",
     "backfill_features",
