@@ -64,30 +64,32 @@ LEFT JOIN transcripts t
   ON p.conv_id = t.conv_id
 """
 
-
-@register(
-    "asof_backward_latest",
-    _cte(
-        _ASOF_OUT
-        + """
+_ASOF_BACKWARD = """
  AND t.ts <= p.query_ts
  AND t.ts >= p.query_ts - INTERVAL 1 DAY
 QUALIFY row_number() OVER (
   PARTITION BY p.probe_id ORDER BY t.ts DESC, t.turn_idx DESC) = 1
 """
-    ),
-)
-def q_asof_backward(spark: SparkSession, sf: str) -> DataFrame:
+
+#: the entity subset of ``asof_local_lookup``: one probe in 16, picked by
+#: a hash both engines compute alike
+_LOOKUP_SUBSET = "md5(probe_id) LIKE '0%'"
+
+
+def _asof_latest(left: DataFrame, right: DataFrame, direction: str, **kw) -> DataFrame:
+    """``latest`` as-of lookup of each probe's transcript turn within a
+    day, in the ``_ASOF_OUT`` layout."""
     out = asof_join(
-        probes(spark, sf),
-        transcripts(spark, sf),
+        left,
+        right,
         on="conv_id",
         left_ts="query_ts",
         right_ts="ts",
-        direction="backward",
+        direction=direction,
         tolerance="1 DAY",
         right_cols=["turn_idx", "role", "text"],
         tiebreak="turn_idx",
+        **kw,
     )
     return out.select(
         "probe_id",
@@ -98,6 +100,32 @@ def q_asof_backward(spark: SparkSession, sf: str) -> DataFrame:
         F.col("role").alias("matched_role"),
         F.col("text").alias("matched_text"),
     )
+
+
+@register("asof_backward_latest", _cte(_ASOF_OUT + _ASOF_BACKWARD))
+def q_asof_backward(spark: SparkSession, sf: str) -> DataFrame:
+    return _asof_latest(probes(spark, sf), transcripts(spark, sf), "backward")
+
+
+@register(
+    "asof_local_lookup",
+    _cte(
+        _ASOF_OUT.replace(
+            "FROM probes p", f"FROM (SELECT * FROM probes WHERE {_LOOKUP_SUBSET}) p"
+        )
+        + _ASOF_BACKWARD
+    ),
+)
+def q_asof_local_lookup(spark: SparkSession, sf: str) -> DataFrame:
+    """A point lookup as a serving caller makes it: a small entity frame
+    held on the driver (collected, then re-created with
+    ``createDataFrame``) resolved with ``probe_pushdown=True``, which
+    plans the lookup as one task: no exchange of its own (the only one
+    left is inside the events-derived transcript source). The oracle is
+    ``asof_backward_latest``'s SQL over the same probe subset."""
+    subset = probes(spark, sf).filter(_LOOKUP_SUBSET)
+    entities = spark.createDataFrame(subset.toPandas(), subset.schema)
+    return _asof_latest(entities, transcripts(spark, sf), "backward", probe_pushdown=True)
 
 
 @register(
@@ -113,26 +141,7 @@ QUALIFY row_number() OVER (
     ),
 )
 def q_asof_forward(spark: SparkSession, sf: str) -> DataFrame:
-    out = asof_join(
-        probes(spark, sf),
-        transcripts(spark, sf),
-        on="conv_id",
-        left_ts="query_ts",
-        right_ts="ts",
-        direction="forward",
-        tolerance="1 DAY",
-        right_cols=["turn_idx", "role", "text"],
-        tiebreak="turn_idx",
-    )
-    return out.select(
-        "probe_id",
-        "conv_id",
-        "query_ts",
-        "matched_ts",
-        F.col("turn_idx").alias("matched_turn_idx"),
-        F.col("role").alias("matched_role"),
-        F.col("text").alias("matched_text"),
-    )
+    return _asof_latest(probes(spark, sf), transcripts(spark, sf), "forward")
 
 
 @register(
@@ -148,26 +157,7 @@ QUALIFY row_number() OVER (
     ),
 )
 def q_asof_nearest(spark: SparkSession, sf: str) -> DataFrame:
-    out = asof_join(
-        probes(spark, sf),
-        transcripts(spark, sf),
-        on="conv_id",
-        left_ts="query_ts",
-        right_ts="ts",
-        direction="nearest",
-        tolerance="1 DAY",
-        right_cols=["turn_idx", "role", "text"],
-        tiebreak="turn_idx",
-    )
-    return out.select(
-        "probe_id",
-        "conv_id",
-        "query_ts",
-        "matched_ts",
-        F.col("turn_idx").alias("matched_turn_idx"),
-        F.col("role").alias("matched_role"),
-        F.col("text").alias("matched_text"),
-    )
+    return _asof_latest(probes(spark, sf), transcripts(spark, sf), "nearest")
 
 
 @register(

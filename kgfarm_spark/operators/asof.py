@@ -27,6 +27,14 @@ Two physical strategies for ``latest``:
   partitioning downstream window features need, so the exchange is reused).
   The whole plan (union, window, tolerance, output projection) is one SQL
   statement, so building it costs one parse and one analyzer pass.
+  Point lookups skip the shuffle: when the left frame is driver-local
+  (``_driver_local``) and the right side's estimated size is within
+  ``spark.sql.autoBroadcastJoinThreshold`` (``_fits_one_task``, read from
+  the analyzed plan's statistics), the union carries a ``COALESCE(1)``
+  hint. Its single partition already satisfies the window's clustered
+  distribution, so scan, window and projection run as ONE job of one
+  stage and one task. Semantics are those of the shuffle plan; a
+  threshold of -1 turns the path off.
 - ``'merge_asof'``: cogrouped ``applyInPandas`` running ``pd.merge_asof``
   per key bucket — Arrow-vectorized; useful when both sides are already
   bucketed by the key and per-key data fits a pandas batch.
@@ -47,7 +55,7 @@ import re
 import uuid
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: interval units a tolerance may name — the ones both Spark's INTERVAL
@@ -56,18 +64,18 @@ _TOLERANCE = re.compile(
     r"\s*(\d+)\s+(MICROSECOND|MILLISECOND|SECOND|MINUTE|HOUR|DAY)S?\s*", re.I
 )
 
-#: key type name → the ``org.apache.spark.sql.Encoders`` factory that
-#: collects the key column as plain JVM values for the IN-list
+#: key type name → the ``SparkSession.implicits`` encoder that collects the
+#: key column as plain (boxed, nullable) JVM values for the IN-list
 _KEY_ENCODERS = {
-    "string": "STRING",
-    "long": "LONG",
-    "integer": "INT",
-    "short": "SHORT",
-    "byte": "BYTE",
-    "boolean": "BOOLEAN",
-    "date": "LOCALDATE",
-    "timestamp": "INSTANT",
-    "timestamp_ntz": "LOCALDATETIME",
+    "string": "newStringEncoder",
+    "long": "newBoxedLongEncoder",
+    "integer": "newBoxedIntEncoder",
+    "short": "newBoxedShortEncoder",
+    "byte": "newBoxedByteEncoder",
+    "boolean": "newBoxedBooleanEncoder",
+    "date": "newLocalDateEncoder",
+    "timestamp": "newInstantEncoder",
+    "timestamp_ntz": "newLocalDateTimeEncoder",
 }
 
 
@@ -103,22 +111,36 @@ def _driver_local(df: DataFrame) -> bool:
     return plan.getClass().getSimpleName() == "LocalRelation"
 
 
-def keyset_reduce(right: DataFrame, left: DataFrame, keys: Sequence[str]) -> DataFrame:
+def _fits_one_task(df: DataFrame) -> bool:
+    """True when ``df``'s estimated size is within
+    ``spark.sql.autoBroadcastJoinThreshold``: the bound Spark already uses
+    to plan a relation without a shuffle (a negative threshold disables
+    it). The estimate is the analyzed plan's statistics (``logicalPlan``),
+    so deciding costs no optimizer pass and no Spark job."""
+    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return 0 <= df._jdf.logicalPlan().stats().sizeInBytes() <= limit
+
+
+def keyset_reduce(
+    right: DataFrame, left: DataFrame, keys: Sequence[str], local: bool | None = None
+) -> DataFrame:
     """Reduce ``right`` to the rows whose key occurs in ``left`` — the
     data-induced predicate of a key-equi join pushed to the right side's
     scan. Exact for any operator whose output rows only read right rows of
-    their own key. Two mechanisms:
+    their own key. ``local`` is ``_driver_local(left)`` when the caller has
+    it already. Two mechanisms:
 
-    - ``left`` driver-local (``_driver_local``) with a single key of a
-      plain type: its key column is collected on the driver — no Spark job,
-      the projection folds into the local relation — and ``right`` is
-      filtered by ONE ``key IN (...)`` expression built JVM-side (not one
-      py4j literal per key). Parquet and DSv2 scans push the predicate
-      down; Catalyst drops duplicate values and evaluates the list as a
-      hash set. A null left key adds a NULL, which matches nothing. The
-      list needs no size bound of its own: it holds at most one literal
-      per row of a relation Spark already embeds in the plan and ships
-      with every task.
+    - ``left`` driver-local with a single key of a plain type: its key
+      column is collected on the driver — no Spark job, the projection
+      folds into the local relation — and ``right`` is filtered by ONE
+      ``key IN (...)`` expression built JVM-side from the collected list,
+      in a fixed handful of py4j calls on the two ``_jdf`` handles (not
+      one literal per key). Parquet and DSv2 scans push the predicate down;
+      Catalyst drops duplicate values and evaluates the list as a hash
+      set. A null left key adds a NULL, which matches nothing. The list
+      needs no size bound of its own: it holds at most one literal per row
+      of a relation Spark already embeds in the plan and ships with every
+      task.
     - otherwise (a distributed ``left``, composite keys): the distinct key
       set is broadcast and ``right`` is left-semi joined to it, which
       costs the jobs that compute and broadcast the key set. Leave the
@@ -129,27 +151,31 @@ def keyset_reduce(right: DataFrame, left: DataFrame, keys: Sequence[str]) -> Dat
     enc = None
     if len(keys) == 1:
         enc = _KEY_ENCODERS.get(left.schema[keys[0]].dataType.typeName())
-    if enc is None or not _driver_local(left):
+    if enc is None or not (_driver_local(left) if local is None else local):
         return right.join(F.broadcast(left.select(*keys).distinct()), keys, "left_semi")
-    encoder = getattr(left.sparkSession._jvm.Encoders, enc)()
-    typed = getattr(F.col(keys[0])._jc, "as")(encoder)
-    values = left._jdf.select(typed).collectAsList()
-    return right.filter(Column(F.col(keys[0])._jc.isInCollection(values)))
+    key, ljdf, rjdf = _ident(keys[0]), left._jdf, right._jdf
+    encoder = getattr(left.sparkSession._jsparkSession.implicits(), enc)()
+    values = ljdf.select(getattr(ljdf.col(key), "as")(encoder)).collectAsList()
+    return DataFrame(rjdf.filter(rjdf.col(key).isInCollection(values)), right.sparkSession)
 
 
 def _sql(text: str, views: dict[str, DataFrame]) -> DataFrame:
     """Run ONE SQL statement over DataFrames registered under throwaway
     temp-view names (what ``spark.sql(text, name=df)`` does, without its
     ``str.format`` pass, so braces in column names need no escaping).
-    ``spark.sql`` analyzes eagerly, so the views can go right after."""
+    ``spark.sql`` analyzes eagerly, so the views can go right after. It
+    all runs on the JVM session and one catalog handle: one py4j call per
+    view registered or dropped, one for the statement."""
     spark = next(iter(views.values())).sparkSession
+    jss = spark._jsparkSession
+    catalog = jss.catalog()
     try:
         for name, df in views.items():
-            df.createOrReplaceTempView(name)
-        return spark.sql(text)
+            df._jdf.createOrReplaceTempView(name)
+        return DataFrame(jss.sql(text), spark)
     finally:
         for name in views:
-            spark.catalog.dropTempView(name)
+            catalog.dropTempView(name)
 
 
 def asof_join(
@@ -183,6 +209,11 @@ def asof_join(
             as ``matched_ts``.
         tiebreak: right column ordering equal-ts matches (e.g. 'turn_idx').
         strategy: 'union_window' | 'merge_asof' (latest mode only).
+            'union_window' plans a driver-local ``left`` over a ``right``
+            whose estimated size is within
+            ``spark.sql.autoBroadcastJoinThreshold`` as one task (one job,
+            one stage, no exchange); anything else takes the one-shuffle
+            plan. Both give the same rows.
         probe_pushdown: reduce the right side to the left frame's key set
             BEFORE the join/window shuffle (``keyset_reduce``).
             Exactness-preserving for every mode/direction (an as-of match
@@ -197,8 +228,9 @@ def asof_join(
     """
     keys = [on] if isinstance(on, str) else list(on)
     _tolerance_expr(tolerance)  # validate before any plan is built
+    local = _driver_local(left) if probe_pushdown else None  # decided once per call
     if probe_pushdown:
-        right = keyset_reduce(right, left, keys)
+        right = keyset_reduce(right, left, keys, local)
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in keys and c != right_ts]
     right_cols = list(right_cols)
@@ -214,8 +246,10 @@ def asof_join(
         )
     if strategy != "union_window":
         raise ValueError(f"unknown strategy: {strategy!r}")
+    one_task = _fits_one_task(right) and (_driver_local(left) if local is None else local)
     return _union_window(
-        left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak
+        left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak,
+        one_task,
     )
 
 
@@ -253,7 +287,9 @@ def _interval_join(left, right, keys, left_ts, right_ts, tolerance, right_cols):
 # ---------------------------------------------------------------------------
 
 
-def _union_window(left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak):
+def _union_window(
+    left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak, one_task
+):
     """Tag both sides, union, and carry the last right payload over an
     ordered window per key — built as ONE SQL statement (one parse, one
     analyzer pass, a handful of py4j calls however many columns there are).
@@ -266,7 +302,9 @@ def _union_window(left, right, keys, left_ts, right_ts, direction, tolerance, ri
     partition sort runs twice) and keeps the closer match, backward on
     equal distance. The left columns travel as ``__l_<name>`` copies, and
     the right side's NULLs for them take their types from the union's
-    type widening, so no schema round trip is needed."""
+    type widening, so no schema round trip is needed. ``one_task`` (a
+    driver-local left over a small right) coalesces the union to one
+    partition instead of shuffling it."""
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unknown direction: {direction!r}")
     lv, rv = (f"__asof_{side}_{uuid.uuid4().hex}" for side in "lr")
@@ -296,6 +334,11 @@ def _union_window(left, right, keys, left_ts, right_ts, direction, tolerance, ri
         "forward": [carry("DESC", "__f")],
         "nearest": [carry("ASC", "__b"), carry("DESC", "__f")],
     }[direction]
+    if one_task:
+        # SinglePartition satisfies the window's clustered distribution, so
+        # EnsureRequirements adds no exchange: scan, window and projection
+        # run in one task of one stage of one job
+        union = f"SELECT /*+ COALESCE(1) */ * FROM ({union})"
     probes = f"SELECT * FROM (SELECT *, {', '.join(carries)} FROM ({union})) WHERE __side = 1"
 
     # the tolerance CASE is evaluated once per row in its own projection;

@@ -64,7 +64,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kgfarm_spark.operators.asof import _tolerance_expr, keyset_reduce
+from kgfarm_spark.operators.asof import _ident, _tolerance_expr, keyset_reduce
 
 #: feature columns produced by the fused state pass (defines the output
 #: projection order)
@@ -102,11 +102,12 @@ def _union_frame(
     round-trips per construction, a measurable slice of the per-query
     wall at interactive scale (guide §1: measure — construction showed
     up in the profile, not the executors). The parsed expressions are
-    identical Catalyst nodes."""
-    ptypes = {c: probes.schema[c].dataType.simpleString() for c in probe_cols}
+    identical Catalyst nodes. Names are quoted with ``asof._ident``; the
+    turn side's probe columns are bare NULLs whose types ``unionByName``
+    widens to the probe side's (no type is spelled out in SQL text)."""
     turn_side = transcripts.selectExpr(
-        f"`{key}`",
-        f"`{ts}` AS __ts",
+        _ident(key),
+        f"{_ident(ts)} AS __ts",
         "0 AS __side",  # turns sort before probes at equal ts
         "CAST(turn_idx AS BIGINT) AS __tb",
         "true AS __is_turn",
@@ -114,11 +115,11 @@ def _union_frame(
         "(tool IS NOT NULL) AS __has_tool",
         "(role = 'user') AS __is_user",
         "(role = 'assistant') AS __is_assistant",
-        *[f"CAST(NULL AS {ptypes[c]}) AS `__p_{c}`" for c in probe_cols],
+        *[f"NULL AS {_ident(f'__p_{c}')}" for c in probe_cols],
     )
     probe_side = probes.selectExpr(
-        f"`{key}`",
-        f"`{probe_ts}` AS __ts",
+        _ident(key),
+        f"{_ident(probe_ts)} AS __ts",
         "1 AS __side",
         "CAST(NULL AS BIGINT) AS __tb",
         "false AS __is_turn",
@@ -126,7 +127,7 @@ def _union_frame(
         "CAST(NULL AS BOOLEAN) AS __has_tool",
         "CAST(NULL AS BOOLEAN) AS __is_user",
         "CAST(NULL AS BOOLEAN) AS __is_assistant",
-        *[f"`{c}` AS `__p_{c}`" for c in probe_cols],
+        *[f"{_ident(c)} AS {_ident(f'__p_{c}')}" for c in probe_cols],
     )
     return turn_side.unionByName(probe_side)
 
@@ -142,7 +143,7 @@ def _fused_state(u: DataFrame, key: str) -> DataFrame:
     the whole projection crosses py4j once (construction cost — see
     ``_union_frame``)."""
     ww = (
-        f"OVER (PARTITION BY `{key}` ORDER BY __ts ASC, __side ASC, __tb ASC "
+        f"OVER (PARTITION BY {_ident(key)} ORDER BY __ts ASC, __side ASC, __tb ASC "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
     return u.selectExpr(
@@ -362,7 +363,7 @@ def _fused_state_guarded(
             "assistant_turns_so_far"
         ),
     )
-    return state.select(*u.columns, *_FEATURES)
+    return state.select(*map(_ident, u.columns), *_FEATURES)
 
 
 def _engage_threshold(n_rows: int, n_cores: int) -> int:
@@ -516,9 +517,9 @@ def _resolved(state: DataFrame, key: str, probe_cols: list[str], tol_expr) -> Da
     if tol_expr is not None:
         valid = f"(matched_ts IS NOT NULL AND matched_ts >= __ts - {tol_expr})"
     out = state.filter(F.col("__side") == 1).selectExpr(
-        f"`{key}`",
-        *[f"`__p_{c}` AS `{c}`" for c in probe_cols],
-        *[f"CASE WHEN {valid} THEN `{c}` END AS `{c}`" for c in _FEATURES],
+        _ident(key),
+        *[f"{_ident(f'__p_{c}')} AS {_ident(c)}" for c in probe_cols],
+        *[f"CASE WHEN {valid} THEN {c} END AS {c}" for c in _FEATURES],
     )
     return out.withColumn(
         "tool_call_rate", F.col("tool_calls_so_far") / F.col("turns_so_far")

@@ -8,9 +8,13 @@ deterministic, independent of physical partitioning, stable across
 cluster sizes. Each bucket runs as one fully-distributed job; its output
 lands under ``out/bucket=K/`` and a manifest line
 ``{bucket, snapshot_id, rows, feature_hash, wall_sec}`` is appended
-atomically (write-temp + rename) only after the bucket's output commit.
+(one ``write`` + ``fsync``) only after the bucket's output commit.
 Resume = skip buckets whose manifest line exists → crash-safe
-exactly-once per bucket without any coordination service.
+exactly-once per bucket without any coordination service. A crash in the
+middle of an append leaves a torn final line: it is read as the
+uncommitted bucket it stands for (that bucket re-runs) and is cut off
+before the next append. An unparseable line anywhere else is corruption,
+not a torn append, and raises.
 
 The feature-hash is an order-insensitive distributed checksum
 (bit-XOR of per-row xxhash64 over the canonicalized row string) so a
@@ -73,22 +77,41 @@ def _manifest_path(checkpoint_dir: str) -> str:
     return os.path.join(checkpoint_dir, "manifest.jsonl")
 
 
+def _committed_end(data: bytes) -> int:
+    """Byte length of the manifest's complete lines. Every append ends in a
+    newline, so text after the last one is a torn append."""
+    return data.rfind(b"\n") + 1
+
+
 def read_manifest(checkpoint_dir: str) -> dict[int, dict]:
+    """Committed records by bucket; the newest line per bucket wins. A torn
+    final line is an uncommitted bucket and is left out; an unparseable
+    line before it raises ``ValueError`` naming the file and the line."""
     path = _manifest_path(checkpoint_dir)
+    if not os.path.exists(path):
+        return {}
+    with open(path, "rb") as f:
+        data = f.read()
     done: dict[int, dict] = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            for line in f:
-                if line.strip():
-                    rec = json.loads(line)
-                    done[rec["bucket"]] = rec
+    for i, line in enumerate(data[: _committed_end(data)].splitlines(), 1):
+        if line.strip():
+            try:
+                rec = json.loads(line)
+            except ValueError:
+                raise ValueError(
+                    f"{path}: line {i} is not a manifest record: {line[:80]!r}"
+                ) from None
+            done[rec["bucket"]] = rec
     return done
 
 
 def _append_manifest(checkpoint_dir: str, rec: dict) -> None:
-    path = _manifest_path(checkpoint_dir)
-    with open(path, "a" if os.path.exists(path) else "w") as f:
-        f.write(json.dumps(rec) + "\n")
+    """Append one record, first cutting off a torn final line so the record
+    starts a line of its own."""
+    with open(_manifest_path(checkpoint_dir), "a+b") as f:
+        f.seek(0)
+        f.truncate(_committed_end(f.read()))
+        f.write((json.dumps(rec) + "\n").encode())
         f.flush()
         os.fsync(f.fileno())
 

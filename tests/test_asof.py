@@ -3,6 +3,7 @@ operations/api.py:518-571), tie handling, tolerance, strategies, leakage."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import re
 
@@ -259,31 +260,148 @@ class TestProbePushdown:
         else:
             assert "LeftSemi" in plan
 
-    def test_local_lookup_runs_two_jobs(self, spark, pushdown_frames):
-        """A backward lookup of a 200-row driver-local entity frame is one
-        query of two jobs (shuffle map stage + result stage): collecting
-        the key set adds none. Counted per job group, like a tracer."""
-        import pandas as pd
-
-        entities = spark.createDataFrame(pd.DataFrame({
-            "conv_id": [("a", "b", "c")[i % 3] for i in range(200)],
-            "query_ts": [ts(i / 10) for i in range(200)],
-            "probe_id": [f"q{i}" for i in range(200)],
-        }))
+    def test_local_lookup_runs_one_job(self, spark, pushdown_frames):
+        """A backward lookup of a 200-row driver-local entity frame over a
+        small view is one job of one stage: collecting the key set adds
+        none, and the single-task plan has no shuffle. Counted per job
+        group, like a tracer."""
         sc = spark.sparkContext
         group = "asof-job-count-guard"
         sc.setJobGroup(group, "asof job-count guard")
         try:
             rows = asof_join(
-                entities, pushdown_frames["right"], direction="backward",
+                _entities(spark), pushdown_frames["right"], direction="backward",
                 tolerance="1 DAY", tiebreak="turn_idx", probe_pushdown=True,
             ).collect()
             jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+            stages = [s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds]
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         assert len(rows) == 200
-        assert len(jobs) <= 2, jobs
+        assert len(jobs) == 1, jobs
+        assert len(stages) == 1, stages
+
+    def test_lookup_build_py4j_budget(self, spark, pushdown_frames, monkeypatch):
+        """Building a 200-row driver-local lookup takes a fixed number of
+        Python-to-JVM round trips, however many rows or keys there are.
+        Memory-release messages are left out: py4j sends them for Python
+        objects freed earlier, whenever the garbage collector runs."""
+        right = pushdown_frames["right"]
+        kw = dict(direction="backward", tolerance="1 DAY", tiebreak="turn_idx",
+                  right_cols=["turn_idx", "val"], probe_pushdown=True)
+        asof_join(_entities(spark), right, **kw)  # first-use lookups
+        entities = _entities(spark)
+        client = spark.sparkContext._gateway._gateway_client
+        send, sent = client.send_command, []
+        monkeypatch.setattr(
+            client, "send_command", lambda cmd, *a, **k: (sent.append(cmd), send(cmd, *a, **k))[1]
+        )
+        asof_join(entities, right, **kw)
+        monkeypatch.undo()
+        calls = [c.split("\n")[:3] for c in sent if not c.startswith("m\n")]
+        assert len(calls) <= 24, calls
+
+
+def _entities(spark, n=200):
+    """A driver-local entity frame of ``n`` rows over keys a, b, c."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame({
+        "conv_id": [("a", "b", "c")[i % 3] for i in range(n)],
+        "query_ts": [ts(i / 10) for i in range(n)],
+        "probe_id": [f"q{i}" for i in range(n)],
+    }))
+
+
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value: str):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
+
+
+@pytest.fixture(scope="module")
+def edge_frames(spark, tmp_path_factory):
+    """A driver-local left and a stored right that hold every edge the
+    single-task plan must get right: null keys on both sides, a null right
+    timestamp, equal-ts ties whose tiebreak order differs from the input
+    order, right rows out of ts order, and probes exactly one tolerance
+    (10 minutes) from a right row on either side."""
+    import pandas as pd
+
+    d = tmp_path_factory.mktemp("edges")
+    spark.createDataFrame(
+        [
+            ("a", ts(30), 5, "a30"),
+            ("a", ts(10), 2, "a10_tb2"),
+            ("a", ts(10), 7, "a10_tb7"),   # tie at 10, wins on tiebreak
+            ("a", ts(10), 1, "a10_tb1"),
+            ("a", ts(20), 3, "a20"),
+            ("a", None, 9, "a_null_ts"),   # never a match
+            ("b", ts(50), 0, "b50"),
+            ("b", ts(40), 1, "b40"),
+            (None, ts(10), 8, "null_key"),  # never a match
+            ("z", ts(10), 0, "z10"),       # key not probed
+        ],
+        "conv_id string, ts timestamp, turn_idx int, val string",
+    ).write.parquet(str(d / "right"))
+    left = spark.createDataFrame(pd.DataFrame({
+        "conv_id": ["a", "a", "a", "a", "a", "a", "b", "b", "b", "c", None],
+        "query_ts": [ts(10), ts(15), ts(0), ts(40), ts(20), ts(25), ts(30), ts(45), ts(60),
+                     ts(10), ts(10)],
+        "probe_id": [f"p{i}" for i in range(11)],
+    }))
+    return left, spark.read.parquet(str(d / "right"))
+
+
+def _plan_nodes(df, name: str) -> int:
+    return len(re.findall(rf"\b{name}\b", _plan(df)))
+
+
+class TestSingleTaskLookup:
+    """A driver-local left over a right side within
+    ``spark.sql.autoBroadcastJoinThreshold`` is planned as one task (no
+    exchange); the shuffle plan it replaces must give the same rows."""
+
+    def test_small_right_plans_no_exchange(self, edge_frames):
+        left, right = edge_frames
+        out = asof_join(left, right, tiebreak="turn_idx", probe_pushdown=True)
+        assert _plan_nodes(out, "Exchange") == 0, _plan(out)
+        assert _plan_nodes(out, "Window") == 1, _plan(out)
+
+    def test_threshold_off_keeps_the_shuffle(self, spark, edge_frames):
+        left, right = edge_frames
+        with _broadcast_threshold(spark, "-1"):
+            out = asof_join(left, right, tiebreak="turn_idx", probe_pushdown=True)
+        assert _plan_nodes(out, "Exchange") == 1, _plan(out)
+
+    @pytest.mark.parametrize("pushdown", [True, False], ids=["pushdown", "plain"])
+    @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+    def test_equals_shuffle_plan(self, spark, edge_frames, direction, pushdown):
+        left, right = edge_frames
+        kw = dict(direction=direction, tolerance="10 minutes", tiebreak="turn_idx",
+                  probe_pushdown=pushdown)
+        one_task = asof_join(left, right, **kw)
+        with _broadcast_threshold(spark, "-1"):
+            shuffled = asof_join(left, right, **kw)
+        assert _plan_nodes(one_task, "Exchange") == 0
+        assert _plan_nodes(shuffled, "Exchange") == 1
+        assert one_task.columns == shuffled.columns
+        got, want = rows_by_probe(one_task), rows_by_probe(shuffled)
+        assert got == want
+        assert len(got) == 11
+        # the edges are exercised, not skipped
+        assert got["p10"]["val"] is None  # null left key
+        if direction == "backward":
+            assert got["p0"]["val"] == "a10_tb7"  # tie → max tiebreak
+            assert got["p1"]["val"] == "a10_tb7"  # 5 min after the tie
+            assert got["p3"]["val"] == "a30"      # exactly one tolerance back
+            assert got["p7"]["val"] == "b40"      # out-of-order right ts
 
 
 class TestSqlSplicing:

@@ -387,6 +387,33 @@ def test_probe_feature_name_collision_raises(spark):
         backfill_asof_fused(turns, probes)
 
 
+@pytest.mark.parametrize("guard", [None, 50, "auto"], ids=["off", "on", "auto"])
+def test_fused_odd_probe_columns(spark, guard):
+    """Probe columns are spliced into SQL text: a backtick in a name and a
+    struct whose field name holds a space must pass through every guard
+    path (``CAST(NULL AS struct<a b:int>)`` is not valid SQL), and each
+    probe's features must equal the guard-off output for plain names."""
+    t = gen_transcripts(spark, n_turns=600, n_convs=4, seed=5, skew=3.0)
+    plain = gen_probes(spark, t)
+    odd = plain.withColumn("p`id", F.col("probe_id")).withColumn(
+        "s", F.struct(F.length("probe_id").alias("a b"))
+    )
+    features = [c for c in backfill_asof_fused(t, plain).columns if c not in plain.columns]
+    want = {
+        r["probe_id"]: tuple(r[c] for c in features)
+        for r in backfill_asof_fused(t, plain, tolerance="1 DAY").collect()
+    }
+    got = backfill_asof_fused(
+        t, odd, tolerance="1 DAY", hot_conv_turns=guard, n_hot_buckets=4
+    )
+    assert got.columns == ["conv_id", *[c for c in odd.columns if c != "conv_id"], *features]
+    rows = got.collect()
+    assert len(rows) == len(want)
+    for r in rows:
+        assert r["p`id"] == r["probe_id"] and r["s"]["a b"] == len(r["probe_id"])
+        assert tuple(r[c] for c in features) == want[r["probe_id"]]
+
+
 def _jobs_during(spark, group, fn):
     """Run ``fn()`` under a fresh job group; return (result or exception,
     ids of the Spark jobs it launched)."""

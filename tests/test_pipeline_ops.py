@@ -562,6 +562,49 @@ class TestLineageResume:
             lambda d: d, t2, "conv_id", out, n_buckets=2, snapshot_id="snap-B"
         ) == []
 
+    def test_resume_after_torn_manifest_line(self, spark, tmp_path):
+        """A crash in the middle of a manifest append leaves a partial last
+        line. Resume treats it as the uncommitted bucket it stands for:
+        exactly that bucket re-runs, its record lands on a line of its own,
+        and the manifest's xor of bucket hashes equals the single-shot
+        checksum of the whole output."""
+        import functools
+        import os
+
+        from kgfarm_spark.sources.datagen import gen_transcripts
+
+        t = gen_transcripts(spark, n_turns=900, n_convs=12, seed=11)
+        out = str(tmp_path / "torn")
+        first = run_checkpointed(lambda d: d, t, "conv_id", out, n_buckets=3)
+        path = os.path.join(out, "manifest.jsonl")
+        with open(path, "rb") as f:
+            data = f.read()
+        last = data[: -1].rfind(b"\n") + 1
+        with open(path, "wb") as f:
+            f.write(data[: last + (len(data) - last) // 2])  # cut mid-line
+
+        assert sorted(read_manifest(out)) == sorted(r["bucket"] for r in first[:-1])
+        again = run_checkpointed(lambda d: d, t, "conv_id", out, n_buckets=3)
+        assert [r["bucket"] for r in again] == [first[-1]["bucket"]]
+        manifest = read_manifest(out)
+        assert sorted(manifest) == [0, 1, 2]
+        assert sum(r["rows"] for r in manifest.values()) == 900
+        xor = functools.reduce(lambda a, r: a ^ r["feature_hash"], manifest.values(), 0)
+        assert xor == feature_hash(read_checkpointed_output(spark, out, 3))
+        with open(path, "rb") as f:
+            assert len(f.read().splitlines()) == 3
+
+    def test_corrupt_interior_manifest_line_names_file_and_line(self, tmp_path):
+        """Only a final line can be a torn append; an unparseable line before
+        it is corruption and must not be skipped silently."""
+        import os
+
+        path = os.path.join(str(tmp_path), "manifest.jsonl")
+        with open(path, "w") as f:
+            f.write('{"bucket": 0}\n{"bucket": 1\n{"bucket": 2}\n')
+        with pytest.raises(ValueError, match=r"manifest\.jsonl: line 2"):
+            read_manifest(str(tmp_path))
+
 
 class TestStreaming:
     def test_stream_session_counts_match_batch(self, spark, tmp_path):

@@ -20,6 +20,7 @@ HEADLINE = [
     "flagship_backfill_asof",
     "flagship_backfill_auto",
     "asof_backward_latest",
+    "asof_local_lookup",
     "asof_interval_all",
     "backfill_features",
     "sessionize",
