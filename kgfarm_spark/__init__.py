@@ -7,8 +7,8 @@ freshness window, reference `operations/api.py:518-571`), windowed feature
 backfill (lag/lead, rolling aggregates, gap-based sessionize), column
 profiling + entity detection, cleaning (null normalization, fills,
 interpolation), transformations (scalers, encoders, unary transforms), and
-feature selection — all expressed as lazy DataFrame plans so Catalyst/AQE
-pick the physical strategy.
+feature selection — all expressed as lazy DataFrame plans whose physical
+plan Catalyst/AQE choose.
 """
 
 from kgfarm_spark.session import get_spark

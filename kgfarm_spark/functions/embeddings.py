@@ -48,6 +48,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgfarm_spark.operators.asof import _ident
+
 EMB_DIM = 300  # column_embeddings.py:4
 BIT_DIM = 32  # float32 bit decomposition (inference.py:65-66)
 MINHASH_PERMS = 512  # reference fidelity (inference.py:22); chunked kernel bounds memory
@@ -332,17 +334,21 @@ def string_column_embeddings(
 def melt_numeric(df: DataFrame, table_name: str, cols: list[str]) -> DataFrame:
     """Wide → long (table_name, column_name, value:double) for embedding.
     Column pruning keeps the scan narrow; the stack() is zero-shuffle."""
-    pairs = ", ".join(f"'{c}', cast(`{c}` as double)" for c in cols)
-    return df.selectExpr(
-        f"stack({len(cols)}, {pairs}) as (column_name, value)"
-    ).select(F.lit(table_name).alias("table_name"), "column_name", "value")
+    return _melt(df, table_name, cols, "double")
 
 
 def melt_strings(df: DataFrame, table_name: str, cols: list[str]) -> DataFrame:
-    pairs = ", ".join(f"'{c}', cast(`{c}` as string)" for c in cols)
-    return df.selectExpr(
-        f"stack({len(cols)}, {pairs}) as (column_name, value)"
-    ).select(F.lit(table_name).alias("table_name"), "column_name", "value")
+    return _melt(df, table_name, cols, "string")
+
+
+def _melt(df: DataFrame, table_name: str, cols: list[str], value_type: str) -> DataFrame:
+    """``stack`` built with the Column API: no column name is spliced
+    into SQL text."""
+    pairs = [e for c in cols for e in (F.lit(c), F.col(_ident(c)).cast(value_type))]
+    return df.select(
+        F.lit(table_name).alias("table_name"),
+        F.stack(F.lit(len(cols)), *pairs).alias("column_name", "value"),
+    )
 
 
 # ---------------------------------------------------------------------------

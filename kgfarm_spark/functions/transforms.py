@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kgfarm_spark.operators.asof import _ident
+
 EPS = 1e-4  # the reference's unary-transform epsilon (interface/apis.py:63-84)
 
 
@@ -69,12 +71,13 @@ def apply_minmax_scaler(df: DataFrame, params: dict) -> DataFrame:
 def fit_robust_scaler(df: DataFrame, cols: list[str], exact: bool = False) -> dict:
     """(x - median) / IQR (sklearn RobustScaler). percentile_approx by
     default (one-pass at scale); exact percentiles for parity tests."""
-    fn = "percentile" if exact else "percentile_approx"
+    fn = F.percentile if exact else F.percentile_approx
     aggs = []
     for c in cols:
-        aggs.append(F.expr(f"{fn}(`{c}`, 0.5)").alias(f"{c}__med"))
-        aggs.append(F.expr(f"{fn}(`{c}`, 0.25)").alias(f"{c}__q1"))
-        aggs.append(F.expr(f"{fn}(`{c}`, 0.75)").alias(f"{c}__q3"))
+        x = F.col(_ident(c))
+        aggs.append(fn(x, 0.5).alias(f"{c}__med"))
+        aggs.append(fn(x, 0.25).alias(f"{c}__q1"))
+        aggs.append(fn(x, 0.75).alias(f"{c}__q3"))
     row = df.agg(*aggs).first()
     return {
         c: {

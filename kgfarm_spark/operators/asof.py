@@ -16,34 +16,29 @@ Two result modes:
   row with ``r.ts ∈ [l.ts - tolerance, l.ts]`` (the reference keeps ties,
   strict ``<`` at api.py:551). A plain equi+range join.
 
-Two physical strategies for ``latest``:
-
-- ``'union_window'`` (default): tag both sides, union, one shuffle on the
-  key, then ``last(value, ignorenulls)`` over an ordered window carries the
-  most recent right payload onto each left row. Cost: ONE shuffle of
-  |L|+|R| rows, no fan-out, no join explosion — robust when a single left
-  timestamp matches thousands of right rows. This is the 100 TB path: it
-  shuffles each input exactly once on the conversation key (the same
-  partitioning downstream window features need, so the exchange is reused).
-  The whole plan (union, window, tolerance, output projection) is one SQL
-  statement, so building it costs one parse and one analyzer pass.
-  Point lookups skip the shuffle: when the left frame is driver-local
-  (``_driver_local``) and the right side's estimated size is within
-  ``spark.sql.autoBroadcastJoinThreshold`` (``_fits_one_task``, read from
-  the analyzed plan's statistics), the union carries a ``COALESCE(1)``
-  hint. Its single partition already satisfies the window's clustered
-  distribution, so scan, window and projection run as ONE job of one
-  stage and one task. Semantics are those of the shuffle plan; a
-  threshold of -1 turns the path off.
-- ``'merge_asof'``: cogrouped ``applyInPandas`` running ``pd.merge_asof``
-  per key bucket — Arrow-vectorized; useful when both sides are already
-  bucketed by the key and per-key data fits a pandas batch.
+``latest`` is planned as a union window: tag both sides, union, one
+shuffle on the key, then ``last(value, ignorenulls)`` over an ordered
+window carries the most recent right payload onto each left row. Cost:
+ONE shuffle of |L|+|R| rows, no fan-out, no join explosion — robust when
+a single left timestamp matches thousands of right rows. This is the
+100 TB path: it shuffles each input exactly once on the conversation key
+(the same partitioning downstream window features need, so the exchange
+is reused). The whole plan (union, window, tolerance, output projection)
+is one SQL statement, so building it costs one parse and one analyzer
+pass. Point lookups skip the shuffle: when the left frame is
+driver-local (``_driver_local``) and the right side's estimated size is
+within ``spark.sql.autoBroadcastJoinThreshold`` (``_fits_one_task``,
+read from the analyzed plan's statistics), the union carries a
+``COALESCE(1)`` hint. Its single partition already satisfies the
+window's clustered distribution, so scan, window and projection run as
+ONE job of one stage and one task. Semantics are those of the shuffle
+plan; a threshold of -1 turns the path off.
 
 Tie semantics (deterministic, oracle-checked): among right rows sharing the
-match timestamp, every direction and both strategies take the greatest
-``tiebreak`` value; ``nearest`` prefers the backward candidate on equal
-distance. Keys match as in an SQL equi join: a null key matches nothing,
-and a right row with a null timestamp is never a match.
+match timestamp, every direction takes the greatest ``tiebreak`` value;
+``nearest`` prefers the backward candidate on equal distance. Keys match
+as in an SQL equi join: a null key matches nothing, and a right row with a
+null timestamp is never a match.
 
 Zero temporal leakage by construction: a backward match can never read a
 right row with ``ts`` greater than the left timestamp (north_rule).
@@ -58,8 +53,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: interval units a tolerance may name — the ones both Spark's INTERVAL
-#: literal and ``pd.Timedelta`` (merge_asof strategy) accept
+#: interval units a tolerance or gap may name: the day-time units of
+#: Spark's INTERVAL literal (a month or year has no fixed length)
 _TOLERANCE = re.compile(
     r"\s*(\d+)\s+(MICROSECOND|MILLISECOND|SECOND|MINUTE|HOUR|DAY)S?\s*", re.I
 )
@@ -79,17 +74,18 @@ _KEY_ENCODERS = {
 }
 
 
-def _tolerance_expr(tolerance: str | None) -> str | None:
-    """Validate a tolerance spec like '10 days' / '1 HOUR' and return it as
+def _tolerance_expr(tolerance: str | None, name: str = "tolerance") -> str | None:
+    """Validate an interval spec like '10 days' / '1 HOUR' and return it as
     an INTERVAL literal. The result is spliced into SQL text, so anything
-    but ``<int> <unit>`` is rejected here rather than surfacing as a parse
-    error deep in plan construction."""
+    but ``<int> <unit>`` is rejected here, as a ``ValueError`` naming the
+    argument ``name``, rather than surfacing as a parse error deep in plan
+    construction."""
     if tolerance is None:
         return None
     m = _TOLERANCE.fullmatch(tolerance) if isinstance(tolerance, str) else None
     if m is None:
         raise ValueError(
-            f"tolerance must look like '<int> <unit>' with unit one of "
+            f"{name} must look like '<int> <unit>' with unit one of "
             f"MICROSECOND, MILLISECOND, SECOND, MINUTE, HOUR, DAY; got {tolerance!r}"
         )
     return f"INTERVAL {m.group(1)} {m.group(2).upper()}"
@@ -189,7 +185,6 @@ def asof_join(
     mode: str = "latest",
     right_cols: Sequence[str] | None = None,
     tiebreak: str | None = None,
-    strategy: str = "union_window",
     probe_pushdown: bool = False,
 ) -> DataFrame:
     """As-of join ``left`` (entity frame) against ``right`` (feature view).
@@ -208,12 +203,6 @@ def asof_join(
             non-ts columns). The matched right timestamp is always emitted
             as ``matched_ts``.
         tiebreak: right column ordering equal-ts matches (e.g. 'turn_idx').
-        strategy: 'union_window' | 'merge_asof' (latest mode only).
-            'union_window' plans a driver-local ``left`` over a ``right``
-            whose estimated size is within
-            ``spark.sql.autoBroadcastJoinThreshold`` as one task (one job,
-            one stage, no exchange); anything else takes the one-shuffle
-            plan. Both give the same rows.
         probe_pushdown: reduce the right side to the left frame's key set
             BEFORE the join/window shuffle (``keyset_reduce``).
             Exactness-preserving for every mode/direction (an as-of match
@@ -240,12 +229,6 @@ def asof_join(
     if mode != "latest":
         raise ValueError(f"unknown mode: {mode!r}")
 
-    if strategy == "merge_asof":
-        return _merge_asof_strategy(
-            left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak
-        )
-    if strategy != "union_window":
-        raise ValueError(f"unknown strategy: {strategy!r}")
     one_task = _fits_one_task(right) and (_driver_local(left) if local is None else local)
     return _union_window(
         left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak,
@@ -371,58 +354,3 @@ def _union_window(
         + [f"__m.{_ident(c)} AS {_ident(c)}" for c in right_cols]
     )
     return _sql(f"SELECT {out} FROM ({matched})", {lv: left, rv: right})
-
-
-# ---------------------------------------------------------------------------
-# latest via cogrouped pd.merge_asof (Arrow path)
-# ---------------------------------------------------------------------------
-
-
-def _merge_asof_strategy(left, right, keys, left_ts, right_ts, direction, tolerance, right_cols, tiebreak):
-    import pandas as pd  # local import: executors only
-
-    out_schema_fields = []
-    for c in left.columns:
-        out_schema_fields.append(f"{_ident(c)} {left.schema[c].dataType.simpleString()}")
-    out_schema_fields.append("`matched_ts` timestamp")
-    for c in right_cols:
-        out_schema_fields.append(f"{_ident(c)} {right.schema[c].dataType.simpleString()}")
-    out_schema = ", ".join(out_schema_fields)
-
-    tol_td = pd.Timedelta(tolerance) if tolerance is not None else None
-    l_cols = list(left.columns)
-    # same matching rule as union_window: null keys / timestamps never match
-    right = right.where(" AND ".join(f"{_ident(c)} IS NOT NULL" for c in (*keys, right_ts)))
-
-    def merge(l_pdf: "pd.DataFrame", r_pdf: "pd.DataFrame") -> "pd.DataFrame":
-        l_pdf = l_pdf.sort_values(left_ts, kind="mergesort")
-        if r_pdf.empty:
-            out = l_pdf.copy()
-            out["matched_ts"] = pd.NaT
-            for c in right_cols:
-                out[c] = None
-            return out[l_cols + ["matched_ts"] + list(right_cols)]
-        if tiebreak is not None:
-            # one row per ts, the max tiebreak, so every direction picks it
-            # (pd.merge_asof alone takes an input-order-dependent one)
-            r_pdf = r_pdf.sort_values(
-                [right_ts, tiebreak], kind="mergesort", na_position="first"
-            ).drop_duplicates(right_ts, keep="last")
-        r_pdf = r_pdf[[right_ts] + list(right_cols)].sort_values(right_ts, kind="mergesort")
-        r_pdf = r_pdf.rename(columns={right_ts: "matched_ts"})
-        out = pd.merge_asof(
-            l_pdf,
-            r_pdf,
-            left_on=left_ts,
-            right_on="matched_ts",
-            direction=direction,
-            tolerance=tol_td,
-            allow_exact_matches=True,
-        )
-        return out[l_cols + ["matched_ts"] + list(right_cols)]
-
-    return (
-        left.groupBy(*keys)
-        .cogroup(right.groupBy(*keys))
-        .applyInPandas(merge, schema=out_schema)
-    )

@@ -26,19 +26,23 @@ Leakage-free by construction: every window frame ends at the current
 row, and probe rows are ordered AFTER transcript rows at equal ts
 (inclusive backward semantics, reference api.py:551 strict ``<``).
 
+The features, and the partials, carry and combine of their bucketed
+form, are generated from the one spec table in ``cumulative``; this
+module only lays out the stream and cuts the buckets.
+
 Hot-conversation guard (``hot_conv_turns``): a per-key window puts each
 conversation in ONE task. For transcripts that is normally fine (a
 conversation is bounded by its length), but a pathological multi-million
 -turn conversation becomes a straggler. When ``hot_conv_turns`` is set,
 conversations whose unioned row count meets the threshold are split into
-event-time range buckets against their own quantile boundaries and the
+fixed-width event-time buckets over their own turn span and the
 cumulative window partitions by (key, bucket) with an exclusive prefix
-carry (every cumulative feature here is a prefix of an associative
-aggregate, so the decomposition is exact — pytest-pinned). Cold keys take
-bucket 0 and zero carries, so hot and cold share ONE window pass; the
-guard costs two extra passes over the union (per-key stats, hot-slice
-partials), both with tiny broadcastable outputs. Per-task rows for a hot
-conversation drop to ~|conv| / n_hot_buckets.
+carry (every cumulative feature is a prefix of an associative aggregate,
+so the decomposition is exact — pytest-pinned). Cold keys take bucket 0
+and no carry, so hot and cold share ONE window pass; the guard costs two
+extra passes (per-key stats over the union, hot-turn partials), both
+with tiny broadcastable outputs. Per-task rows for a hot conversation
+drop to ~|conv| / n_hot_buckets.
 
 ``hot_conv_turns='auto'`` decides the guard from the data: engage iff the
 largest unioned key group holds at least ``max(rows / n_cores, 2)`` rows
@@ -60,24 +64,19 @@ import struct
 from numbers import Integral
 
 from pyspark import InheritableThread
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kgfarm_spark.operators import cumulative
 from kgfarm_spark.operators.asof import _ident, _tolerance_expr, keyset_reduce
+from kgfarm_spark.operators.cumulative import CUMULATIVE, MATCHED_TS
 
-#: feature columns produced by the fused state pass (defines the output
-#: projection order)
-_FEATURES = [
-    "matched_ts",
-    "turns_so_far",
-    "tool_calls_so_far",
-    "text_len_sum",
-    "text_len_avg",
-    "text_len_max",
-    "user_turns_so_far",
-    "assistant_turns_so_far",
-]
+#: the fused state's features, in output order
+_SPEC = (MATCHED_TS, *CUMULATIVE)
+_FEATURES = [f.name for f in _SPEC]
+#: the order of the unioned stream: (ts, side, turn)
+_ORDER = ["__ts", "__side", "__tb"]
 
 #: fixed hash seed of the auto guard's count-min sketch (a given input
 #: always takes the same decision path)
@@ -94,42 +93,34 @@ def _union_frame(
 ) -> DataFrame:
     """Union probes into the transcript stream on the (key, ts) axis.
     Turns sort before probes at equal ts (__side 0 < 1 → inclusive
-    backward semantics); ``text`` is projected to its length BEFORE the
-    shuffle.
+    backward semantics) and carry the canonical row of the cumulative
+    features (``cumulative.turn_row``: ``text`` is projected to its length
+    BEFORE the shuffle). Each side's missing columns are NULLs typed by
+    ``unionByName`` from the other side (no type is spelled out in SQL
+    text), so a probe's canonical row is all NULL and contributes nothing.
 
     Built with ``selectExpr`` (whole projection parsed JVM-side in one
     round-trip): the per-column ``F.*`` form cost a few hundred py4j
     round-trips per construction, a measurable slice of the per-query
     wall at interactive scale (guide §1: measure — construction showed
     up in the profile, not the executors). The parsed expressions are
-    identical Catalyst nodes. Names are quoted with ``asof._ident``; the
-    turn side's probe columns are bare NULLs whose types ``unionByName``
-    widens to the probe side's (no type is spelled out in SQL text)."""
+    identical Catalyst nodes. Names are quoted with ``asof._ident``.
+    Text lengths are BIGINT, the type this output has always given
+    text_len_max."""
     turn_side = transcripts.selectExpr(
         _ident(key),
         f"{_ident(ts)} AS __ts",
         "0 AS __side",  # turns sort before probes at equal ts
         "CAST(turn_idx AS BIGINT) AS __tb",
-        "true AS __is_turn",
-        "CAST(length(text) AS BIGINT) AS __text_len",
-        "(tool IS NOT NULL) AS __has_tool",
-        "(role = 'user') AS __is_user",
-        "(role = 'assistant') AS __is_assistant",
-        *[f"NULL AS {_ident(f'__p_{c}')}" for c in probe_cols],
+        *cumulative.turn_row("BIGINT"),
     )
     probe_side = probes.selectExpr(
         _ident(key),
         f"{_ident(probe_ts)} AS __ts",
         "1 AS __side",
-        "CAST(NULL AS BIGINT) AS __tb",
-        "false AS __is_turn",
-        "CAST(NULL AS BIGINT) AS __text_len",
-        "CAST(NULL AS BOOLEAN) AS __has_tool",
-        "CAST(NULL AS BOOLEAN) AS __is_user",
-        "CAST(NULL AS BOOLEAN) AS __is_assistant",
         *[f"{_ident(c)} AS {_ident(f'__p_{c}')}" for c in probe_cols],
     )
-    return turn_side.unionByName(probe_side)
+    return turn_side.unionByName(probe_side, allowMissingColumns=True)
 
 
 def _fused_state(u: DataFrame, key: str) -> DataFrame:
@@ -142,24 +133,8 @@ def _fused_state(u: DataFrame, key: str) -> DataFrame:
     CollapseWindow rule → 8 sequential window passes instead of 1), and
     the whole projection crosses py4j once (construction cost — see
     ``_union_frame``)."""
-    ww = (
-        f"OVER (PARTITION BY {_ident(key)} ORDER BY __ts ASC, __side ASC, __tb ASC "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-    )
-    return u.selectExpr(
-        "*",
-        f"last(CASE WHEN __is_turn THEN __ts END, true) {ww} AS matched_ts",
-        f"sum(CAST(CASE WHEN __is_turn THEN 1 ELSE 0 END AS BIGINT)) {ww} AS turns_so_far",
-        f"coalesce(sum(CAST(CASE WHEN __has_tool THEN 1 ELSE 0 END AS BIGINT)) {ww}, 0)"
-        " AS tool_calls_so_far",
-        f"sum(CASE WHEN __is_turn THEN __text_len END) {ww} AS text_len_sum",
-        f"avg(CASE WHEN __is_turn THEN __text_len END) {ww} AS text_len_avg",
-        f"max(CASE WHEN __is_turn THEN __text_len END) {ww} AS text_len_max",
-        f"coalesce(sum(CAST(CASE WHEN __is_user THEN 1 ELSE 0 END AS BIGINT)) {ww}, 0)"
-        " AS user_turns_so_far",
-        f"coalesce(sum(CAST(CASE WHEN __is_assistant THEN 1 ELSE 0 END AS BIGINT)) {ww}, 0)"
-        " AS assistant_turns_so_far",
-    )
+    over = cumulative.frame([key], _ORDER)
+    return u.selectExpr("*", *cumulative.window(_SPEC, over))
 
 
 def _hot_bounds(
@@ -168,8 +143,7 @@ def _hot_bounds(
     ts: str,
     hot_conv_turns: int,
     n_buckets: int,
-    probes: DataFrame | None = None,
-    probe_ts: str | None = None,
+    probes: DataFrame,
 ) -> DataFrame:
     """ONE aggregate pass over (key, ts) — column-pruned at the scan —
     computing both hot-key detection (UNIONED row count ≥ threshold:
@@ -189,13 +163,11 @@ def _hot_bounds(
     quantiles; that only affects parallelism, never correctness (any
     monotone pure-function-of-ts cut gives an exact decomposition)."""
     tsd = F.col(ts).cast("timestamp").cast("double")
-    rows = transcripts.select(F.col(key), tsd.alias("__tsd"))
-    if probes is not None:
-        # probe rows count toward the straggler threshold but a NULL tsd
-        # keeps them out of the transcript-span min/max
-        rows = rows.unionByName(
-            probes.select(F.col(key), F.lit(None).cast("double").alias("__tsd"))
-        )
+    # probe rows count toward the straggler threshold but a NULL tsd
+    # keeps them out of the transcript-span min/max
+    rows = transcripts.select(F.col(key), tsd.alias("__tsd")).unionByName(
+        probes.select(F.col(key), F.lit(None).cast("double").alias("__tsd"))
+    )
     stats = (
         rows.groupBy(key)
         .agg(
@@ -218,7 +190,8 @@ def _bucket_col(tsd):
     """Clamped fixed-width time slot against the broadcast grid columns
     (__lo, __w, __nb) — pure codegen arithmetic, monotone in ts, equal ts
     always shares a bucket. Rows outside the key's turn span clamp to the
-    first/last bucket — still monotone, so still exact."""
+    first/last bucket — still monotone, so still exact. A row with no grid
+    (a cold key, or a degenerate span) takes bucket 0."""
     return F.when(F.col("__w").isNull(), F.lit(0)).otherwise(
         F.least(
             F.greatest(F.floor((tsd - F.col("__lo")) / F.col("__w")), F.lit(0)),
@@ -227,143 +200,51 @@ def _bucket_col(tsd):
     )
 
 
-def _hot_carry(
-    transcripts: DataFrame, key: str, ts: str, hot_bounds: DataFrame
-) -> DataFrame:
-    """Exclusive prefix carry per (hot key, bucket). Computed from the
-    TRANSCRIPTS side only: probe rows contribute zero/null to every
-    cumulative feature, so they cannot change any partial. The inner
-    broadcast join keeps only hot keys; output is exactly |hot keys| ·
-    n_buckets rows — tiny and broadcastable.
-
-    The carry is DENSIFIED to every bucket id 0..n_buckets-1 per hot key
-    (grid from the broadcast bounds, left-joined with the observed
-    partials): a probe can land in a turn-free time bucket of a hot
-    conversation (an activity gap), and that bucket must still inherit
-    the prefix state of all earlier buckets. Without the grid such a
-    probe found no carry row and read zeroed features."""
-    tsd = F.col(ts).cast("timestamp").cast("double")
-    base = transcripts.select(
-        F.col(key),
-        F.col(ts).alias("__t_ts"),
-        F.length("text").cast("long").alias("__tl"),
-        F.col("tool").isNotNull().alias("__ht"),
-        (F.col("role") == "user").alias("__iu"),
-        (F.col("role") == "assistant").alias("__ia"),
-        tsd.alias("__tsd"),
-    )
-    tagged = base.join(F.broadcast(hot_bounds), key).withColumn(
-        "__ob", _bucket_col(F.col("__tsd"))
-    )
-    partials = tagged.groupBy(key, "__ob").agg(
-        F.count(F.lit(1)).cast("long").alias("__pt_turns"),
-        F.sum(F.col("__ht").cast("long")).alias("__pt_tool"),
-        F.sum("__tl").alias("__pt_tls"),
-        F.count("__tl").alias("__pt_tlc"),
-        F.max("__tl").alias("__pt_tlm"),
-        F.sum(F.col("__iu").cast("long")).alias("__pt_user"),
-        F.sum(F.col("__ia").cast("long")).alias("__pt_asst"),
-        F.max("__t_ts").alias("__pt_lastts"),
-    )
-    dense = hot_bounds.select(
-        F.col(key),
-        F.explode(F.sequence(F.lit(0), F.col("__nb") - 1)).alias("__ob"),
-    ).withColumn("__ob", F.col("__ob").cast("int")).join(
-        partials, [key, "__ob"], "left"
-    )
-    wprev = (
-        Window.partitionBy(key).orderBy("__ob").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return dense.select(
-        key,
-        "__ob",
-        F.coalesce(F.sum("__pt_turns").over(wprev), F.lit(0)).alias("__c_turns"),
-        F.coalesce(F.sum("__pt_tool").over(wprev), F.lit(0)).alias("__c_tool"),
-        F.coalesce(F.sum("__pt_tls").over(wprev), F.lit(0)).alias("__c_tls"),
-        F.coalesce(F.sum("__pt_tlc").over(wprev), F.lit(0)).alias("__c_tlc"),
-        F.max("__pt_tlm").over(wprev).alias("__c_tlm"),
-        F.coalesce(F.sum("__pt_user").over(wprev), F.lit(0)).alias("__c_user"),
-        F.coalesce(F.sum("__pt_asst").over(wprev), F.lit(0)).alias("__c_asst"),
-        F.max("__pt_lastts").over(wprev).alias("__c_lastts"),
-    )
-
-
-def _fused_state_guarded(
-    u: DataFrame, key: str, hot_bounds: DataFrame, carry: DataFrame
-) -> DataFrame:
+def _fused_state_guarded(u: DataFrame, key: str, hot_bounds: DataFrame) -> DataFrame:
     """Exact twin of ``_fused_state`` with a hot-key straggler guard —
     ONE window pass for hot and cold keys alike.
 
     Hot rows get a fixed-width time-bucket id from their key's broadcast
     grid (``_hot_bounds``); cold keys get bucket 0. The cumulative window
     partitions by (key, bucket) — for cold keys that IS the plain per-key
-    window. The per-bucket prefix ``carry`` is broadcast-joined AFTER the
+    window. The per-bucket prefix carry is broadcast-joined AFTER the
     window (the shuffle+sort moves only the fixed-width union columns
-    plus one int, not nine carry longs per row) and coalesces to
-    zero/null for cold rows, making the combine expressions collapse to
-    the plain ones. Guard cost over the plain path: one column-pruned
-    (key, ts) stats pass and one transcripts-only partials pass, both
-    with tiny outputs."""
+    plus one int, not the carry columns) and is NULL for cold rows, so
+    the combine reduces to the in-bucket values there.
+
+    The carry is computed from the turns of hot keys only (the inner
+    broadcast join): probe rows contribute nothing to any partial. It is
+    DENSIFIED to every bucket id 0..n_buckets-1 per hot key (the grid
+    from the broadcast bounds, left-joined with the observed partials): a
+    probe can land in a turn-free time bucket of a hot conversation (an
+    activity gap), and that bucket must still inherit the prefix state of
+    all earlier buckets. Guard cost over the plain path: one
+    column-pruned (key, ts) stats pass and one turns-only partials pass,
+    both with tiny outputs."""
     tsd = F.col("__ts").cast("timestamp").cast("double")
+    hot_turns = (
+        u.filter(F.col("__side") == 0)
+        .join(F.broadcast(hot_bounds), key)
+        .withColumn("__ob", _bucket_col(tsd))
+    )
+    partials = hot_turns.groupBy(key, "__ob").agg(*map(F.expr, cumulative.parts(_SPEC)))
+    grid = hot_bounds.select(
+        F.col(key), F.explode(F.sequence(F.lit(0), F.col("__nb") - 1)).alias("__ob")
+    )
+    carry = grid.join(partials, [key, "__ob"], "left").selectExpr(
+        _ident(key), "__ob", *cumulative.carry(_SPEC, key)
+    )
     tagged = (
         u.join(F.broadcast(hot_bounds), key, "left")
-        .withColumn(
-            "__ob",
-            F.when(F.col("__lo").isNull(), F.lit(0)).otherwise(_bucket_col(tsd)),
-        )
+        .withColumn("__ob", _bucket_col(tsd))
         .drop("__lo", "__w", "__nb")
     )
-
-    is_turn1 = F.when(F.col("__is_turn"), F.lit(1)).otherwise(F.lit(0)).cast("long")
-    turn_len = F.when(F.col("__is_turn"), F.col("__text_len"))
-    tool1 = F.when(F.col("__has_tool"), 1).otherwise(0).cast("long")
-    user1 = F.when(F.col("__is_user"), 1).otherwise(0).cast("long")
-    asst1 = F.when(F.col("__is_assistant"), 1).otherwise(0).cast("long")
-
-    cum = (
-        Window.partitionBy(key, "__ob")
-        .orderBy(F.col("__ts").asc(), F.col("__side").asc(), F.col("__tb").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # in-bucket partials only — the carry combine happens after
+    over = cumulative.frame([key, "__ob"], _ORDER)
+    inner = tagged.selectExpr("*", *cumulative.parts(_SPEC, over))
+    return inner.join(F.broadcast(carry), [key, "__ob"], "left").selectExpr(
+        *map(_ident, u.columns), *cumulative.combine(_SPEC)
     )
-    # in-bucket cumulatives only — the carry combine happens after
-    inner = tagged.select(
-        "*",
-        F.last(F.when(F.col("__is_turn"), F.col("__ts")), ignorenulls=True)
-        .over(cum)
-        .alias("__i_lastts"),
-        F.sum(is_turn1).over(cum).alias("__i_turns"),
-        F.sum(tool1).over(cum).alias("__i_tool"),
-        F.sum(turn_len).over(cum).alias("__i_tls"),
-        F.count(turn_len).over(cum).alias("__i_tlc"),
-        F.max(turn_len).over(cum).alias("__i_tlm"),
-        F.sum(user1).over(cum).alias("__i_user"),
-        F.sum(asst1).over(cum).alias("__i_asst"),
-    )
-
-    # broadcast carry lookup post-window; cold rows (no carry match) take
-    # zero/null carries → the combine reduces to the plain expressions
-    joined = inner.join(F.broadcast(carry), [key, "__ob"], "left")
-    czero = lambda c: F.coalesce(F.col(c), F.lit(0))  # noqa: E731
-    tlc_total = F.col("__i_tlc") + czero("__c_tlc")
-    tls_total = F.coalesce(F.col("__i_tls"), F.lit(0)) + czero("__c_tls")
-    state = joined.select(
-        "*",
-        F.coalesce(F.col("__i_lastts"), F.col("__c_lastts")).alias("matched_ts"),
-        (F.col("__i_turns") + czero("__c_turns")).alias("turns_so_far"),
-        (F.coalesce(F.col("__i_tool"), F.lit(0)) + czero("__c_tool")).alias(
-            "tool_calls_so_far"
-        ),
-        F.when(tlc_total > 0, tls_total).alias("text_len_sum"),
-        F.when(tlc_total > 0, tls_total / tlc_total).alias("text_len_avg"),
-        F.greatest(F.col("__i_tlm"), F.col("__c_tlm")).alias("text_len_max"),
-        (F.coalesce(F.col("__i_user"), F.lit(0)) + czero("__c_user")).alias(
-            "user_turns_so_far"
-        ),
-        (F.coalesce(F.col("__i_asst"), F.lit(0)) + czero("__c_asst")).alias(
-            "assistant_turns_so_far"
-        ),
-    )
-    return state.select(*map(_ident, u.columns), *_FEATURES)
 
 
 def _engage_threshold(n_rows: int, n_cores: int) -> int:
@@ -521,9 +402,7 @@ def _resolved(state: DataFrame, key: str, probe_cols: list[str], tol_expr) -> Da
         *[f"{_ident(f'__p_{c}')} AS {_ident(c)}" for c in probe_cols],
         *[f"CASE WHEN {valid} THEN {c} END AS {c}" for c in _FEATURES],
     )
-    return out.withColumn(
-        "tool_call_rate", F.col("tool_calls_so_far") / F.col("turns_so_far")
-    )
+    return out.selectExpr("*", cumulative.TOOL_CALL_RATE)
 
 
 def backfill_asof_fused(
@@ -611,9 +490,5 @@ def backfill_asof_fused(
         if hot_conv_turns is None:
             return _resolved(_fused_state(u, key), key, probe_cols, tol_expr)
 
-    bounds = _hot_bounds(
-        transcripts, key, ts, hot_conv_turns, n_hot_buckets, probes, probe_ts
-    )
-    carry = _hot_carry(transcripts, key, ts, bounds)
-    state = _fused_state_guarded(u, key, bounds, carry)
-    return _resolved(state, key, probe_cols, tol_expr)
+    bounds = _hot_bounds(transcripts, key, ts, hot_conv_turns, n_hot_buckets, probes)
+    return _resolved(_fused_state_guarded(u, key, bounds), key, probe_cols, tol_expr)

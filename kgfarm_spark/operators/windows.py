@@ -22,16 +22,22 @@ overlap buckets), ``lag_lead_features(hot_safe=True)`` /
 (conv_id, turn_idx) axis — uniform hash), and the fused flagship via
 ``backfill_asof_fused(hot_conv_turns=...)``. All pinned equal to the
 plain windows by tests/test_hot_conv.py. The cross-conversation shuffle
-uses AQE skew handling (session.py).
+uses AQE skew handling (session.py). The cumulative features of
+``backfill_features`` (plain and bucketed) are generated from the spec
+table in ``cumulative``, which the fused backfill shares.
 All expressions are JVM-side (whole-stage codegen) — no Python in the
 hot path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.window import WindowSpec
+
+from kgfarm_spark.operators import cumulative
+from kgfarm_spark.operators.asof import _ident, _tolerance_expr
+from kgfarm_spark.operators.cumulative import CUMULATIVE
 
 #: canonical per-conversation ordering (input_hint: stable (conv_id,
 #: turn_idx) ordering; ts is monotone per conv but may tie across convs)
@@ -146,39 +152,30 @@ def rolling_aggregates(
             .withColumn("__ob", (F.floor(F.col(order) / F.lit(B)) + 1).cast("int"))
             .withColumn("__ghost", F.lit(True))
         )
-        u = tagged.unionByName(ghosts)
         w = (
             Window.partitionBy(key, "__ob")
             .orderBy(order)
             .rowsBetween(-n_turns, Window.currentRow)
         )
-        text_len = F.length("text")
-        out = u.select(
-            "*",
-            text_len.alias("text_len"),
-            F.avg(text_len).over(w).alias("roll_text_len_avg"),
-            F.max(text_len).over(w).alias("roll_text_len_max"),
-            F.sum(F.col("tool").isNotNull().cast("long")).over(w).alias("roll_tool_calls"),
-            F.sum((F.col("role") == "user").cast("long")).over(w).alias("roll_user_turns"),
-        )
-        feature_cols = [
-            "text_len", "roll_text_len_avg", "roll_text_len_max",
-            "roll_tool_calls", "roll_user_turns",
-        ]
-        return out.filter(~F.col("__ghost")).select(*df.columns, *feature_cols)
+        out = tagged.unionByName(ghosts).select("*", *_rolling(w))
+        return out.filter(~F.col("__ghost")).drop("__ob", "__ghost")
     w = turn_window(key, order).rowsBetween(-n_turns, Window.currentRow)
+    return df.select("*", *_rolling(w))
+
+
+def _rolling(w: WindowSpec) -> list[Column]:
+    """The per-turn ``text_len`` and the rolling features over the frame
+    ``w``, for ONE select over base columns → Catalyst emits a SINGLE
+    Window node (window exprs referencing withColumn-derived columns
+    interleave Projects that block the CollapseWindow rule)."""
     text_len = F.length("text")
-    # one select over base columns → Catalyst emits a SINGLE Window node
-    # (window exprs referencing withColumn-derived columns interleave
-    # Projects that block the CollapseWindow rule)
-    return df.select(
-        "*",
+    return [
         text_len.alias("text_len"),
         F.avg(text_len).over(w).alias("roll_text_len_avg"),
         F.max(text_len).over(w).alias("roll_text_len_max"),
         F.sum(F.col("tool").isNotNull().cast("long")).over(w).alias("roll_tool_calls"),
         F.sum((F.col("role") == "user").cast("long")).over(w).alias("roll_user_turns"),
-    )
+    ]
 
 
 def sessionize(
@@ -202,6 +199,7 @@ def sessionize(
     (Streaming twin: ``F.session_window(ts, gap)`` — streaming/stream.py.)
     """
     _check_emitted(df, ["session_id"], "sessionize")
+    interval = F.expr(_tolerance_expr(gap, "gap"))
     if max_turns_per_task is not None:
         B = max_turns_per_task
         if B < 1:
@@ -219,7 +217,7 @@ def sessionize(
             "__new_session",
             F.when(
                 F.col("__prev_ts").isNull()
-                | (F.col(ts) > F.col("__prev_ts") + F.expr(f"INTERVAL {gap}")),
+                | (F.col(ts) > F.col("__prev_ts") + interval),
                 1,
             ).otherwise(0),
         )
@@ -263,7 +261,7 @@ def sessionize(
     cum = turn_window(key, order).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     prev_ts = F.lag(ts).over(w)
     is_new = F.when(
-        prev_ts.isNull() | (F.col(ts) > prev_ts + F.expr(f"INTERVAL {gap}")), 1
+        prev_ts.isNull() | (F.col(ts) > prev_ts + interval), 1
     ).otherwise(0)
     return df.withColumn("__new_session", is_new).withColumn(
         "session_id", (F.sum("__new_session").over(cum) - 1).cast("int")
@@ -302,17 +300,7 @@ def role_transitions(
     )
 
 
-_BACKFILL_EMITTED = [
-    "text_len",
-    "turns_so_far",
-    "tool_calls_so_far",
-    "text_len_sum",
-    "text_len_avg",
-    "text_len_max",
-    "user_turns_so_far",
-    "assistant_turns_so_far",
-    "tool_call_rate",
-]
+_BACKFILL_EMITTED = ["text_len", *[f.name for f in CUMULATIVE], "tool_call_rate"]
 
 
 def backfill_features(
@@ -326,6 +314,7 @@ def backfill_features(
     turn counts, tool-usage frequencies, text-length statistics computed
     over ONLY the turns at-or-before the current one (frame ends at
     currentRow → zero temporal leakage by construction, north_rule).
+    The features are defined once, in ``cumulative.CUMULATIVE``.
 
     The output is a feature table keyed (conv_id, ts) that the as-of join
     resolves probes against — together they reproduce the reference's
@@ -347,24 +336,12 @@ def backfill_features(
         return backfill_features_bucketed(
             df, key=key, ts=ts, order=order, bucket_turns=max_turns_per_task
         )
-    cum = turn_window(key, order).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    text_len = F.length("text")
-    # single Window pass (see rolling_aggregates note); the derived
-    # tool_call_rate ratio is a scalar projection AFTER the window stage
-    out = df.select(
-        "*",
-        text_len.alias("text_len"),
-        F.count(F.lit(1)).over(cum).cast("long").alias("turns_so_far"),
-        F.sum(F.col("tool").isNotNull().cast("long")).over(cum).alias("tool_calls_so_far"),
-        F.sum(text_len).over(cum).alias("text_len_sum"),
-        F.avg(text_len).over(cum).alias("text_len_avg"),
-        F.max(text_len).over(cum).alias("text_len_max"),
-        F.sum((F.col("role") == "user").cast("long")).over(cum).alias("user_turns_so_far"),
-        F.sum((F.col("role") == "assistant").cast("long")).over(cum).alias("assistant_turns_so_far"),
-    )
-    return out.withColumn(
-        "tool_call_rate", F.col("tool_calls_so_far") / F.col("turns_so_far")
-    )
+    # single Window pass (see _rolling); the derived tool_call_rate ratio
+    # is a scalar projection AFTER the window stage
+    over = cumulative.frame([key], [order])
+    return df.selectExpr("*", *cumulative.turn_row()).selectExpr(
+        *map(_ident, df.columns), "__text_len AS text_len", *cumulative.window(CUMULATIVE, over)
+    ).selectExpr("*", cumulative.TOOL_CALL_RATE)
 
 
 def backfill_features_bucketed(
@@ -377,20 +354,15 @@ def backfill_features_bucketed(
     """Exact ``backfill_features`` via per-key order-bucket + prefix carry —
     the hot-conversation scale path (VERDICT r02 'Wrong #2').
 
-    Every cumulative feature here is a prefix aggregate of an associative
-    function (count/sum/max), so it decomposes exactly: split each
-    conversation into order buckets of ≤ ``bucket_turns`` rows
-    (``turn_idx`` is dense per conversation, so ``floor(turn_idx / B)`` is
-    a deterministic, value-pure bucket id), compute per-bucket partial
-    aggregates (one cheap shuffle whose output is |convs|·|buckets| tiny
-    rows), take the EXCLUSIVE prefix of the partials per key (a window
-    over ≤ rows/bucket_turns rows per key — never large), join the carry
-    back, and run the cumulative window PARTITIONED BY (key, bucket).
-    A 10M-turn conversation becomes 10M/B parallel tasks instead of one
-    straggler; conversations shorter than B land in a single bucket and
-    take the identical per-key path. Null text is handled exactly like
-    the window twin: sum/avg/max over text_len stay NULL until the first
-    non-null text (separate non-null partial count).
+    The bucket+carry decomposition of ``cumulative``, cut into order
+    buckets of ≤ ``bucket_turns`` rows (``turn_idx`` is dense per
+    conversation, so ``floor(turn_idx / B)`` is a deterministic,
+    value-pure bucket id). The partials are one cheap shuffle whose output
+    is |convs|·|buckets| tiny rows, and their prefix a window over ≤
+    rows/bucket_turns rows per key — never large. A 10M-turn conversation
+    becomes 10M/B parallel tasks instead of one straggler; conversations
+    shorter than B land in a single bucket and take the identical per-key
+    path.
     """
     if bucket_turns < 1:
         raise ValueError(
@@ -400,68 +372,20 @@ def backfill_features_bucketed(
             f"divide-by-zero at action time under ANSI)"
         )
     _check_emitted(df, _BACKFILL_EMITTED, "backfill_features_bucketed")
-    text_len = F.length("text")
-    tagged = df.withColumn(
+    rows = df.selectExpr("*", *cumulative.turn_row()).withColumn(
         "__ob", F.floor(F.col(order) / F.lit(bucket_turns)).cast("int")
     )
-    partials = tagged.groupBy(key, "__ob").agg(
-        F.count(F.lit(1)).cast("long").alias("__p_turns"),
-        F.sum(F.col("tool").isNotNull().cast("long")).alias("__p_tool"),
-        F.sum(text_len.cast("long")).alias("__p_tls"),
-        F.count(text_len).alias("__p_tlc"),
-        F.max(text_len).alias("__p_tlm"),
-        F.sum((F.col("role") == "user").cast("long")).alias("__p_user"),
-        F.sum((F.col("role") == "assistant").cast("long")).alias("__p_asst"),
-    )
-    wprev = (
-        Window.partitionBy(key)
-        .orderBy("__ob")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = partials.select(
-        key,
-        "__ob",
-        F.coalesce(F.sum("__p_turns").over(wprev), F.lit(0)).alias("__c_turns"),
-        F.coalesce(F.sum("__p_tool").over(wprev), F.lit(0)).alias("__c_tool"),
-        F.coalesce(F.sum("__p_tls").over(wprev), F.lit(0)).alias("__c_tls"),
-        F.coalesce(F.sum("__p_tlc").over(wprev), F.lit(0)).alias("__c_tlc"),
-        F.max("__p_tlm").over(wprev).alias("__c_tlm"),
-        F.coalesce(F.sum("__p_user").over(wprev), F.lit(0)).alias("__c_user"),
-        F.coalesce(F.sum("__p_asst").over(wprev), F.lit(0)).alias("__c_asst"),
-    )
+    partials = rows.groupBy(key, "__ob").agg(*map(F.expr, cumulative.parts(CUMULATIVE)))
+    carry = partials.selectExpr(_ident(key), "__ob", *cumulative.carry(CUMULATIVE, key))
     # equi-join on (key, bucket): AQE broadcasts the carry frame when it
     # fits; at extreme key cardinality it falls back to a shuffle join on
-    # the SAME (key, bucket) axis the window needs anyway
-    joined = tagged.join(carry, [key, "__ob"])
-    cum = (
-        Window.partitionBy(key, "__ob")
-        .orderBy(order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    tlc_total = F.count(text_len).over(cum) + F.col("__c_tlc")
-    tls_total = F.coalesce(F.sum(text_len.cast("long")).over(cum), F.lit(0)) + F.col("__c_tls")
-    state = joined.select(
-        "*",
-        text_len.alias("text_len"),
-        (F.count(F.lit(1)).over(cum).cast("long") + F.col("__c_turns")).alias("turns_so_far"),
-        (
-            F.sum(F.col("tool").isNotNull().cast("long")).over(cum) + F.col("__c_tool")
-        ).alias("tool_calls_so_far"),
-        F.when(tlc_total > 0, tls_total).alias("text_len_sum"),
-        F.when(tlc_total > 0, tls_total / tlc_total).alias("text_len_avg"),
-        F.greatest(F.max(text_len).over(cum), F.col("__c_tlm")).alias("text_len_max"),
-        (
-            F.sum((F.col("role") == "user").cast("long")).over(cum) + F.col("__c_user")
-        ).alias("user_turns_so_far"),
-        (
-            F.sum((F.col("role") == "assistant").cast("long")).over(cum) + F.col("__c_asst")
-        ).alias("assistant_turns_so_far"),
-    )
-    feature_cols = [
-        "text_len", "turns_so_far", "tool_calls_so_far", "text_len_sum",
-        "text_len_avg", "text_len_max", "user_turns_so_far", "assistant_turns_so_far",
-    ]
-    out = state.select(*df.columns, *feature_cols)
-    return out.withColumn(
-        "tool_call_rate", F.col("tool_calls_so_far") / F.col("turns_so_far")
-    )
+    # the SAME (key, bucket) axis the window needs anyway. Never force a
+    # broadcast: the carry has a row per (conversation, bucket) for EVERY
+    # conversation. Every (key, bucket) of ``rows`` has its carry row.
+    over = cumulative.frame([key, "__ob"], [order])
+    inner = rows.join(carry, [key, "__ob"]).selectExpr("*", *cumulative.parts(CUMULATIVE, over))
+    return inner.selectExpr(
+        *map(_ident, df.columns),
+        "__text_len AS text_len",
+        *cumulative.combine(CUMULATIVE),
+    ).selectExpr("*", cumulative.TOOL_CALL_RATE)

@@ -160,9 +160,10 @@ def transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataFrame twin of TRANSCRIPTS_SQL (kept in exact semantic lockstep).
 
     The row_number window partitions by the ``conv_id`` EXPRESSION rather
-    than ``user_id``: the two induce identical row groups (user_id 0..n
-    with n ≪ 10^6 here, so ``'conv_' || lpad(user_id, 6, '0')`` is
-    injective — pinned by tests/test_transcripts_derivation.py), and
+    than ``user_id``: the two induce identical row groups because
+    ``'conv_' || lpad(user_id, 6, '0')`` is injective on [0, 10^6), and a
+    ``user_id`` outside that range raises an error naming it (pinned by
+    tests/test_transcripts_derivation.py), and
     partitioning the derivation on the key every downstream
     per-conversation window/join needs lets Catalyst's alias-aware
     partitioning propagation satisfy their ClusteredDistribution without
@@ -180,10 +181,18 @@ def _build_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inline expression) — the window partitioning survives as
     # hashpartitioning(conv_id) only when the partition key is the same
     # attribute downstream operators cluster on.
+    # lpad truncates: an id outside [0, 10^6) would share a conv_id (and a
+    # turn_idx sequence) with another user, so it raises instead
+    uid = F.col("user_id")
     base = ev.select(
-        F.concat(F.lit("conv_"), F.lpad(F.col("user_id").cast("string"), 6, "0")).alias(
-            "conv_id"
-        ),
+        F.when(
+            (uid < 0) | (uid >= 1_000_000),
+            F.raise_error(
+                F.concat(F.lit("user_id outside [0, 10^6): "), uid.cast("string"))
+            ),
+        )
+        .otherwise(F.concat(F.lit("conv_"), F.lpad(uid.cast("string"), 6, "0")))
+        .alias("conv_id"),
         "ts",
         "event_id",
         "event_type",

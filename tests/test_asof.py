@@ -1,5 +1,5 @@
 """As-of join semantics: reference parity (J2 interval windows,
-operations/api.py:518-571), tie handling, tolerance, strategies, leakage."""
+operations/api.py:518-571), tie handling, tolerance, leakage."""
 
 from __future__ import annotations
 
@@ -144,24 +144,12 @@ class TestAllInWindow:
         assert got == [("p1", "r_a5"), ("p1", "r_a5b"), ("p2", "r_a5"), ("p2", "r_a5b")]
 
 
-class TestMergeAsofStrategy:
-    def test_matches_union_window(self, tiny):
-        left, right = tiny
-        a = asof_join(left, right, on="conv_id", left_ts="query_ts", right_ts="ts",
-                      direction="backward", tolerance="30 MINUTE",
-                      right_cols=["val"], tiebreak="turn_idx", strategy="union_window")
-        b = asof_join(left, right, on="conv_id", left_ts="query_ts", right_ts="ts",
-                      direction="backward", tolerance="30 MINUTE",
-                      right_cols=["val"], tiebreak="turn_idx", strategy="merge_asof")
-        ka = {r["probe_id"]: (r["matched_ts"], r["val"]) for r in a.collect()}
-        kb = {r["probe_id"]: (r["matched_ts"], r["val"]) for r in b.collect()}
-        assert ka == kb
-
+class TestTiebreak:
     @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
     def test_tiebreak_wins_whatever_the_input_order(self, spark, direction):
-        """Equal-ts right rows arrive max-tiebreak FIRST (one partition, so
-        the cogroup sees them in that order): both strategies must still
-        pick the greatest tiebreak, as the module docstring promises."""
+        """Equal-ts right rows arrive max-tiebreak FIRST (one partition):
+        every direction must still pick the greatest tiebreak, as the
+        module docstring promises."""
         left = spark.createDataFrame(
             [("a", ts(6), "back"), ("a", ts(4), "fwd"), ("a", ts(5), "exact")],
             "conv_id string, query_ts timestamp, probe_id string",
@@ -170,16 +158,15 @@ class TestMergeAsofStrategy:
             [("a", ts(5), 1, "r_hi"), ("a", ts(5), 0, "r_lo")],
             "conv_id string, ts timestamp, turn_idx int, val string",
         ).coalesce(1)
-        for strategy in ("union_window", "merge_asof"):
-            out = asof_join(left, right, direction=direction, tiebreak="turn_idx",
-                            right_cols=["val"], strategy=strategy)
-            got = {r["probe_id"]: r["val"] for r in out.collect()}
-            want = {"back": "r_hi", "fwd": "r_hi", "exact": "r_hi"}
-            if direction == "backward":
-                want["fwd"] = None
-            elif direction == "forward":
-                want["back"] = None
-            assert got == want, strategy
+        out = asof_join(left, right, direction=direction, tiebreak="turn_idx",
+                        right_cols=["val"])
+        got = {r["probe_id"]: r["val"] for r in out.collect()}
+        want = {"back": "r_hi", "fwd": "r_hi", "exact": "r_hi"}
+        if direction == "backward":
+            want["fwd"] = None
+        elif direction == "forward":
+            want["back"] = None
+        assert got == want
 
 
 @pytest.fixture(scope="module")

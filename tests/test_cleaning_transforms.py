@@ -589,3 +589,17 @@ def test_bucket_args_validated_everywhere(spark):
     clash = df.withColumn("__qb", F.lit(1))
     with pytest.raises(ValueError, match="__qb"):
         quantile_rank_transform(clash, ["x"])
+
+
+@pytest.mark.parametrize("exact", [True, False], ids=["percentile", "percentile_approx"])
+def test_robust_scaler_backtick_column_name(spark, exact):
+    """A backtick in a column name used to be spliced into SQL text
+    (ParseException); the fit must equal a plain-named copy's."""
+    from kgfarm_spark.functions.transforms import fit_robust_scaler
+
+    df = spark.createDataFrame(
+        [(float(i), float(i)) for i in [1, 2, 3, 5, 8, 13, 21]], "`a``b` double, plain double"
+    )
+    got = fit_robust_scaler(df, ["a`b"], exact=exact)["a`b"]
+    assert got == fit_robust_scaler(df, ["plain"], exact=exact)["plain"]
+    assert got["median"] == 5.0

@@ -273,3 +273,17 @@ def test_ann_query_collect_guard(spark):
             sim.cosine_topk_twophase(corpus, queries, k=2).collect()
     finally:
         sim.MAX_DRIVER_QUERIES = old
+
+
+def test_melt_quote_in_column_name(spark):
+    """A quote in a column name used to be spliced into the stack() SQL
+    (ParseException); the melt must equal a plain-named copy's."""
+    from kgfarm_spark.functions.embeddings import melt_strings
+
+    df = spark.createDataFrame([(1.5, "x"), (None, "y")], "`o'b` double, `s'q` string")
+    plain = df.toDF("ob", "sq")
+    for melt, odd, name in ((melt_numeric, "o'b", "ob"), (melt_strings, "s'q", "sq")):
+        got = [tuple(r) for r in melt(df, "t", [odd]).collect()]
+        want = [("t", odd, r["value"]) for r in melt(plain, "t", [name]).collect()]
+        assert sorted(got, key=repr) == sorted(want, key=repr)
+        assert len(got) == 2

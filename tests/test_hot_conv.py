@@ -88,6 +88,81 @@ def test_fused_hot_guard_equals_plain(spark):
     assert n_hot >= 1
 
 
+def test_fused_hot_guard_null_text_first_bucket(spark):
+    """The null-text fixture of test_bucketed_backfill_null_text_and_tool_carry
+    through the time-bucket cut: c1 is hot and its first bucket holds
+    only NULL text, so a probe after the fourth turn must still read
+    NULL text_len_sum/avg/max, equal to the guard-off output."""
+    base = dt.datetime(2024, 1, 1)
+    rows = [
+        (
+            "c1",
+            i,
+            "user" if i % 2 == 0 else "assistant",
+            None if i < 4 else f"text {i} {'x' * i}",
+            "search" if i % 3 == 0 else None,
+            base + dt.timedelta(minutes=i),
+        )
+        for i in range(10)
+    ]
+    rows.append(("c2", 0, "user", None, None, base))
+    rows.append(("c2", 1, "assistant", "hi", None, base + dt.timedelta(minutes=1)))
+    t = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    probes = spark.createDataFrame(
+        [("c1", base + dt.timedelta(minutes=m, seconds=30), f"p{m}") for m in range(10)]
+        + [("c2", base, "q0")],
+        "conv_id string, query_ts timestamp, probe_id string",
+    )
+    plain = backfill_asof_fused(t, probes)
+    guarded = backfill_asof_fused(t, probes, hot_conv_turns=5, n_hot_buckets=4)
+    assert _frames_equal(plain, guarded)
+    r = guarded.filter(F.col("probe_id") == "p3").first()
+    assert r["turns_so_far"] == 4
+    assert r["text_len_sum"] is None and r["text_len_avg"] is None and r["text_len_max"] is None
+
+
+_BACKFILL_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp, "
+    "text_len int, turns_so_far bigint, tool_calls_so_far bigint, text_len_sum bigint, "
+    "text_len_avg double, text_len_max int, user_turns_so_far bigint, "
+    "assistant_turns_so_far bigint, tool_call_rate double"
+)
+_FUSED_SCHEMA = (
+    "conv_id string, query_ts timestamp, probe_id string, matched_ts timestamp, "
+    "turns_so_far bigint, tool_calls_so_far bigint, text_len_sum bigint, "
+    "text_len_avg double, text_len_max bigint, user_turns_so_far bigint, "
+    "assistant_turns_so_far bigint, tool_call_rate double"
+)
+
+
+@pytest.mark.parametrize(
+    "build, schema",
+    [
+        (lambda t, p: backfill_features(t), _BACKFILL_SCHEMA),
+        (lambda t, p: backfill_features(t, max_turns_per_task=3), _BACKFILL_SCHEMA),
+        # ts is passed through, never read
+        (
+            lambda t, p: backfill_features(t.drop("ts")),
+            _BACKFILL_SCHEMA.replace(" ts timestamp,", ""),
+        ),
+        (lambda t, p: backfill_asof_fused(t, p), _FUSED_SCHEMA),
+        (lambda t, p: backfill_asof_fused(t, p, hot_conv_turns=50, n_hot_buckets=4), _FUSED_SCHEMA),
+        (lambda t, p: backfill_asof_fused(t, p, hot_conv_turns="auto"), _FUSED_SCHEMA),
+    ],
+    ids=["backfill", "backfill-bucketed", "backfill-no-ts", "fused-off", "fused-on", "fused-auto"],
+)
+def test_output_schema(spark, build, schema):
+    """Names, order and types of each backfill output (oracle parity casts
+    text_len columns, so it does not pin them): text_len and text_len_max
+    are int in backfill_features, text_len_max is bigint in the fused
+    output."""
+    t = gen_transcripts(spark, n_turns=600, n_convs=4, seed=5, skew=3.0)
+    df = build(t, gen_probes(spark, t))
+    assert ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema) == schema
+
+
 def test_fused_hot_guard_no_hot_keys_is_identity(spark):
     t = gen_transcripts(spark, n_turns=2_000, n_convs=100, seed=3, skew=1.0)
     probes = gen_probes(spark, t)

@@ -109,3 +109,32 @@ def test_probes_schema_matches_union_schema(spark):
         "timestamp_ntz",
         "string",
     ]
+
+
+def _events(spark, path, user_ids):
+    import datetime as dt
+
+    spark.createDataFrame(
+        [
+            (i, dt.datetime(2024, 1, 1, 0, i), uid, "click", 1.0, "p")
+            for i, uid in enumerate(user_ids)
+        ],
+        "event_id long, ts timestamp, user_id long, event_type string, value double, "
+        "props string",
+    ).write.parquet(f"{path}/events.parquet")
+    return str(path)
+
+
+@pytest.mark.parametrize("user_ids", [[100_000, 1_000_000], [-1, 7]], ids=["10^6", "negative"])
+def test_transcripts_rejects_user_id_out_of_range(spark, tmp_path, user_ids):
+    """lpad(user_id, 6, '0') maps 1000000 and 100000 to the same conv_id,
+    which would merge two users into one turn_idx sequence: such an id
+    raises, naming user_id."""
+    with pytest.raises(Exception, match="user_id"):
+        transcripts(spark, _events(spark, tmp_path, user_ids)).collect()
+
+
+def test_transcripts_conv_id_in_range(spark, tmp_path):
+    sf = _events(spark, tmp_path, [0, 42, 999_999, None])
+    got = {r["conv_id"] for r in transcripts(spark, sf).collect()}
+    assert got == {None, "conv_000000", "conv_000042", "conv_999999"}

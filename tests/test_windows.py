@@ -127,3 +127,23 @@ def test_windows_review_regressions(spark):
         backfill_features(rolling_aggregates(t))
     with pytest.raises(ValueError, match="collide"):
         sessionize(sessionize(t))
+
+
+@pytest.mark.parametrize("max_turns_per_task", [None, 100], ids=["plain", "bucketed"])
+def test_sessionize_bad_gap_names_the_argument(spark, max_turns_per_task):
+    """``gap`` is spliced into an INTERVAL literal: a spec the interval
+    parser rejects is a ValueError naming ``gap``, raised before any job."""
+    df = spark.createDataFrame(
+        [("a", 0, ts(0), "user", "x", None)],
+        "conv_id string, turn_idx int, ts timestamp, role string, text string, tool string",
+    )
+    sc = spark.sparkContext
+    group = f"sessionize-bad-gap-{max_turns_per_task}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="gap"):
+            sessionize(df, gap="30 fortnights", max_turns_per_task=max_turns_per_task)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

@@ -19,10 +19,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 HEADLINE = [
     "flagship_backfill_asof",
     "flagship_backfill_auto",
+    "flagship_hot_guard",
     "asof_backward_latest",
     "asof_local_lookup",
     "asof_interval_all",
     "backfill_features",
+    "backfill_features_hot",
     "sessionize",
     "rolling_aggregates",
     "dedup_minhash_lsh",
