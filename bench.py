@@ -916,35 +916,6 @@ def run_corpus_scale() -> dict:
             out_rec[f"{meth}_docs_per_sec"] = round(n_docs / dt)
         return out_rec
 
-    def _online() -> dict:
-        from kgfarm_spark.streaming.online import (
-            fit_curation_model,
-            score_with_model,
-        )
-
-        t0 = time.monotonic()
-        model = fit_curation_model(docs, max_vocab=1_000_000)
-        fit_sec = round(time.monotonic() - t0, 1)
-        t1 = time.monotonic()
-        _noop(
-            score_with_model(docs, model).select(
-                "doc_id", "n_words", "mean_logprob", "bucket"
-            )
-        )
-        apply_sec = round(time.monotonic() - t1, 1)
-        return {
-            "fit_sec": fit_sec,
-            "apply_sec": apply_sec,
-            "apply_docs_per_sec": round(n_docs / apply_sec),
-            "vocab": len(model.vocab),
-            "note": (
-                "apply = stateless Arrow path (zero shuffle); synthetic "
-                "corpus vocabulary is small so the broadcast dict is tiny "
-                "and lookup hit rate is unrealistically cache-friendly — "
-                "read apply_sec as the per-row scoring floor"
-            ),
-        }
-
     def _bloom_incremental() -> dict:
         """r06: cross-shard Bloom dedup — the 5M-doc corpus plays the
         history, a derived 2M-doc shard (half verbatim dups, half novel)
@@ -1064,7 +1035,6 @@ def run_corpus_scale() -> dict:
         "materialize_sequences": _materialize,
         "gopher_repetition_full": _gopher_rep_full,
         "bpe_apply": _bpe_apply,
-        "online_score_frozen": _online,
         "dedup_incremental_bloom": _bloom_incremental,
         "quality_classifier": _quality_classifier,
         "wordpiece_tokenizer": _wordpiece,
@@ -1577,7 +1547,7 @@ def run_stream_scale(cpus: int = 8) -> dict:
         }
 
     out: dict = {"turns": n_turns, "probes": n_probes, "cpus": cpus}
-    # SPARK_GRAFT_STREAM_ONLY="curate_stream" re-benches a subset (the
+    # SPARK_GRAFT_STREAM_ONLY="stream_asof_latest" re-benches a subset (the
     # SPARK_GRAFT_CORPUS_ONLY pattern)
     only = {
         x for x in (os.environ.get("SPARK_GRAFT_STREAM_ONLY") or "").split(",") if x
@@ -1649,57 +1619,6 @@ def run_stream_scale(cpus: int = 8) -> dict:
                 "note": "join + per-probe max agg (two stateful ops); output "
                         "one row per closed probe vs the interval twin's fan-out",
             }
-
-        if not _want("curate_stream"):
-            return out
-        # ingest-time curation: model fit OFFLINE on the 1M reference
-        # corpus (the production pattern — fit on a snapshot, apply to
-        # the firehose), then the full curate_stream chain over the 5M
-        # corpus; the fingerprint dedup is the only state store
-        from pyspark.sql import functions as F
-
-        from kgfarm_spark.streaming.online import curate_stream, fit_curation_model
-
-        ensure_llm_data()
-        t0 = time.monotonic()
-        model = fit_curation_model(
-            spark.read.parquet(DOCS_SCALE_DIR), max_vocab=1_000_000
-        )
-        fit_sec = round(time.monotonic() - t0, 1)
-        dschema = spark.read.parquet(DOCS_DIR).schema
-        n_docs = spark.read.parquet(DOCS_DIR).count()
-        d_stream = (
-            spark.readStream.schema(dschema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(DOCS_DIR)
-            .withColumn(
-                "ts",
-                F.to_timestamp(F.lit("2026-01-01 00:00:00"))
-                + F.make_interval(secs=(F.col("doc_id") % 3600).cast("double")),
-            )
-        )
-        wall, prog = drive(
-            curate_stream(
-                d_stream,
-                model,
-                watermark="1 hour",
-                # synthetic 'w12345'-shaped words: relax the digit and
-                # stopword rules exactly like the batch curate() bench
-                # (the measurement target is the chain's cost)
-                gate_kw={"max_digit_ratio": 1.0, "min_stopword_hits": 0},
-            ),
-            os.path.join(base, "curate_stream"),
-        )
-        out["curate_stream"] = {
-            "sec": wall,
-            "docs": n_docs,
-            "docs_per_sec": round(n_docs / wall, 1),
-            "fit_sec_1m_ref": fit_sec,
-            **state_summary(prog),
-            "note": "gopher gate + fingerprint dedup-within-watermark + "
-                    "frozen CCNet select; state = fingerprints inside the "
-                    "watermark horizon only",
-        }
     finally:
         shutil.rmtree(base, ignore_errors=True)
         spark.stop()

@@ -24,20 +24,10 @@ from kgfarm_spark.operators.windows import (
 )
 from kgfarm_spark.pipeline import engineer_features, run_auto_pipeline
 from kgfarm_spark.curation import curate
-from kgfarm_spark.streaming.online import (
-    CurationModel,
-    curate_stream,
-    fit_curation_model,
-    score_with_model,
-)
 from kgfarm_spark.ml import evaluate_model, train_model
 
 __all__ = [
     "curate",
-    "CurationModel",
-    "curate_stream",
-    "fit_curation_model",
-    "score_with_model",
     "get_spark",
     "FeatureFarm",
     "asof_join",

@@ -652,39 +652,6 @@ class FeatureFarm:
 
         return bpe_train(docs, text_col, n_merges, **kw)
 
-    # ---- multimodal columns ------------------------------------------------
-    def media_features(self, media: DataFrame, real: bool = True, **kw) -> DataFrame:
-        """Arrow-batched feature extraction over a binary media column
-        (multimodal.extract_features). ``real=True`` magic-byte
-        dispatches the native kernels (BMP/PPM/PNG/JPEG images, PCM WAV
-        audio); ``real=False`` uses the deterministic hash extractor for
-        undecodable payloads."""
-        from kgfarm_spark.operators.multimodal import extract_features
-
-        return extract_features(media, fake_features=not real, **kw)
-
-    def resize_media(self, media: DataFrame, height: int, width: int, **kw) -> DataFrame:
-        """Distributed image resize: decode → nearest/bilinear resample →
-        lossless re-encode (multimodal.resize_media)."""
-        from kgfarm_spark.operators.multimodal import resize_media as _rm
-
-        return _rm(media, height, width, **kw)
-
-    def sample_video_frames(self, media: DataFrame, every_nth: int = 10,
-                            decode: bool = False, **kw) -> DataFrame:
-        """Frame sampling over video rows: the JVM-side index plan
-        (multimodal.sample_frames), or with ``decode=True`` the REAL
-        selective MJPEG-AVI decode of exactly those frames
-        (multimodal.decode_sampled_frames)."""
-        from kgfarm_spark.operators.multimodal import (
-            decode_sampled_frames,
-            sample_frames,
-        )
-
-        if decode:
-            return decode_sampled_frames(media, every_nth, **kw)
-        return sample_frames(media, every_nth)
-
     def train_wordpiece(
         self, docs: DataFrame, text_col: str = "text", n_merges: int = 10, **kw
     ):

@@ -211,57 +211,6 @@ def q_quantile_transform_apply(spark: SparkSession, sf: str) -> DataFrame:
     return out.select("c_custkey", F.round("c_acctbal", 4).alias("bal_qtile"))
 
 
-@register("multimodal_features")  # rows-only: binary-payload UDF plumbing
-def q_multimodal(spark: SparkSession, sf: str) -> DataFrame:
-    """Opaque-binary media columns → Arrow-batched feature extraction +
-    JVM-side frame sampling. Since round 5 the image half runs the REAL
-    pure-numpy decode → stat-feature kernel (multimodal.py:
-    decode_image_numpy); since round 6 the image table is fmt='mixed' —
-    BMP / zlib-COMPRESSED PNG (stdlib-inflate decoder,
-    multimodal.decode_png) / lossy baseline JPEG (Huffman+IDCT decoder,
-    jpeg.decode_jpeg) cycling by id; late-r06 the AUDIO leg is real too
-    (RIFF/PCM WAV decode + spectral/amplitude feature kernel,
-    multimodal.decode_wav/audio_stat_features — magic-byte dispatched in
-    the same real-kernel scan). The remaining hash extractor covers
-    video + non-WAV audio (those codecs genuinely need external
-    libraries). Deterministic synth tables, independent of sf."""
-    from kgfarm_spark.operators.multimodal import (
-        extract_features,
-        sample_frames,
-        synth_bmp_media_table,
-        synth_media_table,
-        synth_wav_media_table,
-    )
-
-    media = synth_media_table(spark, n=150, seed=42)
-    bmp = synth_bmp_media_table(spark, n=50, seed=42, fmt="mixed")
-    wav = synth_wav_media_table(spark, n=30, seed=42)
-    feats = (
-        extract_features(media)
-        .unionByName(
-            extract_features(
-                bmp.unionByName(
-                    wav.withColumn("media_id", F.col("media_id") + 500)
-                ),
-                fake_features=False,
-            ).withColumn("media_id", F.col("media_id") + 1000)
-        )
-        .select(
-            "media_id",
-            "kind",
-            "n_bytes",
-            F.round(F.col("features")[0], 6).alias("f0"),
-            F.size("features").alias("dim"),
-        )
-    )
-    frames = (
-        sample_frames(media, every_nth=25)
-        .groupBy("media_id")
-        .agg(F.count(F.lit(1)).alias("n_sampled_frames"))
-    )
-    return feats.join(frames, "media_id", "left").orderBy("media_id")
-
-
 _E2E_ORACLE = """
 WITH frame AS (
   SELECT o.o_orderkey, o.o_totalprice, c.c_acctbal, o.o_orderstatus,

@@ -1153,62 +1153,6 @@ def q_ccnet_buckets(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "online_score_frozen",
-    r"""
-WITH occ AS (
-  SELECT doc_id, unnest(list_filter(string_split_regex(coalesce(text, ''), '\s+'),
-                                    x -> length(x) > 0)) AS w
-  FROM documents
-),
-census AS (SELECT w, count(*) AS cnt FROM occ GROUP BY 1),
-tot AS (SELECT sum(cnt) AS n FROM census),
-per AS (
-  SELECT occ.doc_id,
-         CAST(count(*) AS BIGINT) AS n_words,
-         sum(ln(census.cnt / tot.n)) AS lp
-  FROM occ JOIN census ON occ.w = census.w CROSS JOIN tot
-  GROUP BY 1
-),
-scored AS (
-  SELECT d.doc_id AS doc_id,
-         COALESCE(p.n_words, 0) AS n_words,
-         round(COALESCE(p.lp / p.n_words, 0.0), 6) AS mean_logprob
-  FROM documents d LEFT JOIN per p USING (doc_id)
-),
-ranked AS (
-  SELECT doc_id, n_words, mean_logprob,
-         percent_rank() OVER (ORDER BY mean_logprob) AS pr
-  FROM scored WHERE n_words > 0
-)
-SELECT doc_id, n_words, mean_logprob,
-       CASE WHEN pr >= 0.666667 THEN 'head'
-            WHEN pr >= 0.333333 THEN 'middle'
-            ELSE 'tail' END AS bucket
-FROM ranked
-UNION ALL
-SELECT doc_id, n_words, mean_logprob, 'tail' AS bucket
-FROM scored WHERE n_words = 0
-""",
-)
-def q_online_score_frozen(spark: SparkSession, sf: str) -> DataFrame:
-    """Online-curation frozen-model apply (streaming/online.py): fit the
-    unigram census + CCNet thresholds on the corpus, FREEZE them, then
-    score every document through the stateless Arrow apply path (JVM
-    xxhash64 -> broadcast vocab lookup -> frozen-threshold bucket). The
-    oracle recomputes census/ranks DIRECTLY in SQL — hash equality
-    proves the fit->freeze->apply round trip loses nothing (percent_rank
-    is monotone in score, so threshold-compare reproduces rank buckets
-    exactly, ties included)."""
-    from kgfarm_spark.streaming.online import fit_curation_model, score_with_model
-
-    docs = load_table(spark, sf, "documents").select("doc_id", "text")
-    model = fit_curation_model(docs, max_vocab=None)
-    return score_with_model(docs, model).select(
-        "doc_id", "n_words", "mean_logprob", "bucket"
-    )
-
-
-@register(
     "dsir_importance",
     r"""
 WITH occ AS (

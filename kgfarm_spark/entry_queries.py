@@ -766,7 +766,6 @@ _DEFERRED_PAST_DRIVER_CAP = [
                                 # pack_sequences; md5-uniform shared with dsir_resample
     "ffill_bfill_tool",         # r05 driver-green; cleaning family in-window via
                                 # fill_median_mode + interpolate_series returning
-    # late-r06: online_score_frozen (frozen-model streaming apply) enters;
     # dedup_lines_corpus defers — r05 driver-green, line-dedup kernel
     # pytest-pinned, corpus-dedup family in-window via dedup_minhash_lsh,
     # dedup_keep_best, dedup_exact, duplicate_ngram_spans:
@@ -860,9 +859,9 @@ _DEFERRED_PAST_DRIVER_CAP = [
     # late-r06 (5th rotation): hashed_embedding (feature-hashing text →
     # vector bridge, sparse-form content oracle) enters; one defers:
     "ccnet_buckets",          # r05 driver-green; LM family keeps
-                              # kn3_logprob + dsir_importance +
-                              # online_score_frozen (which replays the
-                              # ccnet bucket thresholds) in-window
+                              # kn3_logprob + dsir_importance in-window,
+                              # and the tercile split is pytest-pinned
+                              # (test_pipeline_ops::TestCCNetBuckets)
     # late-r06 (6th rotation): ngram_novelty (per-doc novelty vs a
     # corpus-sized reference — the shuffle-join sibling) enters; the
     # broadcast sibling defers with the SAME shingle machinery staying

@@ -21,9 +21,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kgfarm_spark.operators.asof import _ident
+
 #: interface/apis.py:103-108
 NULL_WORD_TOKENS = ("none", "n/a", "na", "nan", "missing")
 NULL_LITERAL_TOKENS = ("?", "", " ")
+
+
+def _col(name: str) -> Column:
+    """The column named ``name``, whatever characters it holds (``F.col``
+    alone parses dots and rejects a backtick)."""
+    return F.col(_ident(name))
 
 
 def normalize_null_tokens(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -37,10 +45,10 @@ def normalize_null_tokens(df: DataFrame, cols: list[str] | None = None) -> DataF
         cols = [c for c, t in df.dtypes if t == "string"]
     out = df
     for c in cols:
-        is_nullish = F.lower(F.col(c)).isin(*NULL_WORD_TOKENS) | F.col(c).isin(
+        is_nullish = F.lower(_col(c)).isin(*NULL_WORD_TOKENS) | _col(c).isin(
             *NULL_LITERAL_TOKENS
         )
-        out = out.withColumn(c, F.when(is_nullish, F.lit(None)).otherwise(F.col(c)))
+        out = out.withColumn(c, F.when(is_nullish, F.lit(None)).otherwise(_col(c)))
     return out
 
 
@@ -48,11 +56,11 @@ def null_scan(df: DataFrame) -> DataFrame:
     """Per-column missing counts, columns with missing>0, sorted desc —
     reference A1 (operations/api.py:685-699). One aggregate pass."""
     row = df.agg(
-        *[F.sum(F.col(c).isNull().cast("long")).alias(c) for c in df.columns]
+        *[F.sum(_col(c).isNull().cast("long")).alias(c) for c in df.columns]
     )
     pairs = F.array(
         *[
-            F.struct(F.lit(c).alias("column_name"), F.col(c).alias("missing_count"))
+            F.struct(F.lit(c).alias("column_name"), _col(c).alias("missing_count"))
             for c in df.columns
         ]
     )
@@ -74,13 +82,13 @@ def fill_stats(
     (reference A4/A5: df.mean()/df.median()/Series.mode()[0]). ``exact``
     uses interpolated exact percentiles (pandas median parity) instead of
     the one-pass sketch — parity tests only; the sketch is the scale path."""
-    pctl = "percentile" if exact else "percentile_approx"
+    pctl = F.percentile if exact else F.percentile_approx
     stats: dict[str, float | str] = {}
     if numeric_cols:
         aggs = []
         for c in numeric_cols:
-            aggs.append(F.avg(c).alias(f"{c}__mean"))
-            aggs.append(F.expr(f"{pctl}(`{c}`, 0.5)").alias(f"{c}__median"))
+            aggs.append(F.avg(_col(c)).alias(f"{c}__mean"))
+            aggs.append(pctl(_col(c), 0.5).alias(f"{c}__median"))
         row = df.agg(*aggs).first()
         for c in numeric_cols:
             stats[f"{c}__mean"] = row[f"{c}__mean"]
@@ -96,10 +104,10 @@ def fill_stats(
     other_cats = [c for c in (categorical_cols or []) if c not in string_cats]
     for c in other_cats:
         top = (
-            df.filter(F.col(c).isNotNull())
-            .groupBy(c)
+            df.filter(_col(c).isNotNull())
+            .groupBy(_col(c))
             .agg(F.count(F.lit(1)).alias("__n"))
-            .orderBy(F.col("__n").desc(), F.col(c).asc())
+            .orderBy(F.col("__n").desc(), _col(c).asc())
             .first()
         )
         stats[f"{c}__mode"] = top[c] if top is not None else None
@@ -114,7 +122,7 @@ def fill_stats(
                     *[
                         F.struct(
                             F.lit(c).alias("__col"),
-                            F.col(c).cast("string").alias("__val"),
+                            _col(c).cast("string").alias("__val"),
                         )
                         for c in categorical_cols
                     ]
@@ -177,18 +185,18 @@ def fill_nulls(
     for c in numeric_cols:
         v = stats[f"{c}__{'mean' if numeric_strategy == 'mean' else 'median'}"]
         if v is not None:
-            out = out.withColumn(c, F.coalesce(F.col(c), F.lit(v)))
+            out = out.withColumn(c, F.coalesce(_col(c), F.lit(v)))
     for c in categorical_cols:
         v = stats[f"{c}__mode"]
         if v is not None:
-            out = out.withColumn(c, F.coalesce(F.col(c), F.lit(v)))
+            out = out.withColumn(c, F.coalesce(_col(c), F.lit(v)))
     return out
 
 
 def _order_window(key: str | None, order: str):
     if key:
-        return Window.partitionBy(key).orderBy(order)
-    return Window.partitionBy().orderBy(order)
+        return Window.partitionBy(_col(key)).orderBy(_col(order))
+    return Window.partitionBy().orderBy(_col(order))
 
 
 def _order_buckets(df: DataFrame, order: str, n_buckets: int | None = None):
@@ -209,12 +217,9 @@ def _order_buckets(df: DataFrame, order: str, n_buckets: int | None = None):
     spark = df.sparkSession
     P = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     qs = [i / P for i in range(1, P)]
-    qlist = "array(" + ",".join(str(q) for q in qs) + ")"
-    bounds = df.agg(
-        F.expr(f"percentile_approx(`{order}`, {qlist}, 10000)").alias("b")
-    ).first()["b"]
+    bounds = df.agg(F.percentile_approx(_col(order), qs, 10000).alias("b")).first()["b"]
     uniq = sorted(set(b for b in (bounds or []) if b is not None))
-    return df.withColumn("__ob", _range_bucket_expr(F.col(order), uniq))
+    return df.withColumn("__ob", _range_bucket_expr(_col(order), uniq))
 
 
 def _unkeyed_fill(df: DataFrame, cols: list[str], order: str, forward: bool) -> DataFrame:
@@ -233,7 +238,8 @@ def _unkeyed_fill(df: DataFrame, cols: list[str], order: str, forward: bool) -> 
         .agg(
             *[
                 F.expr(
-                    f"{agg_fn}(`{c}`, `{order}`) FILTER (WHERE `{c}` IS NOT NULL)"
+                    f"{agg_fn}({_ident(c)}, {_ident(order)}) "
+                    f"FILTER (WHERE {_ident(c)} IS NOT NULL)"
                 ).alias(c)
                 for c in cols
             ]
@@ -252,12 +258,12 @@ def _unkeyed_fill(df: DataFrame, cols: list[str], order: str, forward: bool) -> 
             if v is not None:
                 state[i] = v
     fields = ", ".join(
-        f"`__carry_{c}` {dict(df.dtypes)[c]}" for c in cols
+        f"{_ident('__carry_' + c)} {dict(df.dtypes)[c]}" for c in cols
     )
     carry_df = spark.createDataFrame(
         [(b, *carry_in[b]) for b in buckets], f"__ob int, {fields}"
     )
-    w = Window.partitionBy("__ob").orderBy(order)
+    w = Window.partitionBy("__ob").orderBy(_col(order))
     w = (
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         if forward
@@ -266,16 +272,15 @@ def _unkeyed_fill(df: DataFrame, cols: list[str], order: str, forward: bool) -> 
     out = tagged.join(F.broadcast(carry_df), "__ob")
     in_bucket = F.last if forward else F.first
     out = out.select(
-        *[c for c in df.columns if c not in cols],
+        *[_col(c) for c in df.columns if c not in cols],
         *[
             F.coalesce(
-                in_bucket(F.col(c), ignorenulls=True).over(w), F.col(f"__carry_{c}")
+                in_bucket(_col(c), ignorenulls=True).over(w), _col(f"__carry_{c}")
             ).alias(c)
             for c in cols
         ],
-        "__ob",
     )
-    return out.drop("__ob").select(df.columns)
+    return out.select(*map(_col, df.columns))
 
 
 def ffill(df: DataFrame, cols: list[str], key: str | None, order: str) -> DataFrame:
@@ -287,7 +292,7 @@ def ffill(df: DataFrame, cols: list[str], key: str | None, order: str) -> DataFr
     w = _order_window(key, order).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     out = df
     for c in cols:
-        out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
+        out = out.withColumn(c, F.last(_col(c), ignorenulls=True).over(w))
     return out
 
 
@@ -299,7 +304,7 @@ def bfill(df: DataFrame, cols: list[str], key: str | None, order: str) -> DataFr
     w = _order_window(key, order).rowsBetween(Window.currentRow, Window.unboundedFollowing)
     out = df
     for c in cols:
-        out = out.withColumn(c, F.first(c, ignorenulls=True).over(w))
+        out = out.withColumn(c, F.first(_col(c), ignorenulls=True).over(w))
     return out
 
 
@@ -335,7 +340,7 @@ def interpolate_linear(
     out = df.withColumn("__pos", F.row_number().over(wn).cast("double"))
 
     for c in cols:
-        val = F.col(c).cast("double")
+        val = _col(c).cast("double")
         prev_v = F.last(val, ignorenulls=True).over(wb)
         prev_p = F.last(F.when(val.isNotNull(), F.col("__pos")), ignorenulls=True).over(wb)
         next_v = F.first(val, ignorenulls=True).over(wf)
@@ -363,15 +368,16 @@ def _unkeyed_interpolate(
     window result when order values are unique."""
     spark = df.sparkSession
     tagged = _order_buckets(df, order)
-    w_in = Window.partitionBy("__ob").orderBy(order)
+    w_in = Window.partitionBy("__ob").orderBy(_col(order))
     pos_df = tagged.withColumn("__ipos", F.row_number().over(w_in).cast("double"))
 
     aggs = [F.count(F.lit(1)).alias("__cnt")]
     for c in cols:
-        nn = f"FILTER (WHERE `{c}` IS NOT NULL)"
-        aggs.append(F.expr(f"max_by(CAST(`{c}` AS DOUBLE), __ipos) {nn}").alias(f"lv_{c}"))
+        q = _ident(c)
+        nn = f"FILTER (WHERE {q} IS NOT NULL)"
+        aggs.append(F.expr(f"max_by(CAST({q} AS DOUBLE), __ipos) {nn}").alias(f"lv_{c}"))
         aggs.append(F.expr(f"max_by(__ipos, __ipos) {nn}").alias(f"lp_{c}"))
-        aggs.append(F.expr(f"min_by(CAST(`{c}` AS DOUBLE), __ipos) {nn}").alias(f"fv_{c}"))
+        aggs.append(F.expr(f"min_by(CAST({q} AS DOUBLE), __ipos) {nn}").alias(f"fv_{c}"))
         aggs.append(F.expr(f"min_by(__ipos, __ipos) {nn}").alias(f"fp_{c}"))
     rows = {r["__ob"]: r for r in pos_df.groupBy("__ob").agg(*aggs).collect()}
     buckets = sorted(rows)
@@ -406,7 +412,7 @@ def _unkeyed_interpolate(
             (b, float(offsets[b]), *[carry[b][k] for k in carry_cols])
             for b in buckets
         ],
-        "__ob int, __off double, " + ", ".join(f"`__{k}` double" for k in carry_cols),
+        "__ob int, __off double, " + ", ".join(f"{_ident('__' + k)} double" for k in carry_cols),
     )
 
     wb = w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -415,16 +421,16 @@ def _unkeyed_interpolate(
         "__gpos", F.col("__ipos") + F.col("__off")
     )
     for c in cols:
-        val = F.col(c).cast("double")
-        prev_v = F.coalesce(F.last(val, ignorenulls=True).over(wb), F.col(f"__pv_{c}"))
+        val = _col(c).cast("double")
+        prev_v = F.coalesce(F.last(val, ignorenulls=True).over(wb), _col(f"__pv_{c}"))
         prev_p = F.coalesce(
             F.last(F.when(val.isNotNull(), F.col("__gpos")), ignorenulls=True).over(wb),
-            F.col(f"__pp_{c}"),
+            _col(f"__pp_{c}"),
         )
-        next_v = F.coalesce(F.first(val, ignorenulls=True).over(wf), F.col(f"__nv_{c}"))
+        next_v = F.coalesce(F.first(val, ignorenulls=True).over(wf), _col(f"__nv_{c}"))
         next_p = F.coalesce(
             F.first(F.when(val.isNotNull(), F.col("__gpos")), ignorenulls=True).over(wf),
-            F.col(f"__np_{c}"),
+            _col(f"__np_{c}"),
         )
         interior = prev_v + (next_v - prev_v) * (F.col("__gpos") - prev_p) / (next_p - prev_p)
         filled = (
@@ -436,7 +442,7 @@ def _unkeyed_interpolate(
             filled = F.coalesce(filled, next_v)
         out = out.withColumn(c, filled)
     drop = ["__ipos", "__off", "__gpos", "__ob"] + [f"__{k}" for k in carry_cols]
-    return out.drop(*drop).select(df.columns)
+    return out.drop(*drop).select(*map(_col, df.columns))
 
 
 def drop_outlier_rows_iqr(
@@ -449,11 +455,11 @@ def drop_outlier_rows_iqr(
     exact percentiles for parity tests; the sketch is the scale path).
     Exact LOF semantics live in ``cleaning.lof_mask`` below (grouped
     pandas-UDF kernel, size-guarded)."""
-    pctl = "percentile" if exact else "percentile_approx"
+    pctl = F.percentile if exact else F.percentile_approx
     aggs = []
     for c in cols:
-        aggs.append(F.expr(f"{pctl}(`{c}`, 0.25)").alias(f"{c}__q1"))
-        aggs.append(F.expr(f"{pctl}(`{c}`, 0.75)").alias(f"{c}__q3"))
+        aggs.append(pctl(_col(c), 0.25).alias(f"{c}__q1"))
+        aggs.append(pctl(_col(c), 0.75).alias(f"{c}__q3"))
     row = df.agg(*aggs).first()
     cond = F.lit(True)
     for c in cols:
@@ -462,8 +468,8 @@ def drop_outlier_rows_iqr(
             continue
         iqr = q3 - q1
         cond = cond & (
-            F.col(c).isNull()
-            | F.col(c).between(q1 - k * iqr, q3 + k * iqr)
+            _col(c).isNull()
+            | _col(c).between(q1 - k * iqr, q3 + k * iqr)
         )
     return df.filter(cond)
 

@@ -149,17 +149,17 @@ def quantile_rank_transform(
     spark = df.sparkSession
     P = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     qs = [i / P for i in range(1, P)]
-    qlist = "array(" + ",".join(str(q) for q in qs) + ")"
+    col = {c: F.col(_ident(c)) for c in cols}
 
     # action 1: all columns' boundaries in one aggregate pass
     bounds_row = df.agg(
-        *[F.expr(f"percentile_approx(`{c}`, {qlist}, 10000)").alias(c) for c in cols]
+        *[F.percentile_approx(col[c], qs, 10000).alias(c) for c in cols]
     ).first()
     uniq = {
         c: sorted(set(b for b in (bounds_row[c] or []) if b is not None))
         for c in cols
     }
-    buckets = {c: _range_bucket_expr(F.col(c), uniq[c]) for c in cols}
+    buckets = {c: _range_bucket_expr(col[c], uniq[c]) for c in cols}
 
     # action 2: all columns' bucket counts via one melted groupBy
     melted = df.select(
@@ -185,7 +185,7 @@ def quantile_rank_transform(
             offsets.append((b, acc))
             acc += counts[c][b]
         off_df = spark.createDataFrame(offsets, "__qb INT, __qoff BIGINT")
-        w = Window.partitionBy("__qb").orderBy(F.col(c).asc())
+        w = Window.partitionBy("__qb").orderBy(col[c].asc())
         out = (
             out.withColumn("__qb", buckets[c])
             .join(F.broadcast(off_df), "__qb")
@@ -209,10 +209,7 @@ def fit_quantile_transformer(
     rows never influence the mapping (north_rule zero-leakage; fixes the
     reference's fit-on-concat quirks, apis.py:328-331)."""
     qs = [i / (n_quantiles - 1) for i in range(n_quantiles)]
-    qlist = "array(" + ",".join(str(q) for q in qs) + ")"
-    aggs = [
-        F.expr(f"percentile_approx(`{c}`, {qlist}, 10000)").alias(c) for c in cols
-    ]
+    aggs = [F.percentile_approx(F.col(_ident(c)), qs, 10000).alias(c) for c in cols]
     row = df.agg(*aggs).first()
     # All-null column → percentile_approx returns NULL → grid None (apply
     # leaves the column unchanged). Constant column → degenerate one-point

@@ -40,8 +40,7 @@ Scale shape at 100 TB: the feature build is explode → (doc, bucket)
 groupBy — the unigram-census shape, linear shuffles only. Each GD
 iteration shuffles the feature frame twice; iterations are O(10), and
 the gradient collect is dim-sized (model-sized), never corpus-sized.
-Scoring is one broadcast join + one doc aggregate, the
-``online.score_with_model`` shape.
+Scoring is one broadcast join + one doc aggregate.
 """
 
 from __future__ import annotations

@@ -21,8 +21,16 @@ overlap buckets), ``lag_lead_features(hot_safe=True)`` /
 ``role_transitions(hot_safe=True)`` (shifted equi-joins on the dense
 (conv_id, turn_idx) axis — uniform hash), and the fused flagship via
 ``backfill_asof_fused(hot_conv_turns=...)``. All pinned equal to the
-plain windows by tests/test_hot_conv.py. The cross-conversation shuffle
-uses AQE skew handling (session.py). The cumulative features of
+plain windows by tests/test_hot_conv.py, NULL keys included: the joined
+variants join, group and partition on ``struct(key)`` (``_KEY``), which
+is never NULL and equal for two NULL keys, so the NULL-key turns form
+one conversation, as in the plain window and the oracle SQL. (A
+null-safe ``<=>`` join would do the same but hash on a rewritten key,
+and the window after it would need one more shuffle.) Every variant
+assumes the documented precondition that ``turn_idx`` is dense and
+non-NULL per conversation; a NULL ``turn_idx`` breaks it, and the
+variants then differ from the plain window. The cross-conversation
+shuffle uses AQE skew handling (session.py). The cumulative features of
 ``backfill_features`` (plain and bucketed) are generated from the spec
 table in ``cumulative``, which the fused backfill shares.
 All expressions are JVM-side (whole-stage codegen) — no Python in the
@@ -53,6 +61,14 @@ def _check_emitted(df: DataFrame, names: list[str], op: str) -> None:
             f"{op}: input columns {clash} collide with the emitted feature "
             f"names — rename them first"
         )
+
+
+#: the joined variants' conversation key: ``struct(key)``, never NULL
+_KEY = "__key"
+
+
+def _with_key(df: DataFrame, key: str) -> DataFrame:
+    return df.withColumn(_KEY, F.struct(F.col(_ident(key))))
 
 
 def turn_window(key: str = "conv_id", order: str = "turn_idx") -> WindowSpec:
@@ -105,14 +121,15 @@ def _lag_lead_joined(
             shifts.setdefault(n, []).append((c, f"{c}_lag_{n}"))
             shifts.setdefault(-n, []).append((c, f"{c}_lead_{n}"))
             aliases.extend([f"{c}_lag_{n}", f"{c}_lead_{n}"])
-    out = df
+    keyed = _with_key(df, key)
+    out = keyed
     for shift, pairs in shifts.items():
-        shifted = df.select(
-            F.col(key),
+        shifted = keyed.select(
+            _KEY,
             (F.col(order) + F.lit(shift)).alias(order),
             *[F.col(c).alias(a) for c, a in pairs],
         )
-        out = out.join(shifted, [key, order], "left")
+        out = out.join(shifted, [_KEY, order], "left")
     return out.select(*df.columns, *aliases)
 
 
@@ -208,12 +225,13 @@ def sessionize(
                 f"bucket size inverts the order buckets and the prefix carry "
                 f"would accumulate LATER turns into earlier rows"
             )
-        prev = df.select(
-            F.col(key),
+        keyed = _with_key(df, key)
+        prev = keyed.select(
+            _KEY,
             (F.col(order) + 1).alias(order),
             F.col(ts).alias("__prev_ts"),
         )
-        flagged = df.join(prev, [key, order], "left").withColumn(
+        flagged = keyed.join(prev, [_KEY, order], "left").withColumn(
             "__new_session",
             F.when(
                 F.col("__prev_ts").isNull()
@@ -225,21 +243,21 @@ def sessionize(
             "__ob", F.floor(F.col(order) / F.lit(B)).cast("int")
         )
         wprev = (
-            Window.partitionBy(key)
+            Window.partitionBy(_KEY)
             .orderBy("__ob")
             .rowsBetween(Window.unboundedPreceding, -1)
         )
         carry = (
-            tagged.groupBy(key, "__ob")
+            tagged.groupBy(_KEY, "__ob")
             .agg(F.sum("__new_session").alias("__s"))
             .select(
-                key,
+                _KEY,
                 "__ob",
                 F.coalesce(F.sum("__s").over(wprev), F.lit(0)).alias("__c_s"),
             )
         )
         cum = (
-            Window.partitionBy(key, "__ob")
+            Window.partitionBy(_KEY, "__ob")
             .orderBy(order)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
@@ -252,7 +270,7 @@ def sessionize(
         # carry covers every (key, bucket) present in ``tagged`` by
         # construction (it is grouped from ``tagged`` itself), so the
         # join is inner.
-        out = tagged.join(carry, [key, "__ob"]).withColumn(
+        out = tagged.join(carry, [_KEY, "__ob"]).withColumn(
             "session_id",
             (F.sum("__new_session").over(cum) + F.col("__c_s") - 1).cast("int"),
         )
@@ -281,10 +299,11 @@ def role_transitions(
     ``hot_safe=True``: shifted equi-join instead of the per-key window
     (see lag_lead_features) — uniform (key, turn_idx) hash, no straggler."""
     if hot_safe:
-        prev_df = df.select(
-            F.col(key), (F.col(order) + 1).alias(order), F.col("role").alias("__prev_role")
+        keyed = _with_key(df, key)
+        prev_df = keyed.select(
+            _KEY, (F.col(order) + 1).alias(order), F.col("role").alias("__prev_role")
         )
-        out = df.join(prev_df, [key, order], "left").withColumn(
+        out = keyed.join(prev_df, [_KEY, order], "left").withColumn(
             "role_transition",
             F.concat(
                 F.coalesce(F.col("__prev_role"), F.lit("start")),
@@ -372,18 +391,18 @@ def backfill_features_bucketed(
             f"divide-by-zero at action time under ANSI)"
         )
     _check_emitted(df, _BACKFILL_EMITTED, "backfill_features_bucketed")
-    rows = df.selectExpr("*", *cumulative.turn_row()).withColumn(
+    rows = _with_key(df, key).selectExpr("*", *cumulative.turn_row()).withColumn(
         "__ob", F.floor(F.col(order) / F.lit(bucket_turns)).cast("int")
     )
-    partials = rows.groupBy(key, "__ob").agg(*map(F.expr, cumulative.parts(CUMULATIVE)))
-    carry = partials.selectExpr(_ident(key), "__ob", *cumulative.carry(CUMULATIVE, key))
+    partials = rows.groupBy(_KEY, "__ob").agg(*map(F.expr, cumulative.parts(CUMULATIVE)))
+    carry = partials.selectExpr(_KEY, "__ob", *cumulative.carry(CUMULATIVE, _KEY))
     # equi-join on (key, bucket): AQE broadcasts the carry frame when it
     # fits; at extreme key cardinality it falls back to a shuffle join on
     # the SAME (key, bucket) axis the window needs anyway. Never force a
     # broadcast: the carry has a row per (conversation, bucket) for EVERY
     # conversation. Every (key, bucket) of ``rows`` has its carry row.
-    over = cumulative.frame([key, "__ob"], [order])
-    inner = rows.join(carry, [key, "__ob"]).selectExpr("*", *cumulative.parts(CUMULATIVE, over))
+    over = cumulative.frame([_KEY, "__ob"], [order])
+    inner = rows.join(carry, [_KEY, "__ob"]).selectExpr("*", *cumulative.parts(CUMULATIVE, over))
     return inner.selectExpr(
         *map(_ident, df.columns),
         "__text_len AS text_len",

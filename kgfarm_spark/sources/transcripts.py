@@ -20,6 +20,8 @@ exchange. On a real Iceberg table turn_idx is stored, no shuffle happens.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -92,30 +94,39 @@ TABLES = (
 ).split()
 
 
-#: lazy-PLAN memo keyed (session, source key) — caches the immutable
-#: DataFrame *plan object* only, never data: every action on a cached
-#: frame still scans the parquet and recomputes in full. Motivation
-#: (optimization round, guide §1 measurement): building a query is
-#: thousands of py4j round-trips, and ~0.1 s of that per build was
+#: lazy-PLAN memo: session → {source key: the plan's JVM Dataset}. It
+#: caches the immutable DataFrame *plan* only, never data: every action on
+#: a cached frame still scans the parquet and recomputes in full.
+#: Motivation (optimization round, guide §1 measurement): building a query
+#: is thousands of py4j round-trips, and ~0.1 s of that per build was
 #: re-running parquet schema inference / re-deriving the transcripts
-#: window plan that is identical within a session. Keyed by the session
-#: object so a new session (or another sf dir) never sees a stale plan.
-_PLAN_CACHE: dict = {}
+#: window plan that is identical within a session. Weakly keyed by the
+#: session, and the values hold only the JVM handle (a Python DataFrame
+#: references its session and would keep its own key alive), so a new
+#: session never sees a stale plan and a stopped, unreferenced session's
+#: plans are released with it.
+_PLAN_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _cached_plan(spark: SparkSession, key: tuple, build) -> DataFrame:
-    k = (spark, key)
-    df = _PLAN_CACHE.get(k)
-    if df is None:
-        df = build()
-        _PLAN_CACHE[k] = df
+    plans = _PLAN_CACHE.setdefault(spark, {})
+    jdf = plans.get(key)
+    if jdf is not None:
+        return DataFrame(jdf, spark)
+    df = build()
+    plans[key] = df._jdf
     return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan for a driver table. Column pruning + predicate pushdown
     happen automatically once callers select/filter (verified in tests via
-    explain: PushedFilters / ReadSchema)."""
+    explain: PushedFilters / ReadSchema).
+
+    The plan, with its schema and file listing, is built once per session
+    and reused (``_PLAN_CACHE``): a source directory is assumed immutable
+    within a session. Files added or replaced under ``sf_dir`` after the
+    first call are not seen until a new session reads it."""
     return _cached_plan(
         spark, (sf_dir, name), lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet")
     )

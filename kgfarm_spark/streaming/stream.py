@@ -280,23 +280,3 @@ def stream_asof_latest(
         )
     )
 
-
-def stream_exact_dedup(
-    docs: DataFrame,
-    keys: list[str],
-    event_ts: str = "ts",
-    watermark: str | None = "1 hour",
-) -> DataFrame:
-    """Streaming twin of ``operators.dedup.exact_dedup``: emit each key
-    combination once (first arrival wins — the streaming analog of the
-    batch min-order_col rule, since a stream has no retroactive order).
-
-    With ``watermark`` set, ``dropDuplicatesWithinWatermark`` bounds the
-    dedup state by event time: a duplicate arriving later than the
-    watermark delay re-emits, but state per key is evicted — the only
-    viable contract for an unbounded stream at 10^12 rows. Pass
-    ``watermark=None`` for exact all-time dedup with unbounded state
-    (bounded corpora replayed as streams)."""
-    if watermark is None:
-        return docs.dropDuplicates(keys)
-    return docs.withWatermark(event_ts, watermark).dropDuplicatesWithinWatermark(keys)

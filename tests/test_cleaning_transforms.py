@@ -603,3 +603,74 @@ def test_robust_scaler_backtick_column_name(spark, exact):
     got = fit_robust_scaler(df, ["a`b"], exact=exact)["a`b"]
     assert got == fit_robust_scaler(df, ["plain"], exact=exact)["plain"]
     assert got["median"] == 5.0
+
+
+def _cleaning():
+    from kgfarm_spark.functions import cleaning
+
+    return cleaning
+
+
+def _transforms():
+    from kgfarm_spark.functions import transforms
+
+    return transforms
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda c, df: _cleaning().fill_stats(df, [c.v], [c.o, c.s], exact=True),
+        lambda c, df: _cleaning().fill_nulls(df, "median", [c.v], [c.s], exact=True),
+        lambda c, df: ffill(df, [c.v, c.s], None, c.o),
+        lambda c, df: bfill(df, [c.v, c.s], None, c.o),
+        lambda c, df: ffill(df, [c.v, c.s], c.k, c.o),
+        lambda c, df: interpolate_linear(df, [c.v], None, c.o),
+        lambda c, df: interpolate_linear(df, [c.v], c.k, c.o),
+        lambda c, df: normalize_null_tokens(df, [c.s]),
+        lambda c, df: [r["missing_count"] for r in null_scan(df).collect()],
+        lambda c, df: _cleaning().drop_outlier_rows_iqr(df, [c.v], exact=True),
+        lambda c, df: _transforms().quantile_rank_transform(df, [c.v, c.o]),
+        lambda c, df: _transforms().fit_quantile_transformer(df, [c.v], n_quantiles=5),
+    ],
+    ids=[
+        "fill_stats",
+        "fill_nulls",
+        "ffill",
+        "bfill",
+        "ffill-keyed",
+        "interpolate_linear",
+        "interpolate_linear-keyed",
+        "normalize_null_tokens",
+        "null_scan",
+        "drop_outlier_rows_iqr",
+        "quantile_rank_transform",
+        "fit_quantile_transformer",
+    ],
+)
+def test_backtick_column_names(spark, run):
+    """Column names holding a backtick pass through every cleaning and
+    quantile entry point (they used to be spliced into SQL text between
+    bare backticks, or parsed by ``F.col``) and give the answer of a
+    plain-named copy."""
+    import types
+
+    vals = [1, None, 3, 5, None, 8, 13, 21, None, 400]
+    plain = spark.createDataFrame(
+        [(i, None if v is None else float(v), None if v is None else f"s{v % 3}", i % 2)
+         for i, v in enumerate(vals)],
+        "o long, v double, s string, k int",
+    )
+    odd = plain.toDF("o`rd", "a`b", "s``t`", "k`")
+
+    def result(df):
+        c = types.SimpleNamespace(**dict(zip("ovsk", df.columns)))
+        out = run(c, df)
+        if isinstance(out, dict):
+            return list(out.values())
+        if isinstance(out, list):
+            return out
+        assert out.columns == df.columns
+        return sorted(map(tuple, out.collect()), key=repr)
+
+    assert result(odd) == result(plain)

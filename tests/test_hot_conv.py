@@ -228,6 +228,67 @@ def test_all_window_ops_hot_safe_variants_equal_plain(spark):
     assert _frames_equal(a, b)
 
 
+def _lag_lead(t, **kw):
+    from kgfarm_spark.operators.windows import lag_lead_features
+
+    return lag_lead_features(t, **kw)
+
+
+def _role_transitions(t, **kw):
+    from kgfarm_spark.operators.windows import role_transitions
+
+    return role_transitions(t, **kw)
+
+
+def _sessionize(t, **kw):
+    from kgfarm_spark.operators.windows import sessionize
+
+    return sessionize(t, gap="30 MINUTE", **kw)
+
+
+def _rolling(t, **kw):
+    from kgfarm_spark.operators.windows import rolling_aggregates
+
+    return rolling_aggregates(t, n_turns=1, **kw)
+
+
+@pytest.mark.parametrize(
+    "op, hot",
+    [
+        (backfill_features, {"max_turns_per_task": 2}),
+        (_sessionize, {"max_turns_per_task": 2}),
+        (_lag_lead, {"hot_safe": True}),
+        (_role_transitions, {"hot_safe": True}),
+        (_rolling, {"max_turns_per_task": 2}),
+    ],
+    ids=["backfill", "sessionize", "lag_lead", "role_transitions", "rolling"],
+)
+def test_hot_variants_keep_null_key_turns(spark, op, hot):
+    """NULL conversation keys form one group in the plain window (and in
+    the oracle SQL); every hot variant must keep those turns and give
+    them the same features, e.g. the previous NULL-key turn as the lag."""
+    base = dt.datetime(2024, 1, 1)
+    rows = [
+        (
+            conv,
+            i,
+            "user" if i % 2 == 0 else "assistant",
+            f"text {i}",
+            "search" if i == 3 else None,
+            base + dt.timedelta(minutes=10 * i + (90 if i > 2 else 0)),
+        )
+        for conv in (None, "c1")
+        for i in range(5)
+    ]
+    t = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    plain, guarded = op(t), op(t, **hot)
+    assert plain.columns == guarded.columns
+    assert guarded.filter(F.col("conv_id").isNull()).count() == 5
+    assert _frames_equal(plain, guarded)
+
+
 def test_rolling_ghost_rows_cross_bucket_boundary(spark):
     """Adversarial bucket size: B barely above the frame length, so almost
     every frame crosses a bucket boundary and leans on ghost rows."""

@@ -69,7 +69,6 @@ def test_queries_have_oracles():
         "transform_recommendations",
         "cleaning_recommendations",
         "feature_selection_scores",
-        "multimodal_features",
         "auto_pipeline_model_eval",  # pyspark.ml fit — pinned metrics in test_golden_e2e
         "quantile_transform_fitted",
         "power_transform_yeo_johnson",

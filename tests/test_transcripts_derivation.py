@@ -138,3 +138,27 @@ def test_transcripts_conv_id_in_range(spark, tmp_path):
     sf = _events(spark, tmp_path, [0, 42, 999_999, None])
     got = {r["conv_id"] for r in transcripts(spark, sf).collect()}
     assert got == {None, "conv_000000", "conv_000042", "conv_999999"}
+
+
+def test_plan_cache_releases_a_dead_session():
+    """The plan memo must not keep a session alive: once nothing else
+    references a session, its entry goes, even though a cached frame
+    references its own session."""
+    import gc
+    import types
+    import weakref
+
+    from kgfarm_spark.sources.transcripts import _PLAN_CACHE, _cached_plan
+
+    class _Session:  # weakref-able stand-in for a SparkSession
+        pass
+
+    session = _Session()
+    frame = types.SimpleNamespace(_jdf=object(), _session=session)
+    assert _cached_plan(session, ("dir", "t"), lambda: frame) is frame
+    assert any(isinstance(k, _Session) for k in list(_PLAN_CACHE))
+    alive = weakref.ref(session)
+    del session, frame
+    gc.collect()
+    assert alive() is None
+    assert not any(isinstance(k, _Session) for k in list(_PLAN_CACHE))

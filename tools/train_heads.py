@@ -21,13 +21,13 @@ papers describe for each recommender):
 - scaling (M4):    StandardScaler ← gaussian; MinMaxScaler ← bounded
                    uniform; RobustScaler ← gaussian + heavy outliers;
                    PowerTransformer ← heavy-tailed; QuantileTransformer
-                   ← multimodal.
+                   ← multi-peaked.
 - categorical (M6): OneHotEncoder ← low-cardinality token columns (the
                    reference's ≤5-distinct OHE guard);
                    OrdinalEncoder ← higher-cardinality columns.
 - cleaning (M7):   Fill ← iid numeric + token strings with random
                    missingness; Interpolate ← smooth series-like
-                   columns; Impute ← clustered/multimodal columns
+                   columns; Impute ← clustered/multi-peaked columns
                    (kNN-friendly structure).
 - outlier (M8):    clean ← columns with planted extreme outliers;
                    keep ← clean columns.
