@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kgfarm_spark.operators.asof import _ident
+from kgfarm_spark.functions.cleaning import _col
 
 EPS = 1e-4  # the reference's unary-transform epsilon (interface/apis.py:63-84)
 
@@ -34,8 +34,8 @@ def fit_standard_scaler(df: DataFrame, cols: list[str]) -> dict:
     """(x - mean) / std, population std (sklearn StandardScaler ddof=0)."""
     aggs = []
     for c in cols:
-        aggs.append(F.avg(c).alias(f"{c}__mean"))
-        aggs.append(F.stddev_pop(c).alias(f"{c}__std"))
+        aggs.append(F.avg(_col(c)).alias(f"{c}__mean"))
+        aggs.append(F.stddev_pop(_col(c)).alias(f"{c}__std"))
     row = df.agg(*aggs).first()
     return {c: {"mean": row[f"{c}__mean"], "std": row[f"{c}__std"]} for c in cols}
 
@@ -44,15 +44,15 @@ def apply_standard_scaler(df: DataFrame, params: dict) -> DataFrame:
     out = df
     for c, p in params.items():
         std = p["std"] if p["std"] else 1.0  # sklearn: zero-variance → 1
-        out = out.withColumn(c, (F.col(c) - F.lit(p["mean"])) / F.lit(std))
+        out = out.withColumn(c, (_col(c) - F.lit(p["mean"])) / F.lit(std))
     return out
 
 
 def fit_minmax_scaler(df: DataFrame, cols: list[str]) -> dict:
     aggs = []
     for c in cols:
-        aggs.append(F.min(c).alias(f"{c}__min"))
-        aggs.append(F.max(c).alias(f"{c}__max"))
+        aggs.append(F.min(_col(c)).alias(f"{c}__min"))
+        aggs.append(F.max(_col(c)).alias(f"{c}__max"))
     row = df.agg(*aggs).first()
     return {c: {"min": row[f"{c}__min"], "max": row[f"{c}__max"]} for c in cols}
 
@@ -64,7 +64,7 @@ def apply_minmax_scaler(df: DataFrame, params: dict) -> DataFrame:
             out = out.withColumn(c, F.lit(None).cast("double"))
             continue
         rng = (p["max"] - p["min"]) or 1.0
-        out = out.withColumn(c, (F.col(c) - F.lit(p["min"])) / F.lit(rng))
+        out = out.withColumn(c, (_col(c) - F.lit(p["min"])) / F.lit(rng))
     return out
 
 
@@ -74,7 +74,7 @@ def fit_robust_scaler(df: DataFrame, cols: list[str], exact: bool = False) -> di
     fn = F.percentile if exact else F.percentile_approx
     aggs = []
     for c in cols:
-        x = F.col(_ident(c))
+        x = _col(c)
         aggs.append(fn(x, 0.5).alias(f"{c}__med"))
         aggs.append(fn(x, 0.25).alias(f"{c}__q1"))
         aggs.append(fn(x, 0.75).alias(f"{c}__q3"))
@@ -101,7 +101,7 @@ def apply_robust_scaler(df: DataFrame, params: dict) -> DataFrame:
             out = out.withColumn(c, F.lit(None).cast("double"))
             continue
         iqr = p["iqr"] or 1.0
-        out = out.withColumn(c, (F.col(c) - F.lit(p["median"])) / F.lit(iqr))
+        out = out.withColumn(c, (_col(c) - F.lit(p["median"])) / F.lit(iqr))
     return out
 
 
@@ -149,7 +149,7 @@ def quantile_rank_transform(
     spark = df.sparkSession
     P = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     qs = [i / P for i in range(1, P)]
-    col = {c: F.col(_ident(c)) for c in cols}
+    col = {c: _col(c) for c in cols}
 
     # action 1: all columns' boundaries in one aggregate pass
     bounds_row = df.agg(
@@ -209,7 +209,7 @@ def fit_quantile_transformer(
     rows never influence the mapping (north_rule zero-leakage; fixes the
     reference's fit-on-concat quirks, apis.py:328-331)."""
     qs = [i / (n_quantiles - 1) for i in range(n_quantiles)]
-    aggs = [F.percentile_approx(F.col(_ident(c)), qs, 10000).alias(c) for c in cols]
+    aggs = [F.percentile_approx(_col(c), qs, 10000).alias(c) for c in cols]
     row = df.agg(*aggs).first()
     # All-null column → percentile_approx returns NULL → grid None (apply
     # leaves the column unchanged). Constant column → degenerate one-point
@@ -256,7 +256,7 @@ def apply_quantile_transformer(df: DataFrame, params: dict) -> DataFrame:
     for c, grid in params.items():
         if grid is None:  # all-null fit column — nothing to map
             continue
-        out = out.withColumn(c, make_udf(grid)(F.col(c).cast("double")))
+        out = out.withColumn(c, make_udf(grid)(_col(c).cast("double")))
     return out
 
 
@@ -292,7 +292,7 @@ def fit_power_transformer(
 
     params = {}
     for c in cols:
-        vals_df = df.select(F.col(c).cast("double").alias("v")).filter(
+        vals_df = df.select(_col(c).cast("double").alias("v")).filter(
             F.col("v").isNotNull()
         )
         sampled = (
@@ -337,7 +337,7 @@ def apply_power_transformer(df: DataFrame, params: dict) -> DataFrame:
     """Yeo-Johnson with fitted λ as a codegen'd column expression."""
     out = df
     for c, lam in params.items():
-        x = F.col(c).cast("double")
+        x = _col(c).cast("double")
         if abs(lam) > 1e-12:
             pos_expr = (F.pow(x + 1.0, F.lit(lam)) - 1.0) / F.lit(lam)
         else:
@@ -357,7 +357,7 @@ def apply_power_transformer(df: DataFrame, params: dict) -> DataFrame:
 
 
 def _col_mins(df: DataFrame, cols: list[str]) -> dict:
-    row = df.agg(*[F.min(c).alias(c) for c in cols]).first()
+    row = df.agg(*[F.min(_col(c)).alias(c) for c in cols]).first()
     return {c: row[c] for c in cols}
 
 
@@ -366,7 +366,7 @@ def log_transform(df: DataFrame, cols: list[str]) -> DataFrame:
     mins = _col_mins(df, cols)
     out = df
     for c in cols:
-        out = out.withColumn(c, F.log(F.col(c) + abs(mins[c]) + EPS))
+        out = out.withColumn(c, F.log(_col(c) + abs(mins[c]) + EPS))
     return out
 
 
@@ -375,7 +375,7 @@ def sqrt_transform(df: DataFrame, cols: list[str]) -> DataFrame:
     mins = _col_mins(df, cols)
     out = df
     for c in cols:
-        out = out.withColumn(c, F.sqrt(F.col(c) + abs(mins[c]) + EPS))
+        out = out.withColumn(c, F.sqrt(_col(c) + abs(mins[c]) + EPS))
     return out
 
 
@@ -383,7 +383,7 @@ def square_transform(df: DataFrame, cols: list[str]) -> DataFrame:
     """np.square (apis.py:82-84)."""
     out = df
     for c in cols:
-        out = out.withColumn(c, F.pow(F.col(c), 2))
+        out = out.withColumn(c, F.pow(_col(c), 2))
     return out
 
 

@@ -122,7 +122,7 @@ def run_checkpointed(
     key_col: str,
     out_dir: str,
     n_buckets: int = 8,
-    snapshot_id: str = "static",
+    snapshot_id: str | None = None,
     max_buckets: int | None = None,
     on_snapshot_mismatch: str = "recompute",
 ) -> list[dict]:
@@ -137,15 +137,20 @@ def run_checkpointed(
 
     Resume compares each completed bucket's manifest ``snapshot_id``
     against the current one: a mismatch means the input changed under the
-    checkpoint. ``on_snapshot_mismatch='recompute'`` (default) invalidates
-    and re-runs those buckets (the manifest is append-only; the newest
-    line per bucket wins on read); ``'fail'`` raises instead — no mode
-    silently mixes stale and fresh bucket outputs.
+    checkpoint. ``snapshot_id`` defaults to ``input_snapshot_id(input_df)``
+    (the input's file listing and sizes, so a file appended to a parquet
+    input is a new snapshot); pass one to pin it, e.g. an Iceberg snapshot
+    id. ``on_snapshot_mismatch='recompute'`` (default) invalidates and
+    re-runs those buckets (the manifest is append-only; the newest line
+    per bucket wins on read); ``'fail'`` raises instead — no mode silently
+    mixes stale and fresh bucket outputs.
     """
     import inspect
 
     if on_snapshot_mismatch not in ("recompute", "fail"):
         raise ValueError(f"on_snapshot_mismatch must be 'recompute' or 'fail', got {on_snapshot_mismatch!r}")
+    if snapshot_id is None:
+        snapshot_id = input_snapshot_id(input_df)
     os.makedirs(out_dir, exist_ok=True)
     done = read_manifest(out_dir)
     written: list[dict] = []

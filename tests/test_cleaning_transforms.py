@@ -617,6 +617,12 @@ def _transforms():
     return transforms
 
 
+def _fit_apply(df, name, cols, **fit_kw):
+    """``apply_<name>(df, fit_<name>(df, cols))``."""
+    t = _transforms()
+    return getattr(t, f"apply_{name}")(df, getattr(t, f"fit_{name}")(df, cols, **fit_kw))
+
+
 @pytest.mark.parametrize(
     "run",
     [
@@ -632,6 +638,16 @@ def _transforms():
         lambda c, df: _cleaning().drop_outlier_rows_iqr(df, [c.v], exact=True),
         lambda c, df: _transforms().quantile_rank_transform(df, [c.v, c.o]),
         lambda c, df: _transforms().fit_quantile_transformer(df, [c.v], n_quantiles=5),
+        lambda c, df: _transforms().fit_standard_scaler(df, [c.v, c.o]),
+        lambda c, df: _fit_apply(df, "standard_scaler", [c.v, c.o]),
+        lambda c, df: _transforms().fit_minmax_scaler(df, [c.v, c.o]),
+        lambda c, df: _fit_apply(df, "minmax_scaler", [c.v, c.o]),
+        lambda c, df: _fit_apply(df, "robust_scaler", [c.v], exact=True),
+        lambda c, df: _fit_apply(df, "quantile_transformer", [c.v], n_quantiles=5),
+        lambda c, df: _fit_apply(df, "power_transformer", [c.v]),
+        lambda c, df: _transforms().log_transform(df, [c.v, c.o]),
+        lambda c, df: _transforms().sqrt_transform(df, [c.v, c.o]),
+        lambda c, df: _transforms().square_transform(df, [c.v, c.o]),
     ],
     ids=[
         "fill_stats",
@@ -646,13 +662,23 @@ def _transforms():
         "drop_outlier_rows_iqr",
         "quantile_rank_transform",
         "fit_quantile_transformer",
+        "fit_standard_scaler",
+        "standard_scaler",
+        "fit_minmax_scaler",
+        "minmax_scaler",
+        "robust_scaler",
+        "quantile_transformer",
+        "power_transformer",
+        "log_transform",
+        "sqrt_transform",
+        "square_transform",
     ],
 )
 def test_backtick_column_names(spark, run):
-    """Column names holding a backtick pass through every cleaning and
-    quantile entry point (they used to be spliced into SQL text between
-    bare backticks, or parsed by ``F.col``) and give the answer of a
-    plain-named copy."""
+    """Column names holding a backtick pass through every cleaning,
+    scaler, quantile and unary-transform entry point (they used to be
+    spliced into SQL text between bare backticks, or parsed by ``F.col``)
+    and give the answer of a plain-named copy."""
     import types
 
     vals = [1, None, 3, 5, None, 8, 13, 21, None, 400]

@@ -6,6 +6,8 @@ window output — including on a synthetic 100k-turn single conversation
 from __future__ import annotations
 
 import datetime as dt
+import gc
+import weakref
 
 import pytest
 from pyspark.sql import functions as F
@@ -704,15 +706,20 @@ def test_auto_threshold_matches_brute_force(spark, monkeypatch, build, decided_b
         return real_exact(*args)
 
     monkeypatch.setattr(backfill, "_exact_hot_threshold", spy)
+    monkeypatch.setattr(backfill, "_SKETCH_MEMO", weakref.WeakKeyDictionary())
     transcripts, probes = build(spark)
     keys = transcripts.select("conv_id")
     if probes is not None:
         keys = keys.unionByName(probes.select("conv_id"))
     n_cores = max(spark.sparkContext.defaultParallelism, 2)
+    want = _reference_threshold(keys, n_cores)
 
-    got = backfill._auto_hot_threshold(transcripts, "conv_id", probes)
-    assert got == _reference_threshold(keys, n_cores)
-    assert ("exact" if exact_calls else "sketch") == decided_by
+    # cold, then warm from the memoized sketches: same answer, same path
+    for run in ("cold", "warm"):
+        exact_calls.clear()
+        got = backfill._auto_hot_threshold(transcripts, "conv_id", probes)
+        assert got == want, run
+        assert ("exact" if exact_calls else "sketch") == decided_by, run
 
 
 def test_auto_detection_is_one_job_in_the_callers_group(spark, tmp_path):
@@ -733,6 +740,106 @@ def test_auto_detection_is_one_job_in_the_callers_group(spark, tmp_path):
         )
         assert not isinstance(out, Exception), out
         assert len(jobs) == want_jobs, (hot, jobs)
+
+
+def _parquet(spark, df, path):
+    df.write.parquet(str(path))
+    return spark.read.parquet(str(path))
+
+
+def _auto(t, probes):
+    return backfill_asof_fused(t, probes, tolerance="1 DAY", hot_conv_turns="auto")
+
+
+def _input_records(spark, jobs) -> int:
+    """Rows the stages of ``jobs`` read from their sources."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    stages = {s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds}
+    return sum(jsc.statusStore().lastStageAttempt(s).inputRecords() for s in stages)
+
+
+def test_auto_decision_is_memoized_per_input_snapshot(spark, tmp_path):
+    """The first 'auto' call over parquet frames runs the one certificate
+    job; a second call over the same frames reads both sides' sketches
+    from the memo and runs no job. Appending a file to the transcript
+    directory and reading it again is a new snapshot of that side: the
+    certificate runs again, over the transcripts only. The output stays
+    the guard-off output throughout."""
+    t_dir = tmp_path / "t"
+    t = _parquet(spark, gen_transcripts(spark, n_turns=4_000, n_convs=100, seed=5), t_dir)
+    probes = _parquet(spark, gen_probes(spark, t), tmp_path / "p")
+
+    for run, want_jobs in (("cold", 1), ("warm", 0)):
+        out, jobs = _jobs_during(spark, f"memo-snapshot-{run}", lambda: _auto(t, probes))
+        assert not isinstance(out, Exception), out
+        assert len(jobs) == want_jobs, (run, jobs)
+    off = backfill_asof_fused(t, probes, tolerance="1 DAY")
+    assert _frames_equal(out, off)
+
+    more = gen_transcripts(spark, n_turns=1_000, n_convs=100, seed=6)
+    more.write.mode("append").parquet(str(t_dir))
+    t2 = spark.read.parquet(str(t_dir))
+    out, jobs = _jobs_during(spark, "memo-snapshot-append", lambda: _auto(t2, probes))
+    assert not isinstance(out, Exception), out
+    assert len(jobs) == 1
+    assert _input_records(spark, jobs) == 5_000
+    assert _frames_equal(out, backfill_asof_fused(t2, probes, tolerance="1 DAY"))
+
+
+def test_auto_new_probe_frame_scans_only_its_keys(spark, tmp_path):
+    """A new probe frame over a memoized transcript side: the certificate
+    job reads the probe rows and no transcript row."""
+    t = _parquet(spark, gen_transcripts(spark, n_turns=4_000, n_convs=100, seed=9), tmp_path / "t")
+    p1 = _parquet(spark, gen_probes(spark, t), tmp_path / "p1")
+    p2 = _parquet(spark, gen_probes(spark, t, every_nth=5), tmp_path / "p2")
+    _auto(t, p1)
+    out, jobs = _jobs_during(spark, "memo-new-probes", lambda: _auto(t, p2))
+    assert not isinstance(out, Exception), out
+    assert len(jobs) == 1
+    assert _input_records(spark, jobs) == p2.count()
+
+
+def test_auto_never_memoizes_a_nondeterministic_side(spark, monkeypatch):
+    """A ``rand()`` key column is summarized again on every call; the
+    deterministic probe side is read from the memo."""
+    from kgfarm_spark.operators import backfill
+
+    monkeypatch.setattr(backfill, "_SKETCH_MEMO", weakref.WeakKeyDictionary())
+    t = spark.range(2_000).selectExpr("CAST(floor(rand() * 200) AS INT) AS conv_id")
+    p = spark.range(100).selectExpr("CAST(id AS INT) AS conv_id")
+    for run in ("first", "second"):
+        got, jobs = _jobs_during(
+            spark, f"memo-rand-{run}", lambda: backfill._auto_hot_threshold(t, "conv_id", p)
+        )
+        assert got is None and len(jobs) == 1, (run, got, jobs)
+    assert len(backfill._SKETCH_MEMO[spark]) == 1
+
+
+def test_sketch_memo_is_bounded_and_releases_a_dead_session():
+    """The memo holds at most ``_MEMO_ENTRIES`` sides per session, the
+    least recently used going first, and does not keep a session alive."""
+    from kgfarm_spark.operators.backfill import (
+        _MEMO_ENTRIES,
+        _SKETCH_MEMO,
+        _Summary,
+        _memo_put,
+    )
+
+    class _Session:  # weakref-able stand-in for a SparkSession
+        pass
+
+    session = _Session()
+    for i in range(_MEMO_ENTRIES + 3):
+        _memo_put(session, (object(), ("plan", i)), _Summary(i, 0, b"", (i,)))
+    memo = _SKETCH_MEMO[session]
+    assert list(memo) == [("plan", i) for i in range(3, _MEMO_ENTRIES + 3)]
+    alive = weakref.ref(session)
+    del session, memo
+    gc.collect()
+    assert alive() is None
+    assert not any(isinstance(k, _Session) for k in list(_SKETCH_MEMO))
 
 
 def test_auto_detection_failure_surfaces_from_the_call(spark):

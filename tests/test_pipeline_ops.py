@@ -315,6 +315,24 @@ class TestLineageResume:
             lambda d: d, t2, "conv_id", out, n_buckets=2, snapshot_id="snap-B"
         ) == []
 
+    def test_default_snapshot_tracks_an_appended_input(self, spark, tmp_path):
+        """With default arguments, a resume over a parquet input that
+        gained a file re-runs every bucket against the new input; over an
+        unchanged input it runs none."""
+        from kgfarm_spark.sources.datagen import gen_transcripts
+
+        src = str(tmp_path / "in")
+        gen_transcripts(spark, n_turns=100, n_convs=10, seed=3).write.parquet(src)
+        out = str(tmp_path / "view")
+        assert len(run_checkpointed(lambda d: d, spark.read.parquet(src), "conv_id", out, n_buckets=2)) == 2
+        assert run_checkpointed(lambda d: d, spark.read.parquet(src), "conv_id", out, n_buckets=2) == []
+
+        gen_transcripts(spark, n_turns=50, n_convs=10, seed=4).write.mode("append").parquet(src)
+        recs = run_checkpointed(lambda d: d, spark.read.parquet(src), "conv_id", out, n_buckets=2)
+        assert sorted(r["bucket"] for r in recs) == [0, 1]
+        assert read_checkpointed_output(spark, out, 2).count() == 150
+        assert run_checkpointed(lambda d: d, spark.read.parquet(src), "conv_id", out, n_buckets=2) == []
+
     def test_resume_after_torn_manifest_line(self, spark, tmp_path):
         """A crash in the middle of a manifest append leaves a partial last
         line. Resume treats it as the uncommitted bucket it stands for:

@@ -3,7 +3,10 @@ for each query, run the noop sink once and report per-stage task counts,
 input bytes (how many times the source parquet is REALLY scanned after
 runtime exchange reuse), shuffle read/write bytes, and job and stage
 counts (jobs are counted per query through a job group, so a plan that
-grows an extra job, e.g. a key-set collection, shows up).
+grows an extra job, e.g. a key-set collection, shows up). ``n_jobs_warm``
+is the job count of a second run of the same query, which shows what a
+session reuses across calls (e.g. the auto hot-guard's memoized key
+sketches).
 
 Usage: python tools/stage_audit.py [query ...]
 """
@@ -36,6 +39,7 @@ HEADLINE = [
 def main() -> None:
     from kgfarm_spark.session import get_spark
     from kgfarm_spark.entry_queries import QUERIES
+    from kgfarm_spark.operators.backfill import _SKETCH_MEMO
     from kgfarm_spark.plans.metrics import StageMetrics
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -45,19 +49,27 @@ def main() -> None:
         app_name="kgfarm_stage_audit", master=f"local[{cpus}]",
         shuffle_partitions=cpus, extra_conf={"spark.ui.enabled": "true"},
     )
-    # warm
+    # warm, then forget the key sketches it memoized: n_jobs stays each
+    # query's first-run count
     QUERIES[names[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    _SKETCH_MEMO.pop(spark, None)
     sc = spark.sparkContext
+
+    def run(group: str, name: str) -> int:
+        """Run the query under its own job group; return its job count."""
+        sc.setJobGroup(group, name)
+        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
     out = {}
     for name in names:
-        group = f"stage-audit-{name}"
-        sc.setJobGroup(group, name)
         with StageMetrics(spark) as m:
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            n_jobs = run(f"stage-audit-{name}", name)
+        n_jobs_warm = run(f"stage-audit-{name}-warm", name)
         s = m.summary()
         out[name] = {
             "n_jobs": n_jobs,
+            "n_jobs_warm": n_jobs_warm,
             "n_stages": len(m.stages),
             "n_tasks": s.get("n_tasks"),
             "input_mb": round(sum(st.get("inputBytes") or 0 for st in m.stages) / 1e6, 2),
