@@ -131,13 +131,13 @@ class FeatureFarm:
         crossover rule (engage the exact bucket+carry guard iff one
         conversation holds > ~1/n_cores of the rows) means cluster users
         never hand-tune the straggler threshold. Deciding it cold usually
-        costs one shuffle-free scan of the key columns, which runs while
+        costs one shuffle-free scan of the key column, which runs while
         the plan is built: a count-min sketch bound proves the guard off,
         and the exact per-key count aggregate runs only when the bound
-        reaches the threshold. Warm, each input's sketch is reused per
-        input snapshot: a repeated call over unchanged frames runs no
-        decision job, and a new probe frame scans only its own keys.
-        Pass an int to pin it, None to disable.
+        reaches the threshold. Warm, the verdict is reused per pair of
+        input snapshots: a repeated guard-off call over unchanged frames
+        runs no decision job; a new frame on either side runs the scan
+        again. Pass an int to pin it, None to disable.
         ``probe_pushdown=True`` reduces the corpus to the probed
         conversations first (9.5× at 48M turns / 1% probes, BENCH.md
         §2b2) — set it when probing a small sample. A driver-local probe

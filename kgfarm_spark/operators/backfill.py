@@ -47,33 +47,33 @@ drop to ~|conv| / n_hot_buckets.
 ``hot_conv_turns='auto'`` decides the guard from the data: engage iff the
 largest unioned key group holds at least ``max(rows / n_cores, 2)`` rows
 (``_auto_hot_threshold``). The common answer, guard off, is certified by
-the row count, the NULL-key count and a count-min sketch of the keys of
-each side, turns and probes (Cormode & Muthukrishnan, J. Algorithms
-2005). Sketches of the same width and seed add cell by cell into the
-sketch of the union; every cell counts at least each key hashed into it,
-so the largest cell bounds the largest group from above, and a bound
-under the threshold proves the guard stays off. Only when the bound
-reaches the threshold does the exact per-key count aggregate run, so the
-decision and threshold equal the exact rule's on every input.
+ONE shuffle-free scan of the key column whose observed metrics are the
+row count, the NULL-key count and a count-min sketch of the keys (Cormode &
+Muthukrishnan, J. Algorithms 2005): every sketch cell counts at least each
+key hashed into it, so the largest cell bounds the largest group from
+above, and a bound under the threshold proves the guard stays off. Only
+when the bound reaches the threshold does the exact per-key count
+aggregate run, so the decision and threshold equal the exact rule's on
+every input.
 
-What the decision costs. Cold, both sides are summarized by ONE
-shuffle-free scan of their key columns, on a background thread while the
-plain plan is built; the guarded plan is built only if the guard engages.
-Each side's summary is then memoized per session and input snapshot (its
-canonical plan, file listing and size, ``_memo_entry``). Warm, a repeated
-call over unchanged inputs starts no thread and no job; a new probe frame
-over an unchanged transcript table scans only the probes' keys.
+What the decision costs. Cold, the certificate job runs on a background
+thread while the plain plan is built; the guarded plan is built only if
+the guard engages. Its verdict is then memoized per session and pair of
+input snapshots (each side's canonical plan, file listing and size,
+``_memo_entry``). Warm, a repeated call over unchanged inputs that was
+proven guard-off starts no thread and no job; a call with any new side
+runs the certificate again over both.
 """
 
 from __future__ import annotations
 
+import hashlib
 import struct
 import threading
 import weakref
 from collections import OrderedDict
 from functools import reduce
 from numbers import Integral
-from typing import NamedTuple
 
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
@@ -265,175 +265,127 @@ def _engage_threshold(n_rows: int, n_cores: int) -> int:
     return max(int(n_rows / n_cores), 2)
 
 
-def _key_sides(frames: list[DataFrame], key: str) -> list[DataFrame]:
-    return [f.select(F.col(_ident(key))) for f in frames]
+def _sketch_proves_cold(keys: DataFrame, key: str, n_cores: int) -> bool:
+    """True only if no group of ``keys`` (the NULL group included) can
+    reach ``_engage_threshold`` — proven from ONE scan job with no
+    exchange: observed metrics (count(*), the NULL-key count and a
+    count-min sketch of the key) ride on the key scan, are merged on the
+    driver, and no row leaves the executors.
 
+    A sketch cell counts every key hashed into it, so the largest cell of
+    any row bounds the largest non-NULL group from above. The width is
+    128·n_cores cells (eps = 1/(64·n_cores), confidence 0.5 → one row),
+    so uncolliding groups of a core's share sit far below the threshold.
+    False — fall through to the exact aggregate — when the bound reaches
+    the threshold, when the metrics are missing or inconsistent, or when
+    the key type's byte equality is not its grouping equality (floats,
+    non-binary collations: one group could span several cells).
 
-def _union(sides: list[DataFrame]) -> DataFrame:
-    return reduce(DataFrame.unionByName, sides)
-
-
-def _sketchable(dtypes: list[T.DataType]) -> bool:
-    """True when per-side count-min sketches of keys of these types add up,
-    cell by cell, to the sketch of the union's key groups. Each type's
-    byte equality must be its grouping equality (not so for floats or a
-    non-binary collation: one group could span several cells), and the
-    sides must hash alike: one type, or integers of any width (the sketch
-    hashes every integral value as a long, and the union widens them)."""
-    if all(isinstance(d, T.IntegralType) for d in dtypes):
-        return True
-    d = dtypes[0]
-    binary_eq = isinstance(d, T.BinaryType) or (
-        isinstance(d, T.StringType) and d.collation == "UTF8_BINARY"
+    The metrics are read from the query's own ``QueryExecution`` after
+    draining it with ``toRdd().count()``. ``pyspark.sql.Observation`` is
+    not used: registering one stores a non-serializable
+    ``ObservationManager`` on the session (Spark 4.1), after which any
+    task closure that captures the session — ``LogisticRegressionModel.
+    transform`` for one — fails to serialize."""
+    dtype = keys.schema[key].dataType
+    binary_eq = isinstance(dtype, (T.IntegralType, T.BinaryType)) or (
+        isinstance(dtype, T.StringType) and dtype.collation == "UTF8_BINARY"
     )
-    return binary_eq and all(x == d for x in dtypes)
-
-
-class _Summary(NamedTuple):
-    """One side's observed key statistics: rows, NULL keys and its
-    count-min sketch. ``header`` is the sketch's depth, width and hash
-    seeds as serialized; ``table`` its depth x width cells, row-major."""
-
-    rows: int
-    nulls: int
-    header: bytes
-    table: tuple[int, ...]
-
-
-def _summary(m) -> _Summary | None:
-    """Parse one observed metric row (count(*), NULL count, sketch), or
-    None when it is inconsistent."""
+    if not binary_eq:
+        return False
+    name = "hot_guard_certificate"
+    col = F.col(_ident(key))
+    qe = keys.observe(
+        name,
+        F.count(F.lit(1)),
+        F.count_if(col.isNull()),
+        F.count_min_sketch(col, 1.0 / (64 * n_cores), 0.5, _SKETCH_SEED),
+    )._jdf.queryExecution()
+    rows = qe.toRdd().count()
+    observed = qe.observedMetrics().get(name)
+    if observed.isEmpty():
+        return False
+    m = observed.get()
     n, nulls, buf = m.getLong(0), m.getLong(1), bytes(m.get(2))
     # CountMinSketchImpl.writeTo, big-endian: version, totalCount, depth,
     # width, depth hash seeds, then the depth x width table of longs
     version, total, depth, width = struct.unpack_from(">iqii", buf)
     table_at = 20 + 8 * depth
     if (
-        version != 1
+        rows != n
+        or version != 1
         or total != n - nulls
         or depth < 1
         or width < 1
         or len(buf) != table_at + 8 * depth * width
     ):
-        return None
-    table = struct.unpack_from(f">{depth * width}q", buf, table_at)
-    return _Summary(n, nulls, buf[12:table_at], table)
-
-
-def _proves_cold(summaries: list[_Summary], n_cores: int) -> bool:
-    """True only if no group of the union of the summarized sides (the
-    NULL group included) can reach ``_engage_threshold``.
-
-    Sketches with the same width and hash seeds add cell by cell into the
-    sketch of the union. A cell counts every key hashed into it, so the
-    largest cell of any row bounds the largest non-NULL group from above,
-    and the NULL keys of all sides are one group."""
-    header = summaries[0].header
-    if any(s.header != header for s in summaries):
         return False
-    depth, width = struct.unpack_from(">ii", header)
-    table = [sum(cells) for cells in zip(*(s.table for s in summaries))]
+    table = struct.unpack_from(f">{depth * width}q", buf, table_at)
     bound = min(max(table[r * width : (r + 1) * width]) for r in range(depth))
-    n = sum(s.rows for s in summaries)
-    nulls = sum(s.nulls for s in summaries)
     return max(nulls, bound) < _engage_threshold(n, n_cores)
 
 
-#: each input side's key summary, per session, so a side whose input
-#: snapshot is unchanged is never scanned again. Weakly keyed by the
-#: session as ``transcripts._PLAN_CACHE`` is (the values hold only JVM
-#: plan handles and numbers, so a dead session's entries go with it);
-#: beyond ``_MEMO_ENTRIES`` sides the least recently used goes first.
+#: the certificate's verdict per (turns, probes) input snapshot pair, per
+#: session, so a repeated call over unchanged inputs runs no decision
+#: job. Weakly keyed by the session as ``transcripts._PLAN_CACHE`` is, so
+#: a dead session's entries go with it; beyond ``_MEMO_ENTRIES`` pairs
+#: the least recently used goes first. Each entry pins its frames'
+#: analyzed plans on the JVM until it is evicted or its session dies —
+#: at most ``2 * _MEMO_ENTRIES`` plans per session; for a
+#: ``createDataFrame`` input that plan is a LocalRelation holding its rows.
 _SKETCH_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _MEMO_ENTRIES = 32
 _MEMO_LOCK = threading.Lock()
 
 
-def _memo_entry(frame: DataFrame, key: str, width: int) -> tuple | None:
-    """``(plan, memo key)`` under which the summary of ``frame``'s column
-    ``key`` is memoized, or None for a plan that is not deterministic.
-    The memo key is the canonical analyzed plan's ``semanticHash`` (a hit
-    is confirmed by ``sameResult``), its ``inputFiles`` listing, its
-    analyzed ``sizeInBytes``, the key column and the sketch width. A
-    directory read again after a file was added, removed or resized plans
-    to the same canonical form, but not to the same listing and size.
+def _memo_entry(frames: list[DataFrame], key: str, n_cores: int) -> tuple | None:
+    """``(plans, memo key)`` under which the verdict for ``frames`` is
+    memoized, or None when a frame's plan is not deterministic. Per
+    frame, the memo key holds its canonical analyzed plan's
+    ``semanticHash`` (a hit is confirmed by ``sameResult``), an md5 of
+    its sorted ``inputFiles`` listing and its analyzed ``sizeInBytes``;
+    then the key column and ``n_cores``, which sets the sketch width and
+    the threshold. A directory read again after a file was added, removed
+    or resized plans to the same canonical form, but not to the same
+    listing and size.
 
-    The frame's own plan is the key rather than that of its key
-    projection: it separates at least the same inputs, and a repeated
-    call over the same frame object finds its analysis, canonical form
-    and listing already cached, so the lookup costs a few py4j calls
-    and builds no projection."""
-    plan = frame._jdf.queryExecution().analyzed()
-    if not plan.deterministic():
-        return None
-    files = tuple(sorted(frame.inputFiles()))
-    return plan, (plan.semanticHash(), files, plan.stats().sizeInBytes(), key, width)
+    The frame's own plan is used rather than that of its key projection:
+    it separates at least the same inputs, and a repeated call over the
+    same frame object finds its analysis, canonical form and listing
+    already cached, so the lookup builds no projection."""
+    plans, snapshots = [], []
+    for frame in frames:
+        plan = frame._jdf.queryExecution().analyzed()
+        if not plan.deterministic():
+            return None
+        listing = hashlib.md5("\n".join(sorted(frame.inputFiles())).encode())
+        plans.append(plan)
+        snapshots.append((plan.semanticHash(), listing.hexdigest(), plan.stats().sizeInBytes()))
+    return plans, (tuple(snapshots), key, n_cores)
 
 
-def _memo_get(session, entry: tuple | None) -> _Summary | None:
+def _memo_get(session, entry: tuple | None) -> bool | None:
     if entry is None:
         return None
-    plan, key = entry
+    plans, key = entry
     with _MEMO_LOCK:
         memo = _SKETCH_MEMO.get(session)
         hit = memo.get(key) if memo is not None else None
         if hit is not None:
             memo.move_to_end(key)
-    if hit is None or not plan.sameResult(hit[0]):
+    if hit is None or not all(p.sameResult(q) for p, q in zip(plans, hit[0])):
         return None
     return hit[1]
 
 
-def _memo_put(session, entry: tuple, summary: _Summary) -> None:
-    plan, key = entry
+def _memo_put(session, entry: tuple, cold: bool) -> None:
+    plans, key = entry
     with _MEMO_LOCK:
         memo = _SKETCH_MEMO.setdefault(session, OrderedDict())
-        memo[key] = (plan, summary)
+        memo[key] = (plans, cold)
         memo.move_to_end(key)
         while len(memo) > _MEMO_ENTRIES:
             memo.popitem(last=False)
-
-
-def _scan_summaries(
-    sides: list[DataFrame], summaries: list, key: str, width: int
-) -> list[_Summary] | None:
-    """Fill in the missing ``summaries`` from ONE scan job with no
-    exchange over the sides that miss: each carries its own string-named
-    observed metrics (count(*), the NULL-key count and a count-min sketch
-    of the key), and no row leaves the executors. None when a metric set
-    is missing or inconsistent.
-
-    The width is 128·n_cores cells (eps = 1/(64·n_cores), confidence 0.5
-    → one row), so uncolliding groups of a core's share sit far below the
-    threshold. The metrics are read from the query's own
-    ``QueryExecution`` after draining it with ``toRdd().count()``.
-    ``pyspark.sql.Observation`` is not used: registering one stores a
-    non-serializable ``ObservationManager`` on the session (Spark 4.1),
-    after which any task closure that captures the session —
-    ``LogisticRegressionModel.transform`` for one — fails to serialize."""
-    col = F.col(_ident(key))
-    missed = [i for i, s in enumerate(summaries) if s is None]
-    observed = [
-        sides[i].observe(
-            f"hot_guard_side{i}",
-            F.count(F.lit(1)),
-            F.count_if(col.isNull()),
-            F.count_min_sketch(col, 2.0 / width, 0.5, _SKETCH_SEED),
-        )
-        for i in missed
-    ]
-    qe = _union(observed)._jdf.queryExecution()
-    drained = qe.toRdd().count()
-    metrics = qe.observedMetrics()
-    got = list(summaries)
-    for i in missed:
-        m = metrics.get(f"hot_guard_side{i}")
-        got[i] = None if m.isEmpty() else _summary(m.get())
-        if got[i] is None:
-            return None
-    if drained != sum(got[i].rows for i in missed):
-        return None
-    return got
 
 
 def _exact_hot_threshold(keys: DataFrame, key: str, n_cores: int) -> int | None:
@@ -453,33 +405,28 @@ def _exact_hot_threshold(keys: DataFrame, key: str, n_cores: int) -> int | None:
 
 def _pending_decision(transcripts: DataFrame, key: str, probes: DataFrame | None):
     """The auto rule as far as the memo takes it, with no Spark job: None
-    when the memoized sides prove the guard off, else a call that finishes
-    the decision. That call scans only the sides the memo misses (one
-    job), memoizes them, and runs the exact aggregate only when the merged
-    bound reaches the threshold (the exact aggregate is never memoized)."""
+    when the memoized verdict proves the guard off, else a call that
+    finishes the decision. That call runs the certificate unless the memo
+    holds its verdict, memoizes the verdict, and runs the exact aggregate
+    when the bound reaches the threshold (the exact aggregate is never
+    memoized)."""
     session = transcripts.sparkSession
     n_cores = max(session.sparkContext.defaultParallelism, 2)
     # the window task holds the UNION of turns and probes per key
     frames = [transcripts] if probes is None else [transcripts, probes]
-    exact = lambda: _exact_hot_threshold(_union(_key_sides(frames, key)), key, n_cores)  # noqa: E731
-    if not _sketchable([f.schema[key].dataType for f in frames]):
-        return exact
-    width = 128 * n_cores
-    entries = [_memo_entry(f, key, width) for f in frames]
-    summaries = [_memo_get(session, e) for e in entries]
-    if None not in summaries and _proves_cold(summaries, n_cores):
+    entry = _memo_entry(frames, key, n_cores)
+    cold = _memo_get(session, entry)
+    if cold:
         return None
 
     def finish() -> int | None:
-        got = summaries
-        if None in summaries:
-            got = _scan_summaries(_key_sides(frames, key), summaries, key, width)
-            if got is None:
-                return exact()
-            for e, was, s in zip(entries, summaries, got):
-                if e is not None and was is None:
-                    _memo_put(session, e, s)
-        return None if _proves_cold(got, n_cores) else exact()
+        keys = reduce(DataFrame.unionByName, (f.select(F.col(_ident(key))) for f in frames))
+        verdict = cold
+        if verdict is None:
+            verdict = _sketch_proves_cold(keys, key, n_cores)
+            if entry is not None:
+                _memo_put(session, entry, verdict)
+        return None if verdict else _exact_hot_threshold(keys, key, n_cores)
 
     return finish
 
@@ -504,15 +451,15 @@ def _auto_hot_threshold(
     largest key group (turns + probes, NULL keys one group) meets it,
     else None (guard off).
 
-    Cost, cold: one shuffle-free scan of the key column of each side
-    certifies the common None (``_scan_summaries``, ``_proves_cold``);
-    only when the certificate fails does the exact per-key count
-    aggregate (``_exact_hot_threshold``) run, so the answer is the exact
-    rule's on every input. Warm: each side's summary is memoized per input
-    snapshot (``_memo_entry``), so a repeated call over unchanged inputs
-    reads the certificate from the memo and runs no job, and a call with
-    one new side scans only that side. A stale hit could only pick the
-    slower of two plans with equal outputs."""
+    Cost, cold: one shuffle-free scan of the unioned key column certifies
+    the common None (``_sketch_proves_cold``); only when the certificate
+    fails does the exact per-key count aggregate (``_exact_hot_threshold``)
+    run, so the answer is the exact rule's on every input. Warm: the
+    certificate's verdict is memoized per pair of input snapshots
+    (``_memo_entry``), so a repeated call over unchanged inputs runs no
+    job when it proved the guard off, and only the exact aggregate when
+    it did not. A stale hit could only pick the slower of two plans with
+    equal outputs."""
     pending = _pending_decision(transcripts, key, probes)
     return None if pending is None else pending()
 
@@ -583,12 +530,12 @@ def backfill_asof_fused(
     single-window plan. Pass ``"auto"`` to apply the measured crossover
     rule (engage iff some conversation holds > ~1/n_cores of the rows —
     see ``_auto_hot_threshold``) instead of hand-tuning: one
-    shuffle-free count-min scan of the key columns certifies "guard off"
+    shuffle-free count-min scan of the key column certifies "guard off"
     in the common case, the exact per-key count aggregate runs only when
     that bound reaches the threshold, and the decision job overlaps the
     construction of the plain plan (the guarded plan is built only when
-    the guard engages). The scan's per-side sketches are memoized per
-    input snapshot, so a repeated call over unchanged inputs runs no
+    the guard engages). The scan's verdict is memoized per pair of input
+    snapshots, so a repeated guard-off call over unchanged inputs runs no
     decision job at all. Arguments are validated before any Spark job:
     ``hot_conv_turns`` must be None, ``"auto"`` or an int >= 1, and
     ``n_hot_buckets`` an int >= 1.

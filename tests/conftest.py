@@ -21,6 +21,17 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _empty_sketch_memo(monkeypatch):
+    """Start every test with an empty auto hot-guard memo, so no test's
+    'auto' call is settled by a verdict an earlier test memoized."""
+    import weakref
+
+    from kgfarm_spark.operators import backfill
+
+    monkeypatch.setattr(backfill, "_SKETCH_MEMO", weakref.WeakKeyDictionary())
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -706,7 +706,6 @@ def test_auto_threshold_matches_brute_force(spark, monkeypatch, build, decided_b
         return real_exact(*args)
 
     monkeypatch.setattr(backfill, "_exact_hot_threshold", spy)
-    monkeypatch.setattr(backfill, "_SKETCH_MEMO", weakref.WeakKeyDictionary())
     transcripts, probes = build(spark)
     keys = transcripts.select("conv_id")
     if probes is not None:
@@ -714,7 +713,7 @@ def test_auto_threshold_matches_brute_force(spark, monkeypatch, build, decided_b
     n_cores = max(spark.sparkContext.defaultParallelism, 2)
     want = _reference_threshold(keys, n_cores)
 
-    # cold, then warm from the memoized sketches: same answer, same path
+    # cold, then warm from the memoized verdict: same answer, same path
     for run in ("cold", "warm"):
         exact_calls.clear()
         got = backfill._auto_hot_threshold(transcripts, "conv_id", probes)
@@ -762,11 +761,11 @@ def _input_records(spark, jobs) -> int:
 
 def test_auto_decision_is_memoized_per_input_snapshot(spark, tmp_path):
     """The first 'auto' call over parquet frames runs the one certificate
-    job; a second call over the same frames reads both sides' sketches
-    from the memo and runs no job. Appending a file to the transcript
-    directory and reading it again is a new snapshot of that side: the
-    certificate runs again, over the transcripts only. The output stays
-    the guard-off output throughout."""
+    job; a second call over the same frames reads the verdict from the
+    memo and runs no job. Appending a file to the transcript directory
+    and reading it again is a new snapshot: the certificate runs again
+    over every turn and probe. The output stays the guard-off output
+    throughout."""
     t_dir = tmp_path / "t"
     t = _parquet(spark, gen_transcripts(spark, n_turns=4_000, n_convs=100, seed=5), t_dir)
     probes = _parquet(spark, gen_probes(spark, t), tmp_path / "p")
@@ -784,29 +783,28 @@ def test_auto_decision_is_memoized_per_input_snapshot(spark, tmp_path):
     out, jobs = _jobs_during(spark, "memo-snapshot-append", lambda: _auto(t2, probes))
     assert not isinstance(out, Exception), out
     assert len(jobs) == 1
-    assert _input_records(spark, jobs) == 5_000
+    assert _input_records(spark, jobs) == 5_000 + probes.count()
     assert _frames_equal(out, backfill_asof_fused(t2, probes, tolerance="1 DAY"))
 
 
-def test_auto_new_probe_frame_scans_only_its_keys(spark, tmp_path):
-    """A new probe frame over a memoized transcript side: the certificate
-    job reads the probe rows and no transcript row."""
+def test_auto_new_probe_frame_runs_the_certificate_again(spark, tmp_path):
+    """A new probe frame over a memoized transcript frame is a new pair:
+    the certificate runs again. The first pair's verdict stays memoized."""
     t = _parquet(spark, gen_transcripts(spark, n_turns=4_000, n_convs=100, seed=9), tmp_path / "t")
     p1 = _parquet(spark, gen_probes(spark, t), tmp_path / "p1")
     p2 = _parquet(spark, gen_probes(spark, t, every_nth=5), tmp_path / "p2")
     _auto(t, p1)
-    out, jobs = _jobs_during(spark, "memo-new-probes", lambda: _auto(t, p2))
-    assert not isinstance(out, Exception), out
-    assert len(jobs) == 1
-    assert _input_records(spark, jobs) == p2.count()
+    for run, probes, want_jobs in (("new", p2, 1), ("old", p1, 0)):
+        out, jobs = _jobs_during(spark, f"memo-probes-{run}", lambda: _auto(t, probes))
+        assert not isinstance(out, Exception), out
+        assert len(jobs) == want_jobs, (run, jobs)
 
 
-def test_auto_never_memoizes_a_nondeterministic_side(spark, monkeypatch):
-    """A ``rand()`` key column is summarized again on every call; the
-    deterministic probe side is read from the memo."""
+def test_auto_never_memoizes_a_nondeterministic_side(spark):
+    """A pair with a ``rand()`` key column is certified again on every
+    call and leaves nothing in the memo."""
     from kgfarm_spark.operators import backfill
 
-    monkeypatch.setattr(backfill, "_SKETCH_MEMO", weakref.WeakKeyDictionary())
     t = spark.range(2_000).selectExpr("CAST(floor(rand() * 200) AS INT) AS conv_id")
     p = spark.range(100).selectExpr("CAST(id AS INT) AS conv_id")
     for run in ("first", "second"):
@@ -814,27 +812,22 @@ def test_auto_never_memoizes_a_nondeterministic_side(spark, monkeypatch):
             spark, f"memo-rand-{run}", lambda: backfill._auto_hot_threshold(t, "conv_id", p)
         )
         assert got is None and len(jobs) == 1, (run, got, jobs)
-    assert len(backfill._SKETCH_MEMO[spark]) == 1
+    assert spark not in backfill._SKETCH_MEMO
 
 
 def test_sketch_memo_is_bounded_and_releases_a_dead_session():
-    """The memo holds at most ``_MEMO_ENTRIES`` sides per session, the
+    """The memo holds at most ``_MEMO_ENTRIES`` pairs per session, the
     least recently used going first, and does not keep a session alive."""
-    from kgfarm_spark.operators.backfill import (
-        _MEMO_ENTRIES,
-        _SKETCH_MEMO,
-        _Summary,
-        _memo_put,
-    )
+    from kgfarm_spark.operators.backfill import _MEMO_ENTRIES, _SKETCH_MEMO, _memo_put
 
     class _Session:  # weakref-able stand-in for a SparkSession
         pass
 
     session = _Session()
     for i in range(_MEMO_ENTRIES + 3):
-        _memo_put(session, (object(), ("plan", i)), _Summary(i, 0, b"", (i,)))
+        _memo_put(session, ([object()], ("pair", i)), True)
     memo = _SKETCH_MEMO[session]
-    assert list(memo) == [("plan", i) for i in range(3, _MEMO_ENTRIES + 3)]
+    assert list(memo) == [("pair", i) for i in range(3, _MEMO_ENTRIES + 3)]
     alive = weakref.ref(session)
     del session, memo
     gc.collect()
@@ -865,7 +858,11 @@ def test_auto_detection_leaves_session_usable_for_ml(spark):
     from kgfarm_spark.operators.backfill import _auto_hot_threshold
 
     t = gen_transcripts(spark, n_turns=2_000, n_convs=100, seed=31, skew=1.0)
-    assert _auto_hot_threshold(t, "conv_id", gen_probes(spark, t)) is None
+    probes = gen_probes(spark, t)
+    got, jobs = _jobs_during(spark, "auto-ml", lambda: _auto_hot_threshold(t, "conv_id", probes))
+    # the certificate ran (the generator's window shuffle makes it two
+    # jobs here), so its metrics were read from the query
+    assert got is None and jobs, (got, jobs)
     d = spark.createDataFrame(
         [(Vectors.dense([float(i), 1.0]), float(i % 2)) for i in range(40)],
         ["features", "label"],

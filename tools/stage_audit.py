@@ -5,8 +5,8 @@ runtime exchange reuse), shuffle read/write bytes, and job and stage
 counts (jobs are counted per query through a job group, so a plan that
 grows an extra job, e.g. a key-set collection, shows up). ``n_jobs_warm``
 is the job count of a second run of the same query, which shows what a
-session reuses across calls (e.g. the auto hot-guard's memoized key
-sketches).
+session reuses across calls (e.g. the auto hot-guard's memoized
+verdict).
 
 Usage: python tools/stage_audit.py [query ...]
 """
@@ -49,7 +49,7 @@ def main() -> None:
         app_name="kgfarm_stage_audit", master=f"local[{cpus}]",
         shuffle_partitions=cpus, extra_conf={"spark.ui.enabled": "true"},
     )
-    # warm, then forget the key sketches it memoized: n_jobs stays each
+    # warm, then forget the verdicts it memoized: n_jobs stays each
     # query's first-run count
     QUERIES[names[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
     _SKETCH_MEMO.pop(spark, None)
