@@ -916,42 +916,6 @@ def run_corpus_scale() -> dict:
             out_rec[f"{meth}_docs_per_sec"] = round(n_docs / dt)
         return out_rec
 
-    def _bloom_incremental() -> dict:
-        """r06: cross-shard Bloom dedup — the 5M-doc corpus plays the
-        history, a derived 2M-doc shard (half verbatim dups, half novel)
-        plays the ingest. build = one corpus-linear mapInPandas pass;
-        probe+verify = map-side broadcast probe, exact join over
-        candidates only (the structural win: join input ∝ dup rate)."""
-        from kgfarm_spark.operators.incremental import (
-            bloom_fpr,
-            build_history_filter,
-            dedup_against_history,
-        )
-
-        t0 = time.monotonic()
-        model = build_history_filter(docs, n_bits=1 << 26, k=6)
-        build_sec = round(time.monotonic() - t0, 1)
-        shard = docs.filter(F.col("doc_id") % 5 < 2).select(
-            (F.col("doc_id") + 100_000_000).alias("doc_id"),
-            F.when(F.col("doc_id") % 5 == 0, F.col("text"))
-            .otherwise(F.concat(F.col("text"), F.lit(" novel-"),
-                                F.col("doc_id").cast("string")))
-            .alias("text"),
-        )
-        n_shard = shard.count()
-        t1 = time.monotonic()
-        survivors = dedup_against_history(shard, model, docs)
-        n_out = survivors.count()
-        probe_sec = round(time.monotonic() - t1, 1)
-        return {
-            "history_docs": n_docs, "shard_docs": n_shard,
-            "survivors": n_out, "build_sec": build_sec,
-            "probe_verify_sec": probe_sec,
-            "shard_docs_per_sec": round(n_shard / probe_sec),
-            "fpr": round(bloom_fpr(model), 6),
-            "filter_mb": round((1 << 26) / 8 / 1e6, 1),
-        }
-
     def _quality_classifier() -> dict:
         """r06: the GPT-3 classifier-filtering recipe at 5M docs —
         deterministic full-batch GD fit (two linear shuffles per
@@ -1035,7 +999,6 @@ def run_corpus_scale() -> dict:
         "materialize_sequences": _materialize,
         "gopher_repetition_full": _gopher_rep_full,
         "bpe_apply": _bpe_apply,
-        "dedup_incremental_bloom": _bloom_incremental,
         "quality_classifier": _quality_classifier,
         "wordpiece_tokenizer": _wordpiece,
     }
@@ -1216,120 +1179,6 @@ def run_tok_scale() -> dict:
     return out["materialize_scaling_1v4"]
 
 
-def run_convfe_scale_one(cpus: int) -> dict:
-    """One preference-pair construction run at a given parallelism over
-    the 16M-turn transcript table (fresh subprocess per level, like
-    --scale-one): conv-keyed lead window → prompt-keyed max_by/min_by
-    aggregate — the representative two-shuffle shape of the conversation
-    feature-eng family."""
-    from kgfarm_spark.operators.conversations import preference_pairs
-    from kgfarm_spark.session import get_spark
-
-    spark = get_spark(
-        app_name=f"kgfarm_convfe_{cpus}", master=f"local[{cpus}]",
-        shuffle_partitions=cpus * 2,
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
-    t = spark.read.parquet(SCALE_DIR)
-    n = t.count()
-    job = preference_pairs(t)
-    job.write.format("noop").mode("overwrite").save()  # warm
-    t0 = time.monotonic()
-    job.write.format("noop").mode("overwrite").save()
-    dt = time.monotonic() - t0
-    spark.stop()
-    return {"cpus": cpus, "turns": n, "sec": round(dt, 3)}
-
-
-def run_convfe_scaling() -> dict:
-    """North-rule pair for the conversation feature family: 1 vs 4
-    cores, fresh subprocess per level, merged into BENCH_LLM.json."""
-    ensure_scale_data()
-    path = os.path.join(REPO, "BENCH_LLM.json")
-    out: dict = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            out = json.load(f)
-    pair = {}
-    for level in (1, 4):
-        pair[level] = run_scale_subprocess("--convfe-scale-one", level)
-    thr1 = pair[1]["turns"] / pair[1]["sec"]
-    thr4 = pair[4]["turns"] / pair[4]["sec"]
-    out["convfe_scaling_1v4"] = {
-        "turns": pair[1]["turns"],
-        "sec_1": pair[1]["sec"], "sec_4": pair[4]["sec"],
-        "turns_per_sec_1": round(thr1), "turns_per_sec_4": round(thr4),
-        "scaling_efficiency": round((thr4 / thr1) / 4.0, 3),
-    }
-    with open(path, "w") as f:
-        json.dump(out, f, indent=1)
-    return out["convfe_scaling_1v4"]
-
-
-def run_bloom_scale_one(cpus: int) -> dict:
-    """One Bloom probe+verify run at a given parallelism over the 5M-doc
-    history (fresh subprocess per level): filter built once (untimed —
-    it is the fit), then the ingest-shard dedup timed."""
-    from pyspark.sql import functions as F
-
-    from kgfarm_spark.operators.incremental import (
-        build_history_filter,
-        dedup_against_history,
-    )
-    from kgfarm_spark.session import get_spark
-
-    spark = get_spark(
-        app_name=f"kgfarm_bloom_{cpus}", master=f"local[{cpus}]",
-        shuffle_partitions=cpus * 2,
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
-    docs = spark.read.parquet(DOCS_DIR)
-    model = build_history_filter(docs, n_bits=1 << 26, k=6)
-    shard = docs.filter(F.col("doc_id") % 5 < 2).select(
-        (F.col("doc_id") + 100_000_000).alias("doc_id"),
-        F.when(F.col("doc_id") % 5 == 0, F.col("text"))
-        .otherwise(F.concat(F.col("text"), F.lit(" novel-"),
-                            F.col("doc_id").cast("string")))
-        .alias("text"),
-    )
-    n = shard.count()
-    dedup_against_history(shard, model, docs).write.format("noop").mode(
-        "overwrite"
-    ).save()  # warm
-    t0 = time.monotonic()
-    dedup_against_history(shard, model, docs).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    dt = time.monotonic() - t0
-    spark.stop()
-    return {"cpus": cpus, "docs": n, "sec": round(dt, 3)}
-
-
-def run_bloom_scale() -> dict:
-    """North-rule pair for incremental Bloom dedup: 1 vs 4 cores, fresh
-    subprocess per level, merged into BENCH_LLM.json."""
-    ensure_llm_data()
-    path = os.path.join(REPO, "BENCH_LLM.json")
-    out: dict = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            out = json.load(f)
-    pair = {}
-    for level in (1, 4):
-        pair[level] = run_scale_subprocess("--bloom-scale-one", level)
-    thr1 = pair[1]["docs"] / pair[1]["sec"]
-    thr4 = pair[4]["docs"] / pair[4]["sec"]
-    out["bloom_scaling_1v4"] = {
-        "docs": pair[1]["docs"],
-        "sec_1": pair[1]["sec"], "sec_4": pair[4]["sec"],
-        "docs_per_sec_1": round(thr1), "docs_per_sec_4": round(thr4),
-        "scaling_efficiency": round((thr4 / thr1) / 4.0, 3),
-    }
-    with open(path, "w") as f:
-        json.dump(out, f, indent=1)
-    return out["bloom_scaling_1v4"]
-
-
 def ensure_stream_data() -> None:
     """8M-turn transcripts written as FOUR time-range chunks with distinct
     mod times (the file source orders batches by modification time), so
@@ -1365,122 +1214,6 @@ def ensure_stream_data() -> None:
         os.path.join(STREAM_DIR, "probes")
     )
     spark.stop()
-
-
-def run_convfe_scale() -> dict:
-    """r06: the conversation feature-eng constructors at SCALE_TURNS
-    turns (the 16M-turn transcript table) — preference pairs, dialogue
-    context examples, SFT token masks. Results merge into BENCH_LLM.json
-    under 'convfe_*' keys after every leg. SPARK_GRAFT_CONVFE_ONLY=
-    "preference_pairs" re-benches a subset."""
-    from pyspark.sql import functions as F
-
-    from kgfarm_spark.operators.conversations import (
-        dialogue_context_examples,
-        preference_pairs,
-        render_chat,
-        sft_token_masks,
-    )
-    from kgfarm_spark.session import get_spark
-
-    ensure_scale_data()
-    path = os.path.join(REPO, "BENCH_LLM.json")
-    out: dict = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            out = json.load(f)
-    spark = get_spark(
-        app_name="kgfarm_convfe", master="local[8]", shuffle_partitions=64
-    )
-    t = spark.read.parquet(SCALE_DIR)
-    n_turns = t.count()
-
-    def _noop(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    def _pref() -> dict:
-        df = preference_pairs(t)
-        _noop(df)
-        return {"pairs": df.count()}
-
-    def _ctx() -> dict:
-        _noop(dialogue_context_examples(t, k=4))
-        return {"k": 4}
-
-    def _sft() -> dict:
-        from kgfarm_spark.operators.wordpiece import wordpiece_train
-
-        corpus = render_chat(t).select(F.col("chat_text").alias("text"))
-        t0 = time.monotonic()
-        _, vocab = wordpiece_train(corpus, n_merges=500)
-        train_sec = round(time.monotonic() - t0, 1)
-        t1 = time.monotonic()
-        _noop(sft_token_masks(t, vocab))
-        mask_sec = round(time.monotonic() - t1, 1)
-        return {
-            "n_merges": 500, "vocab_train_sec": train_sec,
-            "render_tokenize_mask_sec": mask_sec,
-            "turns_per_sec": round(n_turns / mask_sec),
-        }
-
-    def _sft_packed() -> dict:
-        """The full trainable-batch chain: render → tokenize+mask →
-        pack into 2048-token sequences with masks riding along."""
-        from kgfarm_spark.operators.packing import pack_sft_sequences
-        from kgfarm_spark.operators.wordpiece import wordpiece_train
-
-        corpus = render_chat(t).select(F.col("chat_text").alias("text"))
-        _, vocab = wordpiece_train(corpus, n_merges=500)
-        t1 = time.monotonic()
-        masks = sft_token_masks(t, vocab)
-        packed = pack_sft_sequences(masks, budget=2048, pad_token="[PAD]")
-        n_seqs = packed.count()
-        chain_sec = round(time.monotonic() - t1, 1)
-        return {
-            "budget": 2048, "sequences": n_seqs,
-            "mask_pack_sec": chain_sec,
-            "turns_per_sec": round(n_turns / chain_sec),
-        }
-
-    def _curate_convs() -> dict:
-        """Conversation-native curation chain at 16M turns: integrity →
-        render → exact dedup → pack. near-dup is EXCLUDED here by
-        design: gen_transcripts draws text from a 9-word vocabulary, so
-        every rendered conversation is a near-duplicate of every other
-        (Jaccard ≈ 1 → LSH candidates ≈ all-pairs 40k² ≈ 1.6B — measured
-        >20 min, output-bound on the degenerate corpus, not the kernel;
-        the LSH kernel's honest scale number is the 5M diverse-doc row)."""
-        from kgfarm_spark.operators.conversations import curate_conversations
-
-        _, manifest = curate_conversations(
-            t, min_turns=2, neardup=False, pack_budget=2048,
-        )
-        return {"stages": manifest["stages"],
-                "note": "near-dup excluded: 9-word synthetic vocabulary "
-                        "makes conversation-level Jaccard~1 all-pairs"}
-
-    legs = {
-        "convfe_preference_pairs": _pref,
-        "convfe_dialogue_context": _ctx,
-        "convfe_sft_token_masks": _sft,
-        "convfe_sft_packed": _sft_packed,
-        "convfe_curation_e2e": _curate_convs,
-    }
-    only = {x for x in (os.environ.get("SPARK_GRAFT_CONVFE_ONLY") or "").split(",") if x}
-    for name, fn in legs.items():
-        if only and name not in only:
-            continue
-        t0 = time.monotonic()
-        extra = fn()
-        dt = time.monotonic() - t0
-        out[name] = {
-            "turns": n_turns, "sec": round(dt, 1),
-            "turns_per_sec_total": round(n_turns / dt), **extra,
-        }
-        with open(path, "w") as f:
-            json.dump(out, f, indent=1)
-    spark.stop()
-    return {k: out[k] for k in legs if k in out}
 
 
 def run_stream_scale(cpus: int = 8) -> dict:
@@ -1645,19 +1378,6 @@ def main() -> None:
         print(json.dumps(run_stream_scale(min(cpus, 8))))
         return
 
-    if "--convfe-scale-one" in sys.argv:
-        level = int(sys.argv[sys.argv.index("--convfe-scale-one") + 1])
-        print(json.dumps(run_convfe_scale_one(level)))
-        return
-
-    if "--convfe-scaling" in sys.argv:
-        print(json.dumps(run_convfe_scaling()))
-        return
-
-    if "--convfe-scale" in sys.argv:
-        print(json.dumps(run_convfe_scale()))
-        return
-
     if "--llm-scale-one" in sys.argv:
         level = int(sys.argv[sys.argv.index("--llm-scale-one") + 1])
         print(json.dumps(run_llm_dedup_one(level)))
@@ -1670,15 +1390,6 @@ def main() -> None:
 
     if "--tok-scale" in sys.argv:
         print(json.dumps(run_tok_scale()))
-        return
-
-    if "--bloom-scale-one" in sys.argv:
-        level = int(sys.argv[sys.argv.index("--bloom-scale-one") + 1])
-        print(json.dumps(run_bloom_scale_one(level)))
-        return
-
-    if "--bloom-scale" in sys.argv:
-        print(json.dumps(run_bloom_scale()))
         return
 
     if "--corpus-scale" in sys.argv:

@@ -440,70 +440,6 @@ class FeatureFarm:
 
         return _curate(docs, id_col, text_col, eval_df, **kw)
 
-    def validate_conversations(self, turns: DataFrame, **kw) -> DataFrame:
-        """Per-conversation structural validation flags over the transcript
-        table (operators/conversations.py:conv_integrity) — contiguity,
-        ts monotonicity, role alternation, empty-text fraction."""
-        from kgfarm_spark.operators.conversations import conv_integrity
-
-        return conv_integrity(turns, **kw)
-
-    def render_chat(self, turns: DataFrame, **kw) -> DataFrame:
-        """One deterministic training string per conversation:
-        '<|role|>text' lines in turn order
-        (operators/conversations.py:render_chat)."""
-        from kgfarm_spark.operators.conversations import render_chat
-
-        return render_chat(turns, **kw)
-
-    def chat_spans(self, turns: DataFrame, **kw) -> DataFrame:
-        """Per-turn [start_char, end_char) spans over the render_chat
-        string (operators/conversations.py:chat_turn_spans) — the
-        loss-mask primitive: filter to role='assistant' spans to train
-        on assistant turns only."""
-        from kgfarm_spark.operators.conversations import chat_turn_spans
-
-        return chat_turn_spans(turns, **kw)
-
-    def curate_conversations(self, turns: DataFrame, **kw) -> tuple[DataFrame, dict]:
-        """Conversation-native curation chain: integrity filter → chat
-        rendering → exact dedup → optional LSH near-dup keep-longest →
-        sequence packing (operators/conversations.py:curate_conversations).
-        Returns (result_df, manifest)."""
-        from kgfarm_spark.operators.conversations import curate_conversations
-
-        return curate_conversations(turns, **kw)
-
-    def sft_masks(self, turns: DataFrame, vocab: DataFrame, **kw) -> DataFrame:
-        """Training-ready SFT token sequences + loss masks: render each
-        conversation, tokenize offset-preserving with a WordPiece vocab,
-        mark exactly the tokens inside assistant (``train_role``) turns
-        (operators/conversations.py:sft_token_masks)."""
-        from kgfarm_spark.operators.conversations import sft_token_masks
-
-        return sft_token_masks(turns, vocab, **kw)
-
-    def preference_pairs(self, turns: DataFrame, **kw) -> DataFrame:
-        """DPO/reward-model pair construction: group user→assistant
-        exchanges by identical prompt; emit (prompt, chosen, rejected)
-        with the highest/lowest-scoring distinct responses
-        (operators/conversations.py:preference_pairs). Pass
-        ``score_col`` for a real reward; the default scores by response
-        length (a documented stand-in)."""
-        from kgfarm_spark.operators.conversations import preference_pairs
-
-        return preference_pairs(turns, **kw)
-
-    def dialogue_examples(self, turns: DataFrame, k: int = 4, **kw) -> DataFrame:
-        """Next-response training examples: per assistant turn, the
-        previous ≤k turns rendered in the chat template as conditioning
-        context (operators/conversations.py:dialogue_context_examples)."""
-        from kgfarm_spark.operators.conversations import (
-            dialogue_context_examples,
-        )
-
-        return dialogue_context_examples(turns, k=k, **kw)
-
     def novelty(self, docs: DataFrame, reference: DataFrame,
                 n: int = 5, **kw) -> DataFrame:
         """Per-document n-gram novelty vs a corpus-sized reference — the
@@ -517,45 +453,21 @@ class FeatureFarm:
     def embed_text(self, docs: DataFrame, dim: int = 256, **kw) -> DataFrame:
         """Feature-hashing text embedding (Weinberger et al. 2009): L2-
         normalized signed hashed bag-of-words, the encoder-free bridge
-        from text (documents, rendered conversations) to the vector
-        stack — feed the output to `similar()` / `dedup(method=
-        'semantic')` (operators/similarity.py:hashed_text_embedding)."""
+        from text to the vector stack — feed the output to `similar()` /
+        `dedup(method='semantic')`
+        (operators/similarity.py:hashed_text_embedding)."""
         from kgfarm_spark.operators.similarity import hashed_text_embedding
 
         return hashed_text_embedding(docs, dim=dim, **kw)
 
     def pack_sft(self, masks: DataFrame, budget: int = 2048,
                  **kw) -> DataFrame:
-        """Pack ``sft_masks`` output into fixed-budget training sequences
-        with the loss masks riding along; pad never trains
+        """Pack per-row (tokens, loss_mask) arrays into fixed-budget
+        training sequences with the masks riding along; pad never trains
         (operators/packing.py:pack_sft_sequences)."""
         from kgfarm_spark.operators.packing import pack_sft_sequences
 
         return pack_sft_sequences(masks, budget=budget, **kw)
-
-    def truncate_context(self, turns: DataFrame, budget: int = 2048,
-                         **kw) -> DataFrame:
-        """Context-window truncation: keep per conversation the maximal
-        turn SUFFIX fitting ``budget`` tokens; the final turn is always
-        kept (operators/conversations.py:truncate_to_context)."""
-        from kgfarm_spark.operators.conversations import truncate_to_context
-
-        return truncate_to_context(turns, budget=budget, **kw)
-
-    def tool_profile(self, turns: DataFrame, **kw) -> DataFrame:
-        """Per-conversation tool-usage features — counts, variety,
-        dominant tool (operators/conversations.py:tool_usage_profile)."""
-        from kgfarm_spark.operators.conversations import tool_usage_profile
-
-        return tool_usage_profile(turns, **kw)
-
-    def tool_transitions(self, turns: DataFrame, **kw) -> DataFrame:
-        """Corpus-wide tool→tool transition counts — the first-order
-        Markov structure of agent tool use
-        (operators/conversations.py:tool_transition_matrix)."""
-        from kgfarm_spark.operators.conversations import tool_transition_matrix
-
-        return tool_transition_matrix(turns, **kw)
 
     def chunk(self, docs: DataFrame, window: int = 512, stride: int = 256,
               **kw) -> DataFrame:
@@ -592,24 +504,6 @@ class FeatureFarm:
         from kgfarm_spark.operators.quality_model import pareto_select
 
         return pareto_select(scored, alpha=alpha, **kw)
-
-    def history_filter(self, history: DataFrame, **kw) -> dict:
-        """One corpus-linear pass over the historical corpus → a Bloom
-        filter model for incremental ingest dedup
-        (incremental.build_history_filter)."""
-        from kgfarm_spark.operators.incremental import build_history_filter
-
-        return build_history_filter(history, **kw)
-
-    def dedup_incremental(
-        self, new_docs: DataFrame, model: dict, history: DataFrame, **kw
-    ) -> DataFrame:
-        """EXACT cross-shard dedup of an ingest shard against the
-        historical corpus: map-side Bloom probe, verify join over
-        candidates only (incremental.dedup_against_history)."""
-        from kgfarm_spark.operators.incremental import dedup_against_history
-
-        return dedup_against_history(new_docs, model, history, **kw)
 
     def mix(
         self, docs: DataFrame, weights: dict, token_budget: int, **kw

@@ -1626,55 +1626,6 @@ def q_kn3_logprob(spark: SparkSession, sf: str) -> DataFrame:
     return kn3_logprob(docs, "doc_id", "text")
 
 
-@register(
-    "dedup_incremental_bloom",
-    r"""
-WITH newsh AS (
-  SELECT doc_id + 10000000 AS new_id,
-         CASE WHEN doc_id % 3 = 0 THEN coalesce(text, '')
-              ELSE coalesce(text, '') || ' novel-' || CAST(doc_id AS VARCHAR)
-         END AS text
-  FROM documents WHERE doc_id % 3 < 2
-)
-SELECT n.new_id AS doc_id
-FROM newsh n
-WHERE NOT EXISTS (SELECT 1 FROM documents h WHERE h.text = n.text)
-""",
-)
-def q_dedup_incremental_bloom(spark: SparkSession, sf: str) -> DataFrame:
-    """Incremental cross-shard dedup (incremental.dedup_against_history):
-    the corpus plays the 100-TB history, a derived shard (every 3rd doc
-    duplicated verbatim, every 3k+1-th made novel by a unique suffix)
-    plays today's ingest. The Bloom probe is a map-side zero-shuffle
-    Arrow projection over the broadcast bitmap; ONLY candidate rows
-    reach the exact verify join, so the result equals the plain
-    anti-join (the oracle) while the shuffle is proportional to the dup
-    rate, not the shard. NULL-text rows are always novel (SQL NULL
-    equality semantics on both engines)."""
-    from kgfarm_spark.operators.incremental import (
-        build_history_filter,
-        dedup_against_history,
-    )
-
-    docs = load_table(spark, sf, "documents").select("doc_id", "text")
-    new = docs.filter(F.col("doc_id") % 3 < 2).select(
-        (F.col("doc_id") + 10000000).alias("doc_id"),
-        F.when(
-            F.col("doc_id") % 3 == 0, F.coalesce(F.col("text"), F.lit(""))
-        )
-        .otherwise(
-            F.concat(
-                F.coalesce(F.col("text"), F.lit("")),
-                F.lit(" novel-"),
-                F.col("doc_id").cast("string"),
-            )
-        )
-        .alias("text"),
-    )
-    model = build_history_filter(docs, n_bits=1 << 20, k=6)
-    return dedup_against_history(new, model, docs).select("doc_id")
-
-
 # Shared oracle prefix for the quality-classifier family: the FULL fit
 # (2 unrolled full-batch GD iterations, dim=64, lr=2.0, target lang='en')
 # plus scoring, replayed in SQL. Exact because the fit is deterministic

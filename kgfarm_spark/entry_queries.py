@@ -470,7 +470,6 @@ def q_flagship_probe_pushdown(spark: SparkSession, sf: str) -> DataFrame:
 import kgfarm_spark.entry_profiling  # noqa: E402,F401
 import kgfarm_spark.entry_pipeline  # noqa: E402,F401
 import kgfarm_spark.entry_cleaning  # noqa: E402,F401
-import kgfarm_spark.entry_conversations  # noqa: E402,F401
 import kgfarm_spark.entry_ml  # noqa: E402,F401
 
 
@@ -788,20 +787,17 @@ _DEFERRED_PAST_DRIVER_CAP = [
     # new full-repetition oracle (which subsumes repetition_signals'
     # dup-line statistic):
     "gopher_line_rules",
-    # late-r06: the conversation-curation family enters (conv_integrity,
-    # render_chat, dedup_conversations — the payload-native layer). Three
-    # scaler/transform names defer; the family keeps FOUR in-window
-    # representatives (log_transform, standard_scale, minmax_scale,
-    # quantile_transform_apply) and each deferred kernel stays
-    # pytest-pinned (sklearn-parity tests in test_transforms):
+    # late-r06: three scaler/transform names defer; the family keeps FOUR
+    # in-window representatives (log_transform, standard_scale,
+    # minmax_scale, quantile_transform_apply) and each deferred kernel
+    # stays pytest-pinned (sklearn-parity tests in test_transforms):
     "sqrt_square_transform",    # r05 driver-green; shape family kept via log_transform
     "quantile_rank",            # r05 driver-green; quantile machinery kept via
                                 # quantile_transform_apply (same distributed fit)
     "power_transform_yj_apply", # r05 driver-green; apply-side hash-check pattern
                                 # kept via quantile_transform_apply
-    # late-r06: the incremental-dedup + quality-classifier family enters
-    # (dedup_incremental_bloom, quality_classifier_score,
-    # quality_pareto_select — Bloom cross-shard dedup and the GPT-3
+    # late-r06: the quality-classifier family enters
+    # (quality_classifier_score, quality_pareto_select — the GPT-3
     # classifier-filtering recipe). Three r05-driver-green names defer:
     "asof_forward_latest",      # r05 driver-green; asof family keeps THREE
                                 # in-window reps (backward, interval, nearest
@@ -813,10 +809,9 @@ _DEFERRED_PAST_DRIVER_CAP = [
                                 # in-window, and the shared md5-uniform noise
                                 # recipe is now ALSO driver-covered by the new
                                 # quality_pareto_select (same transform family)
-    # late-r06: chat_turn_spans (the loss-mask primitive over rendered
-    # chat) enters; discover_joins_small defers — r05 driver-green, and
-    # the join-discovery machinery stays in-window via pkfk_containment
-    # (same inclusion-dependency profile join):
+    # late-r06: discover_joins_small defers — r05 driver-green, and the
+    # join-discovery machinery stays in-window via pkfk_containment (same
+    # inclusion-dependency profile join):
     "discover_joins_small",
     # late-r06: wordpiece_pair_scores (round-0 of the BERT tokenizer —
     # completes the driver-checked tokenizer triad next to
@@ -824,27 +819,24 @@ _DEFERRED_PAST_DRIVER_CAP = [
     # detect_entities_tpch defers — r05 driver-green, profiling family
     # in-window via profile_orders + elect_default_entities:
     "detect_entities_tpch",
-    # late-r06 (2nd rotation): the preference/context/chunking family
-    # enters (preference_pairs, dialogue_context, chunk_documents — the
-    # post-curation training-example constructors). Three r05-driver-green
-    # names defer, each with its family still in-window:
-    "role_transitions",   # r01-r05 driver-green; conv-window family keeps
-                          # rolling_aggregates + sessionize + backfill_features
-                          # in-window, and dialogue_context enters on the SAME
-                          # conv-keyed window machinery
+    # late-r06 (2nd rotation): chunk_documents enters. Three
+    # r05-driver-green names defer, each with its family still in-window:
+    "role_transitions",   # r01-r05 driver-green; role_transitions_hot_safe
+                          # checks the SAME oracle SQL in-window, and the
+                          # conv-window family keeps rolling_aggregates +
+                          # backfill_features in-window
     "bigram_logprob",     # r05 driver-green; LM family keeps ccnet_buckets,
                           # dsir_importance AND kn3_logprob (which subsumes the
                           # bigram interpolation) in-window
     "asof_interval_all",  # r05 driver-green; asof family keeps
                           # asof_backward_latest + both fused flagship twins
                           # in-window
-    # late-r06 (3rd rotation): the agent-transcript feature family enters
-    # (truncate_to_context, tool_usage_profile, tool_transitions). Three
-    # more r05-driver-green names defer, families in-window:
+    # late-r06 (3rd rotation): three more r05-driver-green names defer,
+    # families in-window:
     "sessionize",             # r01-r05 driver-green; conv-window family keeps
-                              # rolling_aggregates + backfill_features, plus the
-                              # entering dialogue_context + truncate_to_context
-                              # run the SAME conv-keyed window machinery
+                              # rolling_aggregates + backfill_features
+                              # in-window on the SAME conv-keyed window
+                              # machinery
     "elect_default_entities", # r05 driver-green; profiling family keeps
                               # profile_orders in-window
     "duplicate_ngram_spans",  # r05 driver-green; dedup family keeps

@@ -404,7 +404,7 @@ def _sorted_codes_df(df: DataFrame, c: str) -> DataFrame:
     spark = df.sparkSession
     # df is already the distinct non-null value frame (fit passes it in);
     # a raw column frame also works — distinct() dedups idempotently
-    vals = df.select(c).filter(F.col(c).isNotNull()).distinct().orderBy(c)
+    vals = df.select(_col(c)).filter(_col(c).isNotNull()).distinct().orderBy(_col(c))
     value_type = vals.schema[0].dataType
     rdd = vals.rdd.map(lambda r: r[0]).zipWithIndex()
     from pyspark.sql.types import LongType, StructField, StructType
@@ -426,10 +426,10 @@ def fit_ordinal_encoder(
     never builds a 1M-branch expression tree."""
     params = {}
     for c in cols:
-        distinct_df = df.select(c).filter(F.col(c).isNotNull()).distinct()
+        distinct_df = df.select(_col(c)).filter(_col(c).isNotNull()).distinct()
         k = distinct_df.limit(max_collect + 1).count()
         if k <= max_collect:
-            vals = [r[c] for r in distinct_df.orderBy(c).collect()]
+            vals = [r[c] for r in distinct_df.orderBy(_col(c)).collect()]
             params[c] = {v: i for i, v in enumerate(vals)}
         else:
             # reuse the distinct frame — recomputing it inside
@@ -450,14 +450,14 @@ def apply_ordinal_encoder(df: DataFrame, params: dict) -> DataFrame:
                 F.col("value").alias(vcol), F.col("code").alias(ccol)
             )
             out = (
-                out.join(dict_df, out[c] == dict_df[vcol], "left")
-                .withColumn(c, F.col(ccol).cast("long"))
+                out.join(dict_df, _col(c) == _col(vcol), "left")
+                .withColumn(c, _col(ccol).cast("long"))
                 .drop(vcol, ccol)
             )
             continue
         expr = None
         for v, code in mapping.items():
-            cond = F.col(c) == F.lit(v)
+            cond = _col(c) == F.lit(v)
             expr = F.when(cond, code) if expr is None else expr.when(cond, code)
         # long on BOTH paths — the distributed dictionary emits long, and
         # a schema that flips int/long at the ORDINAL_COLLECT_MAX boundary
@@ -489,7 +489,7 @@ def one_hot_encode(
         # the old orderBy for every orderable Spark type (UTF-8 byte
         # order is code-point order).
         row = df.agg(
-            *[F.count_distinct(F.col(c)).alias(c) for c in todo]
+            *[F.count_distinct(_col(c)).alias(c) for c in todo]
         ).first()
         ok = [c for c in todo if row[c] <= max_distinct]
         by_dtype: dict[str, list[str]] = {}
@@ -502,7 +502,7 @@ def one_hot_encode(
                     F.explode(
                         F.array(
                             *[
-                                F.struct(F.lit(c).alias("__c"), F.col(c).alias("__v"))
+                                F.struct(F.lit(c).alias("__c"), _col(c).alias("__v"))
                                 for c in grp
                             ]
                         )
@@ -530,7 +530,7 @@ def one_hot_encode(
             # null/unseen -> 0 (not NULL): pd.get_dummies semantics and
             # exactly what the DuckDB oracle's CASE already emits
             out = out.withColumn(
-                f"{c}_{v}", F.when(F.col(c) == F.lit(v), 1).otherwise(0)
+                f"{c}_{v}", F.when(_col(c) == F.lit(v), 1).otherwise(0)
             )
         out = out.drop(c)
     return out, cats

@@ -174,14 +174,15 @@ def _hot_bounds(
     now depends on the key's event-time uniformity instead of exact row
     quantiles; that only affects parallelism, never correctness (any
     monotone pure-function-of-ts cut gives an exact decomposition)."""
-    tsd = F.col(ts).cast("timestamp").cast("double")
+    k = F.col(_ident(key))
+    tsd = F.col(_ident(ts)).cast("timestamp").cast("double")
     # probe rows count toward the straggler threshold but a NULL tsd
     # keeps them out of the transcript-span min/max
-    rows = transcripts.select(F.col(key), tsd.alias("__tsd")).unionByName(
-        probes.select(F.col(key), F.lit(None).cast("double").alias("__tsd"))
+    rows = transcripts.select(k, tsd.alias("__tsd")).unionByName(
+        probes.select(k, F.lit(None).cast("double").alias("__tsd"))
     )
     stats = (
-        rows.groupBy(key)
+        rows.groupBy(k)
         .agg(
             F.count(F.lit(1)).alias("__n"),
             F.min("__tsd").alias("__lo"),
@@ -191,7 +192,7 @@ def _hot_bounds(
     )
     width = (F.col("__hi") - F.col("__lo")) / F.lit(float(n_buckets))
     return stats.select(
-        key,
+        k,
         F.col("__lo"),
         F.when(width > 0, width).alias("__w"),  # degenerate span → bucket 0
         F.lit(n_buckets).alias("__nb"),
@@ -233,15 +234,16 @@ def _fused_state_guarded(u: DataFrame, key: str, hot_bounds: DataFrame) -> DataF
     all earlier buckets. Guard cost over the plain path: one
     column-pruned (key, ts) stats pass and one turns-only partials pass,
     both with tiny outputs."""
+    k = F.col(_ident(key))
     tsd = F.col("__ts").cast("timestamp").cast("double")
     hot_turns = (
         u.filter(F.col("__side") == 0)
         .join(F.broadcast(hot_bounds), key)
         .withColumn("__ob", _bucket_col(tsd))
     )
-    partials = hot_turns.groupBy(key, "__ob").agg(*map(F.expr, cumulative.parts(_SPEC)))
+    partials = hot_turns.groupBy(k, "__ob").agg(*map(F.expr, cumulative.parts(_SPEC)))
     grid = hot_bounds.select(
-        F.col(key), F.explode(F.sequence(F.lit(0), F.col("__nb") - 1)).alias("__ob")
+        k, F.explode(F.sequence(F.lit(0), F.col("__nb") - 1)).alias("__ob")
     )
     carry = grid.join(partials, [key, "__ob"], "left").selectExpr(
         _ident(key), "__ob", *cumulative.carry(_SPEC, key)

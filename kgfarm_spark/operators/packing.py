@@ -607,22 +607,21 @@ def pack_sft_sequences(
     n_buckets: int | None = None,
     check_ids: bool = True,
 ) -> DataFrame:
-    """Pack SFT (token, loss-mask) outputs into fixed-``budget`` training
-    sequences with the masks riding along —
+    """Pack per-row (token, loss-mask) arrays into fixed-``budget``
+    training sequences with the masks riding along —
 
       (seq_id, tokens, loss_mask, n_tokens, n_docs[, n_pad])
 
-    — the last step between ``sft_token_masks`` and an actual training
-    loop: a conversation crossing a sequence boundary contributes its
+    — the last step before an actual training loop: a row crossing a
+    sequence boundary contributes its
     prefix to one sequence and the remainder to the next, and each
     token's mask bit moves WITH it (zip → ``materialize_sequences`` on
     the zipped struct array → unzip, so the packer's concat-roundtrip
     invariant carries over verbatim). ``pad_token`` pads the short tail
     sequence; padding is always mask=False — pad must never train.
 
-    The input contract is ``sft_token_masks``'s: ``len(tokens) ==
-    len(loss_mask)`` per row (``arrays_zip`` would otherwise null-pad
-    the shorter side).
+    The input contract: ``len(tokens) == len(loss_mask)`` per row
+    (``arrays_zip`` would otherwise null-pad the shorter side).
 
     Scale shape: identical to ``materialize_sequences`` — codegen'd
     slice explode, ONE seq_id shuffle, budget-bounded group state; the
@@ -633,7 +632,7 @@ def pack_sft_sequences(
         F.xxhash64(F.col(id_col)) if id_type == "string" else F.col(id_col)
     )  # pack_sequences range-buckets the id space, so string ids hash to
     # bigint first — sequence order is then deterministic in HASHED-id
-    # order (arbitrary but stable), the curate_conversations convention
+    # order (arbitrary but stable)
     zipped = masks_df.select(
         id_expr.alias("__pid"), F.arrays_zip(token_col, mask_col).alias("__z")
     )

@@ -228,22 +228,7 @@ def test_clean_interpolate_requires_order(farm):
         farm.clean(docs, recommendation="Interpolate")
 
 
-def test_facade_conversation_verbs(farm, spark):
-    from kgfarm_spark.sources.transcripts import transcripts
-
-    t = transcripts(spark, SF_SMOKE)
-    flags = farm.validate_conversations(t)
-    assert "integrity_ok" in flags.columns
-    rendered = farm.render_chat(t, max_turns=4)
-    row = rendered.filter(F.col("n_turns") >= 2).first()
-    assert row["chat_text"].startswith("<|")
-    packed, manifest = farm.curate_conversations(t, min_turns=1, pack_budget=64)
-    stages = [s["stage"] for s in manifest["stages"]]
-    assert stages == ["integrity", "exact_dedup", "pack"]
-    assert packed.count() > 0
-
-
-def test_facade_quality_classifier_and_incremental(farm, spark):
+def test_facade_quality_classifier(farm, spark):
     docs = spark.createDataFrame(
         [(0, 1, "good words here now"), (1, 0, "spam spam spam"),
          (2, 1, "more fine words appear"), (3, 0, "buy buy buy")],
@@ -254,12 +239,3 @@ def test_facade_quality_classifier_and_incremental(farm, spark):
     assert set(scored.columns) == {"doc_id", "n_words", "quality_score"}
     kept = farm.pareto_filter(scored.withColumn("quality_score", F.lit(1.0)))
     assert kept.count() == 4  # score 1.0 always passes
-
-    hist = docs.select("doc_id", "text")
-    bloom = farm.history_filter(hist, n_bits=1 << 12, k=4)
-    new = spark.createDataFrame(
-        [(10, "spam spam spam"), (11, "genuinely new text")],
-        "doc_id long, text string",
-    )
-    out = farm.dedup_incremental(new, bloom, hist)
-    assert {r["doc_id"] for r in out.collect()} == {11}

@@ -623,6 +623,19 @@ def _fit_apply(df, name, cols, **fit_kw):
     return getattr(t, f"apply_{name}")(df, getattr(t, f"fit_{name}")(df, cols, **fit_kw))
 
 
+def _one_hot(df, cols, **kw):
+    """``one_hot_encode`` rows and categories, compared by value: the
+    indicator columns are named after the encoded column."""
+    out, cats = _transforms().one_hot_encode(df, cols, **kw)
+    return sorted(map(tuple, out.collect()), key=repr) + list(cats.values())
+
+
+def _ordinal(df, cols, **fit_kw):
+    """``apply_ordinal_encoder(df, fit_ordinal_encoder(df, cols))``."""
+    t = _transforms()
+    return t.apply_ordinal_encoder(df, t.fit_ordinal_encoder(df, cols, **fit_kw))
+
+
 @pytest.mark.parametrize(
     "run",
     [
@@ -648,6 +661,11 @@ def _fit_apply(df, name, cols, **fit_kw):
         lambda c, df: _transforms().log_transform(df, [c.v, c.o]),
         lambda c, df: _transforms().sqrt_transform(df, [c.v, c.o]),
         lambda c, df: _transforms().square_transform(df, [c.v, c.o]),
+        lambda c, df: _one_hot(df, [c.s, c.k]),
+        lambda c, df: _one_hot(df, [c.s], categories={c.s: ["s0", "s2", "s9"]}),
+        lambda c, df: _transforms().fit_ordinal_encoder(df, [c.s, c.v]),
+        lambda c, df: _ordinal(df, [c.s, c.v]),
+        lambda c, df: _ordinal(df, [c.s, c.v], max_collect=1),
     ],
     ids=[
         "fill_stats",
@@ -672,13 +690,18 @@ def _fit_apply(df, name, cols, **fit_kw):
         "log_transform",
         "sqrt_transform",
         "square_transform",
+        "one_hot_encode",
+        "one_hot_encode-categories",
+        "fit_ordinal_encoder",
+        "ordinal_encoder",
+        "ordinal_encoder-distributed",
     ],
 )
 def test_backtick_column_names(spark, run):
     """Column names holding a backtick pass through every cleaning,
-    scaler, quantile and unary-transform entry point (they used to be
-    spliced into SQL text between bare backticks, or parsed by ``F.col``)
-    and give the answer of a plain-named copy."""
+    scaler, quantile, unary-transform and encoder entry point (they used
+    to be spliced into SQL text between bare backticks, or parsed by
+    ``F.col``) and give the answer of a plain-named copy."""
     import types
 
     vals = [1, None, 3, 5, None, 8, 13, 21, None, 400]
@@ -700,3 +723,53 @@ def test_backtick_column_names(spark, run):
         return sorted(map(tuple, out.collect()), key=repr)
 
     assert result(odd) == result(plain)
+
+
+def test_group_split_no_leakage(spark):
+    from kgfarm_spark.functions.sampling import group_split
+
+    rows = [(f"c{i}", j) for i in range(200) for j in range(3)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int")
+    out = group_split(df, "conv_id")
+    # every turn of a conversation gets the SAME split
+    per_conv = (
+        out.groupBy("conv_id")
+        .agg(F.count_distinct("split").alias("n"))
+        .collect()
+    )
+    assert all(r["n"] == 1 for r in per_conv)
+    # rough proportions at 200 groups (train 0.9 -> expect the majority)
+    counts = {
+        r["split"]: r["n"]
+        for r in out.select("conv_id", "split").distinct()
+        .groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert counts.get("train", 0) > 150
+    assert set(counts) <= {"train", "val", "test"}
+    # deterministic across partitioning; redrawn under another seed
+    again = {r["conv_id"]: r["split"]
+             for r in group_split(df.repartition(7), "conv_id")
+             .select("conv_id", "split").distinct().collect()}
+    first = {r["conv_id"]: r["split"]
+             for r in out.select("conv_id", "split").distinct().collect()}
+    assert again == first
+    other = {r["conv_id"]: r["split"]
+             for r in group_split(df, "conv_id", seed="different")
+             .select("conv_id", "split").distinct().collect()}
+    assert other != first
+    with pytest.raises(ValueError):
+        group_split(df, "conv_id", {"train": 0.5, "val": 0.1})
+
+
+def test_group_split_null_group_key(spark):
+    from kgfarm_spark.functions.sampling import group_split
+
+    rows = [(None, 0), (None, 1), ("c1", 0)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int")
+    out = group_split(df, "conv_id").collect()
+    null_splits = {r["split"] for r in out if r["conv_id"] is None}
+    # all NULL-group rows land together, in a hash-chosen (not
+    # fall-through-default) split
+    assert len(null_splits) == 1
+    with pytest.raises(ValueError):
+        group_split(df, "conv_id", {})

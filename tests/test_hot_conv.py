@@ -552,6 +552,31 @@ def test_fused_odd_probe_columns(spark, guard):
         assert tuple(r[c] for c in features) == want[r["probe_id"]]
 
 
+@pytest.mark.parametrize("guard", [2, "auto"], ids=["on", "auto"])
+def test_fused_hot_guard_backtick_key(spark, guard):
+    """An engaged hot guard quotes the key: a key column named ``c`id``
+    gives the output of a plain-named copy."""
+    from kgfarm_spark.operators.backfill import _auto_hot_threshold
+
+    turns = spark.createDataFrame(
+        [("a", i, f"t {i}", ("user", "assistant")[i % 2], "s" if i == 3 else None)
+         for i in range(6)],
+        "conv_id string, turn_idx long, text string, role string, tool string",
+    ).withColumn("ts", F.timestamp_seconds(F.col("turn_idx") * 60))
+    probes = spark.createDataFrame([("a", 200)], "conv_id string, s long").select(
+        "conv_id", F.timestamp_seconds("s").alias("query_ts")
+    )
+    odd_t = turns.withColumnRenamed("conv_id", "c`id")
+    odd_p = probes.withColumnRenamed("conv_id", "c`id")
+    if guard == "auto":
+        assert _auto_hot_threshold(odd_t, "c`id", odd_p) is not None
+    kw = {"hot_conv_turns": guard, "n_hot_buckets": 3}
+    want = backfill_asof_fused(turns, probes, **kw)
+    got = backfill_asof_fused(odd_t, odd_p, key="c`id", **kw)
+    assert got.columns == ["c`id", *want.columns[1:]]
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+
+
 def _jobs_during(spark, group, fn):
     """Run ``fn()`` under a fresh job group; return (result or exception,
     ids of the Spark jobs it launched)."""

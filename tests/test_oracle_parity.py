@@ -92,19 +92,23 @@ def test_queries_have_oracles():
                              # round-0 scores oracle-checked via wordpiece_pair_scores
         "pack_nosplit",      # greedy close-on-overflow recurrence (non-associative,
                              # non-SQL) — pure-Python twin parity in test_pack_nosplit
-        "conversation_curation_e2e",  # LSH components chain (non-SQL e2e);
-                             # stages oracle-checked individually, per-stage
-                             # counts pinned in test_conversations
-        "sft_token_masks",   # trained WordPiece vocab + max-munch offsets
-                             # (non-SQL) — masked-surface == rendered
-                             # assistant lines char-for-char in
-                             # test_wordpiece::test_sft_token_masks; the
-                             # span arithmetic is oracle-checked via
-                             # chat_turn_spans
-        "sft_packed_sequences",  # same trained-vocab tokenization under-
-                             # neath; the packing arithmetic IS oracle-
-                             # checked (materialize_sequences) and the
-                             # mask transport is pytest-pinned
-                             # (test_pack_sft_sequences_roundtrip)
     }
-    assert missing <= allowed_rows_only
+    # equality, not a subset: a removed query leaves no stale allowance
+    assert missing == allowed_rows_only
+
+
+def test_flagship_oracles_inside_checked_window():
+    """The correctness snapshot of the ``__spark_entry__`` contract checks
+    only the first 50 registered oracle queries: every flagship
+    backfill/lookup path, the facade default (``'auto'``) included, sits
+    inside that window."""
+    from kgfarm_spark.entry_queries import ORACLES
+
+    window = list(ORACLES)[:50]
+    for name in (
+        "flagship_backfill_asof",
+        "flagship_probe_pushdown",
+        "flagship_hot_guard",
+        "flagship_backfill_auto",
+    ):
+        assert name in window, name

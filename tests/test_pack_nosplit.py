@@ -2,6 +2,7 @@
 (per range-bucket), plus structural invariants."""
 
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from kgfarm_spark.operators.packing import pack_sequences_nosplit
@@ -280,3 +281,43 @@ def test_pack_sft_rejects_duplicate_ids(spark):
     )
     with pytest.raises(ValueError, match="not collision-free"):
         pack_sft_sequences(df, budget=4)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    words=st.lists(
+        st.text(alphabet="abcxyz", min_size=1, max_size=4), min_size=1, max_size=40
+    ),
+    window=st.integers(min_value=1, max_value=8),
+    stride_off=st.integers(min_value=0, max_value=7),
+)
+def test_chunk_documents_coverage_property(spark, words, window, stride_off):
+    from kgfarm_spark.operators.packing import chunk_documents
+
+    stride = max(1, min(window, 1 + stride_off))
+    df = spark.createDataFrame([(1, " ".join(words))], "doc_id long, text string")
+    out = sorted(
+        chunk_documents(df, window=window, stride=stride).collect(),
+        key=lambda r: r["chunk_idx"],
+    )
+    n = len(words)
+    # chunk i is exactly words[i*stride : i*stride + window]
+    for r in out:
+        i = r["chunk_idx"]
+        want = words[i * stride : i * stride + window]
+        assert r["chunk_text"].split(" ") == want
+        assert r["n_tokens"] == len(want)
+    # coverage: every word index is inside at least one chunk
+    covered = set()
+    for r in out:
+        covered.update(range(r["chunk_idx"] * stride,
+                             r["chunk_idx"] * stride + r["n_tokens"]))
+    assert covered == set(range(n))
+    # chunk count matches the closed form
+    import math
+    want_k = 1 if n <= window else math.ceil((n - window) / stride) + 1
+    assert len(out) == want_k

@@ -3194,3 +3194,45 @@ def test_minhash_paths_identical(spark):
             for r in minhash_lsh_dedup_pairs(df, "doc_id", "text", **kw).collect()
         }
         assert got == base, kw
+
+
+def test_hashed_embedding_retrieval(spark):
+    """The text→vector bridge: near-identical texts cosine-match far
+    above unrelated ones, with no external encoder."""
+    from kgfarm_spark.operators.similarity import (
+        cosine_topk,
+        hashed_text_embedding,
+    )
+
+    rows = [
+        ("a", "the quick brown fox jumps over the lazy dog"),
+        ("b", "the quick brown fox jumps over the lazy cat"),  # near-dup of a
+        ("c", "spark shuffles partitions across the cluster nodes"),
+        ("d", ""),        # zero words -> dropped
+        ("e", None),      # null -> dropped
+    ]
+    df = spark.createDataFrame(rows, "doc_id string, text string")
+    emb = hashed_text_embedding(df, dim=64)
+    got = {r["doc_id"]: r for r in emb.collect()}
+    assert set(got) == {"a", "b", "c"}
+    # unit norm
+    for r in got.values():
+        assert abs(sum(x * x for x in r["emb"]) - 1.0) < 1e-9
+    assert got["a"]["n_words"] == 9
+    # retrieval: a's nearest non-self neighbor is b, and the a-b cosine
+    # dominates a-c
+    corpus = emb.select(F.col("doc_id").alias("id"), F.col("emb").alias("v"))
+    q = corpus.filter(F.col("id") == "a").select(
+        F.col("id").alias("qid"), F.col("v")
+    )
+    top = cosine_topk(
+        corpus, q, id_col="id", vec_col="v", query_id_col="qid", k=2,
+    ).collect()
+    ranked = [r["neighbor_id"] for r in sorted(top, key=lambda r: r["rank"])]
+    assert ranked == ["b", "c"]  # self excluded; near-dup first
+    sims = {r["neighbor_id"]: r["cosine"] for r in top}
+    assert sims["b"] > 0.7 > sims["c"]
+    # partition invariance
+    again = {r["doc_id"]: r["emb"]
+             for r in hashed_text_embedding(df.repartition(5), dim=64).collect()}
+    assert all(again[k] == got[k]["emb"] for k in got)

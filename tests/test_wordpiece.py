@@ -2,7 +2,6 @@
 max-munch, round-0 scores distributed == local."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from kgfarm_spark.operators.wordpiece import (
     _fuse,
@@ -143,49 +142,6 @@ def test_tokenize_with_offsets(spark, docs_df):
                 assert surf == tok[2:]
             else:
                 assert surf == tok
-
-
-def test_sft_token_masks(spark):
-    from kgfarm_spark.operators.conversations import sft_token_masks
-
-    rows = [
-        ("c1", 0, "user", "what is two plus two", "2024-01-01 00:00:00"),
-        ("c1", 1, "assistant", "two plus two is four", "2024-01-01 00:00:05"),
-        ("c1", 2, "user", "thanks", "2024-01-01 00:00:09"),
-        ("c1", 3, "assistant", "welcome", "2024-01-01 00:00:12"),
-        ("c2", 0, "user", "only user turns here", "2024-01-01 01:00:00"),
-    ]
-    turns = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, ts string"
-    )
-    # train on the RENDERED strings so the '<|role|>'-fused words
-    # tokenize into real pieces (not [UNK]) and surfaces reconstruct
-    from kgfarm_spark.operators.conversations import render_chat
-
-    corpus = render_chat(turns).select(F.col("chat_text").alias("text"))
-    _, vocab = wordpiece_train(corpus, n_merges=15)
-    out = {r["conv_id"]: r for r in sft_token_masks(turns, vocab).collect()}
-
-    c1 = out["c1"]
-    assert len(c1["loss_mask"]) == c1["n_tokens"]
-    assert c1["n_train_tokens"] == sum(c1["loss_mask"])
-    assert 0 < c1["n_train_tokens"] < c1["n_tokens"]
-    # reconstruct: masked tokens must spell exactly the assistant lines
-    from kgfarm_spark.operators.conversations import render_chat
-
-    chat = render_chat(turns).filter(F.col("conv_id") == "c1").first()["chat_text"]
-    lines = chat.split("\n")
-    assistant_chars = "".join(
-        l.replace(" ", "") for l in lines if l.startswith("<|assistant|>")
-    )
-    masked_surface = "".join(
-        t[2:] if t.startswith("##") else t
-        for t, m in zip(c1["tokens"], c1["loss_mask"]) if m
-    )
-    assert masked_surface == assistant_chars
-    # a conversation with no train_role turns masks nothing
-    assert out["c2"]["n_train_tokens"] == 0
-    assert not any(out["c2"]["loss_mask"])
 
 
 def test_word_initial_raw_prefix_never_matches_continuation():
