@@ -93,11 +93,11 @@ class FeatureFarm:
         )
 
     # ---- transcript feature engineering (north_rule core) ---------------
-    # ``max_turns_per_task`` / ``hot_conv_turns`` engage the exact
-    # straggler-free decompositions for pathologically long conversations
-    # (operators/windows.py module docstring; crossover rule in BENCH.md
-    # §2c: worth it when one conversation's share of rows exceeds
-    # ~1/n_cores).
+    # ``max_turns_per_task`` engages the exact order-bucket cut of
+    # operators/windows.py (module docstring) and ``hot_conv_turns`` the
+    # fused backfill's time-bucket cut, both for pathologically long
+    # conversations (crossover rule in BENCH.md §2c: worth it when one
+    # conversation's share of rows exceeds ~1/n_cores).
     def sessionize(
         self,
         transcripts: DataFrame,

@@ -522,8 +522,8 @@ def q_salted_agg(spark: SparkSession, sf: str) -> DataFrame:
 # Hot-conversation straggler-free window variants (round 3) — each must
 # EQUAL its plain-window twin, so each reuses the twin's oracle SQL and
 # is driver-hash-checked with aggressively small bucket sizes (every
-# conversation spans multiple buckets / every rolling frame leans on
-# ghost rows at sf0.01 — the adversarial regime for the carry algebra).
+# conversation spans multiple buckets and most frames reach across a
+# bucket edge at sf0.01 — the adversarial regime for the cut).
 # ---------------------------------------------------------------------------
 
 
@@ -614,7 +614,7 @@ def q_rolling_hot(spark: SparkSession, sf: str) -> DataFrame:
 @register("lag_lead_hot_safe", None)
 def q_lag_lead_hot(spark: SparkSession, sf: str) -> DataFrame:
     out = lag_lead_features(
-        transcripts(spark, sf), cols={"role": 1, "ts": 1}, hot_safe=True
+        transcripts(spark, sf), cols={"role": 1, "ts": 1}, max_turns_per_task=5
     )
     return out.select(
         "conv_id", "turn_idx", "role", "role_lag_1", "role_lead_1", "ts_lag_1", "ts_lead_1"
@@ -623,7 +623,7 @@ def q_lag_lead_hot(spark: SparkSession, sf: str) -> DataFrame:
 
 @register("role_transitions_hot_safe", None)
 def q_role_transitions_hot(spark: SparkSession, sf: str) -> DataFrame:
-    out = role_transitions(transcripts(spark, sf), hot_safe=True)
+    out = role_transitions(transcripts(spark, sf), max_turns_per_task=5)
     return out.select("conv_id", "turn_idx", "role_transition")
 
 
@@ -688,7 +688,7 @@ def q_hybrid_skew_join(spark: SparkSession, sf: str) -> DataFrame:
 # 3 late-r05 corpus-dedup additions (duplicate_ngram_spans,
 # dedup_lines_corpus, quality_gate) displace 3 r04-driver-green hot-safe
 # variants whose exact-equality-vs-plain-twin property is ALSO
-# pytest-enforced (test_hot_safe parity tests), so their deferral loses
+# pytest-enforced (test_hot_conv parity tests), so their deferral loses
 # the least independent signal.
 # ---------------------------------------------------------------------------
 _DEFERRED_PAST_DRIVER_CAP = [

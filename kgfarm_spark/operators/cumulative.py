@@ -17,9 +17,9 @@ non-NULL contribution; counts are never NULL.
 From the one table this module generates, as SQL text, the plain window
 (``window``), the partials (``parts``), the exclusive carry (``carry``)
 and the combine (``combine``). The bucket column is ``__ob``; callers
-differ only in how they cut it (``floor(turn_idx / B)`` in
-``windows.backfill_features_bucketed``, a fixed-width event-time grid in
-``backfill._fused_state_guarded``).
+differ only in how they cut it (``struct(floor(turn_idx / B))`` in
+``windows``, for ``backfill_features`` and the ``sessionize`` count, a
+fixed-width event-time grid in ``backfill._fused_state_guarded``).
 """
 
 from __future__ import annotations

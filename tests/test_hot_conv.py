@@ -13,10 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgfarm_spark.operators.backfill import backfill_asof_fused
-from kgfarm_spark.operators.windows import (
-    backfill_features,
-    backfill_features_bucketed,
-)
+from kgfarm_spark.operators.windows import backfill_features
 from kgfarm_spark.sources.datagen import gen_probes, gen_transcripts
 
 
@@ -62,7 +59,7 @@ def test_bucketed_backfill_null_text_and_tool_carry(spark):
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
     plain = backfill_features(df)
-    bucketed = backfill_features_bucketed(df, bucket_turns=3)
+    bucketed = backfill_features(df, max_turns_per_task=3)
     assert _frames_equal(plain, bucketed)
     # spot-check: the all-null prefix really is NULL, not 0
     r = (
@@ -195,11 +192,10 @@ def test_bucketed_max_task_rows_bounded(spark):
 
 
 def test_all_window_ops_hot_safe_variants_equal_plain(spark):
-    """Round-3 completion of the hot-conversation story: EVERY per-conv
-    window op has a straggler-free variant pinned equal to the plain
-    window — lag/lead and role transitions via shifted equi-joins on the
-    dense (conv_id, turn_idx) axis, sessionize via join-lag + bucket+carry
-    cumsum, rolling aggregates via ghost-row overlap buckets."""
+    """EVERY per-conv window op has a straggler-free variant pinned
+    equal to the plain window on a skewed 30k-turn fixture: the one
+    order-bucket cut (bounded reach for lag/lead, role transitions and
+    rolling, bounded reach then bucket+carry for sessionize)."""
     from kgfarm_spark.operators.windows import (
         lag_lead_features,
         role_transitions,
@@ -210,12 +206,12 @@ def test_all_window_ops_hot_safe_variants_equal_plain(spark):
     t = gen_transcripts(spark, n_turns=30_000, n_convs=30, seed=13, skew=3.0)
 
     a = lag_lead_features(t, cols={"role": 2, "ts": 1})
-    b = lag_lead_features(t, cols={"role": 2, "ts": 1}, hot_safe=True)
+    b = lag_lead_features(t, cols={"role": 2, "ts": 1}, max_turns_per_task=1_000)
     assert a.columns == b.columns
     assert _frames_equal(a, b)
 
     a = role_transitions(t)
-    b = role_transitions(t, hot_safe=True)
+    b = role_transitions(t, max_turns_per_task=1_000)
     assert a.columns == b.columns
     assert _frames_equal(a, b)
 
@@ -254,46 +250,63 @@ def _rolling(t, **kw):
     return rolling_aggregates(t, n_turns=1, **kw)
 
 
-@pytest.mark.parametrize(
-    "op, hot",
-    [
-        (backfill_features, {"max_turns_per_task": 2}),
-        (_sessionize, {"max_turns_per_task": 2}),
-        (_lag_lead, {"hot_safe": True}),
-        (_role_transitions, {"hot_safe": True}),
-        (_rolling, {"max_turns_per_task": 2}),
-    ],
-    ids=["backfill", "sessionize", "lag_lead", "role_transitions", "rolling"],
-)
-def test_hot_variants_keep_null_key_turns(spark, op, hot):
-    """NULL conversation keys form one group in the plain window (and in
-    the oracle SQL); every hot variant must keep those turns and give
-    them the same features, e.g. the previous NULL-key turn as the lag."""
+_OPS = [backfill_features, _sessionize, _lag_lead, _role_transitions, _rolling]
+_OP_IDS = ["backfill", "sessionize", "lag_lead", "role_transitions", "rolling"]
+
+
+def _gappy_turns(spark):
+    """Two conversations, one with a NULL key, whose ``turn_idx`` has gaps
+    and one NULL: 7 turns each."""
     base = dt.datetime(2024, 1, 1)
     rows = [
         (
             conv,
             i,
-            "user" if i % 2 == 0 else "assistant",
-            f"text {i}",
-            "search" if i == 3 else None,
-            base + dt.timedelta(minutes=10 * i + (90 if i > 2 else 0)),
+            "user" if k % 2 == 0 else "assistant",
+            f"text {k}",
+            "search" if k == 3 else None,
+            base + dt.timedelta(minutes=10 * k + (90 if k > 2 else 0)),
         )
         for conv in (None, "c1")
-        for i in range(5)
+        for k, i in enumerate([None, 0, 1, 3, 5, 6, 9])
     ]
-    t = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    plain, guarded = op(t), op(t, **hot)
-    assert plain.columns == guarded.columns
-    assert guarded.filter(F.col("conv_id").isNull()).count() == 5
-    assert _frames_equal(plain, guarded)
+
+
+@pytest.mark.parametrize("op", _OPS, ids=_OP_IDS)
+def test_hot_variants_keep_null_key_turns(spark, op):
+    """NULL conversation keys form one group in the plain window (and in
+    the oracle SQL), and a NULL ``turn_idx`` sorts first in it; the cut
+    must keep those turns and give them the same features (e.g. the
+    previous NULL-key turn as the lag) across ``turn_idx`` gaps, with
+    buckets of one turn, of two, and larger than any conversation."""
+    t = _gappy_turns(spark)
+    plain = op(t)
+    for bucket in (1, 2, 100):
+        guarded = op(t, max_turns_per_task=bucket)
+        assert plain.columns == guarded.columns
+        assert guarded.filter(F.col("conv_id").isNull()).count() == 7
+        assert guarded.filter(F.col("turn_idx").isNull()).count() == 2
+        assert _frames_equal(plain, guarded), bucket
+
+
+@pytest.mark.parametrize("op", _OPS, ids=_OP_IDS)
+def test_duplicate_turn_idx_fails_loudly(spark, op):
+    """A repeated (key, turn_idx) leaves the turn order arbitrary: the
+    plain window and the cut both fail the action that reads the
+    features, naming the columns."""
+    t = _gappy_turns(spark)
+    dup = t.unionByName(t.filter((F.col("conv_id") == "c1") & (F.col("turn_idx") == 5)))
+    for bucket in (None, 2):
+        with pytest.raises(Exception, match=r"duplicate \(conv_id, turn_idx\)"):
+            op(dup, max_turns_per_task=bucket).collect()
 
 
 def test_rolling_ghost_rows_cross_bucket_boundary(spark):
     """Adversarial bucket size: B barely above the frame length, so almost
-    every frame crosses a bucket boundary and leans on ghost rows."""
+    every frame crosses a bucket boundary and takes its edge value."""
     from kgfarm_spark.operators.windows import rolling_aggregates
 
     t = gen_transcripts(spark, n_turns=2_000, n_convs=3, seed=17, skew=2.0)
@@ -414,17 +427,16 @@ def test_auto_hot_threshold_stays_off_on_moderate_skew(spark):
     assert _auto_hot_threshold(mod_t, "conv_id") is None
 
 
-def test_rolling_guard_rejects_bucket_not_exceeding_frame(spark):
-    """ADVICE r03 (medium): ghost rows replicate only from the immediately
-    preceding bucket, so max_turns_per_task <= n_turns would silently
-    truncate frames spanning two boundaries — must be rejected."""
+def test_rolling_cut_bucket_not_exceeding_frame(spark):
+    """A bucket no larger than the rolling frame: a frame spans up to
+    three buckets, and every row of it is an edge row of its bucket, so
+    the cut still equals the plain window."""
     from kgfarm_spark.operators.windows import rolling_aggregates
 
     t = gen_transcripts(spark, n_turns=100, n_convs=2, seed=1)
-    with pytest.raises(ValueError, match="must exceed n_turns"):
-        rolling_aggregates(t, n_turns=5, max_turns_per_task=5)
-    with pytest.raises(ValueError, match="must exceed n_turns"):
-        rolling_aggregates(t, n_turns=5, max_turns_per_task=3)
+    plain = rolling_aggregates(t, n_turns=5)
+    for bucket in (5, 3):
+        assert _frames_equal(plain, rolling_aggregates(t, n_turns=5, max_turns_per_task=bucket))
 
 
 def test_fused_hot_guard_exact_ts_ties_at_bucket_boundaries(spark):

@@ -30,6 +30,10 @@ HEADLINE = [
     "backfill_features_hot",
     "sessionize",
     "rolling_aggregates",
+    "lag_lead_hot_safe",
+    "role_transitions_hot_safe",
+    "sessionize_hot_safe",
+    "rolling_hot_safe",
     "dedup_minhash_lsh",
     "cosine_topk",
     "text_quality",
